@@ -866,7 +866,7 @@ object Ingest {
     // The partition-shifted / high-range schemes produce values far
     // beyond 2³¹ — fine for bigint, but an int/smallint auto-inc
     // column would overflow to NULL in the cast. Narrow columns take
-    // the dense counting scheme instead (chunkedRowId — one extra
+    // the dense counting scheme instead (RowTransform.denseIds — one
     // materialization pass, bounded by the narrow type's own
     // row-count ceiling).
     def wide(c: graft.schema.ColumnSpec): Boolean = wideAuto(c)
@@ -912,25 +912,21 @@ object Ingest {
             if (nNulls == 0L) union
             else {
               val base = math.max(effPriorMaxId, explicitMax)
-              // fills are base + ROW POSITION (chunkedRowId numbers
-              // every row; the coalesce picks it up only where the
-              // carried value is NULL), so the highest fill is the
-              // LAST NULL ROW's id — guard on exactly that, BEFORE the
-              // non-ANSI cast would null an overflow out silently. The
-              // agg reads the checkpointed relation chunkedRowId
-              // already materialized, so it is one cheap extra pass
-              // paid only on the fill path.
-              val withFill = RowTransform.chunkedRowId(union, FillCol, base)
-              val maxFill = withFill.agg(
-                max(org.apache.spark.sql.functions.when(
-                  col(existing).isNull, col(FillCol)))).head.getLong(0)
+              // fills are base + ROW POSITION (every row is numbered;
+              // the coalesce picks it up only where the carried value
+              // is NULL), so the highest fill is the LAST NULL ROW's id
+              // — guard on exactly that, BEFORE the non-ANSI cast would
+              // null an overflow out silently. The row-ID checkpoint's
+              // one counting job reports that position
+              val ids = RowTransform.denseIds(union, Some(existing))
+              val maxFill = base + ids.lastNull
               val ceil = narrowTypeMax(c)
               if (maxFill > ceil) throw new IllegalStateException(
                 s"auto-increment fill overflows ${c.mysqlType}" +
                   s"${if (c.unsigned) " unsigned" else ""} column " +
                   s"${d.db}.${d.table}.${c.name}: highest fill id $maxFill " +
                   s"exceeds the type max $ceil")
-              withFill.withColumn(existing,
+              ids.withIds(FillCol, base).withColumn(existing,
                   coalesce(col(existing), col(FillCol).cast(union.schema(existing).dataType)))
                 .drop(FillCol)
             }
@@ -947,29 +943,17 @@ object Ingest {
     // whose dump simply omitted it) allocate densely above
     // max(explicit max, prior run's max) — same discipline as the
     // narrow auto-inc fill, independent of it (a table can carry
-    // both, reference `tests/tidb_rowid` non_pk_auto_inc)
-    // when NO shard carries an explicit source column (the usual
-    // case — the column was back-filled NULL above), the stats agg is
-    // provably (max=NULL, nulls=all): skip the extra full re-parse of
-    // the batch and fill directly
-    val anyExplicitRowid = rowidNeeded && shards0.exists(
-      _.columns.exists(_.equalsIgnoreCase(TidbRowidCol)))
+    // both, reference `tests/tidb_rowid` non_pk_auto_inc). The explicit
+    // max and the NULL count come from the row-ID checkpoint's one
+    // counting job, so the source is parsed once; with no NULL the
+    // sink still reads the stored blocks, not the dump
     val rowidFilled = if (!rowidNeeded) merged else {
       val rc = TidbRowidCol
-      val (explicitMax, nNulls) =
-        if (!anyExplicitRowid) (0L, 1L)
-        else {
-          val stats = merged.agg(
-            max(col(rc).cast("long")),
-            org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.when(col(rc).isNull, 1))).head
-          (if (stats.isNullAt(0)) 0L else stats.getLong(0), stats.getLong(1))
-        }
-      if (nNulls == 0L) merged
+      val ids = RowTransform.denseIds(merged, Some(rc))
+      if (ids.nulls == 0L) ids.stable
       else {
-        val base = math.max(effPriorRowid, explicitMax)
         val RFill = "_graft_fill_tidb_rowid"
-        RowTransform.chunkedRowId(merged, RFill, base)
+        ids.withIds(RFill, math.max(effPriorRowid, ids.explicitMax))
           .withColumn(rc, coalesce(col(rc), col(RFill).cast("string")))
           .drop(RFill)
       }

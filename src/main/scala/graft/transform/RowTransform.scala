@@ -1,8 +1,10 @@
 package graft.transform
 
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.schema.{ColumnSpec, TableSchema}
@@ -526,35 +528,89 @@ object RowTransform {
     df.withColumn(idCol, row_number().over(Window.orderBy(orderCols: _*)).cast(LongType) + base)
 
   /** Two-level row-ID: partitions keep their row order; each partition
-    * gets a base = cumulative count of prior partitions (the driver-side
-    * scan over per-partition counts is O(#partitions), like the
-    * reference's cumulative chunk offsets). IDs are dense, unique, and
+    * gets a base = `base` + the cumulative count of prior partitions
+    * (the driver-side scan over per-partition counts is O(#partitions),
+    * like the reference's cumulative chunk offsets), and row k of a
+    * partition gets its base + k + 1. IDs are dense, unique, and
     * deterministic for a fixed partitioning.
     *
-    * The input is eagerly `localCheckpoint`ed first: the count pass and
-    * the assignment pass must see identical partition contents, and a
+    * The input is eagerly `localCheckpoint`ed, then ONE counting job
+    * reads the stored blocks ([[denseIds]]); the IDs are a
+    * whole-stage-codegen'd expression over the checkpointed relation
+    * (see [[DenseIds.withIds]]), so later reads (a sink's sampling and
+    * write jobs) number rows without a per-row object round trip.
+    * Counting and numbering must see identical partition contents: a
     * nondeterministic upstream (e.g. a round-robin repartition) could
     * otherwise recompute differently between them, producing duplicate
-    * or skipped IDs. Checkpointing cuts the lineage, so both passes
-    * read the same stored blocks — a lost block fails the job instead
+    * or skipped IDs. Checkpointing cuts the lineage, so every pass
+    * reads the same stored blocks — a lost block fails the job instead
     * of silently diverging (the failure mode the reference's persisted
     * PrevRowIDMax checkpoint ranges also choose). Blocks are freed by
     * the ContextCleaner once the DataFrame is garbage-collected; the
     * one materialization pass mirrors the reference's write-to-local-
     * engine-then-assign shape.
     */
-  def chunkedRowId(df: DataFrame, idCol: String = "_graft_rowid", base: Long = 0L): DataFrame = {
-    val spark = df.sparkSession
-    val stable = df.localCheckpoint(true)
-    val rdd = stable.rdd
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-      .collect().sortBy(_._1).map(_._2)
-    val bases = counts.scanLeft(base)(_ + _)
-    val withId = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var id = bases(i)
-      it.map { r => id += 1; org.apache.spark.sql.Row.fromSeq(r.toSeq :+ id) }
+  def chunkedRowId(df: DataFrame, idCol: String = "_graft_rowid", base: Long = 0L): DataFrame =
+    denseIds(df).withIds(idCol, base)
+
+  /** [[denseIds]]' facts: the checkpointed relation, its per-partition
+    * row counts and, over the optional stat column, the max of its
+    * values cast to bigint (0 when there is none), its NULL count and
+    * the global 1-based position of its last NULL row (0 when none).
+    * With `base` = b, that last NULL row's dense ID is b + `lastNull`.
+    */
+  final case class DenseIds(stable: DataFrame, counts: Seq[Long],
+      explicitMax: Long, nulls: Long, lastNull: Long) {
+    /** `stable` plus a non-null bigint `idCol`: `bases(p) +
+      * (monotonically_increasing_id() & (2³³−1)) + 1`, where p is the
+      * partition id, the low 33 bits are the in-partition ordinal and
+      * `bases(p)` = `base` + the rows of partitions before p.
+      */
+    def withIds(idCol: String, base: Long): DataFrame = {
+      val bases = typedLit(counts.scanLeft(base)(_ + _).toArray)
+      val partBase = shims.column(KnownNotNull(shims.expression(bases(spark_partition_id()))))
+      stable.withColumn(idCol,
+        partBase + monotonically_increasing_id().bitwiseAND(InPartitionMask) + 1L)
     }
-    spark.createDataFrame(withId, df.schema.add(idCol, LongType, nullable = false))
+  }
+
+  /** `monotonically_increasing_id()` keeps the in-partition ordinal in
+    * its low 33 bits.
+    */
+  private val InPartitionMask = (1L << 33) - 1
+
+  /** Checkpoints `df` and runs one job over the stored blocks: per
+    * partition, the row count and, when `stat` names a column, the
+    * explicit max of `stat` cast to bigint, its NULL count and the
+    * in-partition position of its last NULL. A partition of ≥ 2³³ rows
+    * fails loudly: its ordinals would spill into the partition bits.
+    */
+  def denseIds(df: DataFrame, stat: Option[String] = None): DenseIds = {
+    val stable = df.localCheckpoint(true)
+    val probe = stat.fold(stable.select())(c => stable.select(col(c).isNull, col(c).cast(LongType)))
+    val hasStat = stat.isDefined
+    // (partition, rows, max or Long.MinValue, nulls, last NULL position)
+    val parts = probe.queryExecution.toRdd.mapPartitionsWithIndex { case (i, it) =>
+      var rows, nulls, last = 0L
+      var mx = Long.MinValue
+      it.foreach { r =>
+        rows += 1
+        if (hasStat) {
+          if (r.getBoolean(0)) { nulls += 1; last = rows }
+          else if (!r.isNullAt(1)) mx = math.max(mx, r.getLong(1))
+        }
+      }
+      Iterator.single((i, rows, mx, nulls, last))
+    }.collect().sortBy(_._1)
+    val counts = parts.map(_._2).toSeq
+    counts.zipWithIndex.find(_._1 > InPartitionMask).foreach { case (n, i) =>
+      throw new IllegalStateException(
+        s"partition $i holds $n rows; dense row IDs allow at most $InPartitionMask per partition")
+    }
+    val lastNull = parts.zip(counts.scanLeft(0L)(_ + _)).reverseIterator
+      .collectFirst { case (p, before) if p._5 > 0 => before + p._5 }.getOrElse(0L)
+    val mx = parts.map(_._3).foldLeft(Long.MinValue)(math.max)
+    DenseIds(stable, counts, if (mx == Long.MinValue) 0L else mx, parts.map(_._4).sum, lastNull)
   }
 
   /** T4 for the import path: synthesized auto-increment values as a

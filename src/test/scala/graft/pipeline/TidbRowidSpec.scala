@@ -81,6 +81,65 @@ class TidbRowidSpec extends SparkSpec {
     assert(Ingest.rowidRequired(compositePk))
   }
 
+  test("explicit dump rowids keep; fills are dense above their max and re-run stable") {
+    // three dump files, the middle one without rows: column lists that
+    // carry _tidb_rowid, lists that omit it, and positional rows
+    val srcDir = Files.createTempDirectory("graft_rowid_explicit")
+    Files.writeString(srcDir.resolve("d.t-schema.sql"),
+      "CREATE TABLE t (pk varchar(8) NOT NULL, v int, PRIMARY KEY (pk));")
+    Files.writeString(srcDir.resolve("d.t.0001.sql"),
+      "INSERT INTO `t` (`pk`,`v`,`_tidb_rowid`) VALUES ('a1',1,50),('a2',2,7);\n" +
+        "INSERT INTO `t` (`pk`,`v`) VALUES ('a3',3),('a4',4);\n" +
+        "INSERT INTO `t` VALUES ('a5',5),('a6',6);\n")
+    Files.writeString(srcDir.resolve("d.t.0002.sql"), "/*!40101 SET NAMES binary*/;\n")
+    Files.writeString(srcDir.resolve("d.t.0003.sql"),
+      "INSERT INTO `t` VALUES ('c1',10);\n" +
+        "INSERT INTO `t` (`pk`,`_tidb_rowid`,`v`) VALUES ('c2',100,11),('c3',NULL,12);\n" +
+        "INSERT INTO `t` (`v`,`pk`) VALUES (13,'c4');\n")
+    def pairs(): Map[String, Long] = {
+      val tgt = Files.createTempDirectory("graft_rowid_explicit_out").toString
+      val reports = Ingest.run(spark, Ingest.Config(srcDir.toString, tgt))
+      assert(reports.length === 1 && reports.head.checksumOk, reports)
+      assert(reports.head.nRows === 10L)
+      spark.read.parquet(s"$tgt/d.t").collect()
+        .map(r => r.getAs[String]("pk") -> r.getAs[Number]("_tidb_rowid").longValue).toMap
+    }
+    val first = pairs()
+    val explicit = Map("a1" -> 50L, "a2" -> 7L, "c2" -> 100L)
+    assert(explicit.forall { case (pk, id) => first(pk) == id }, first)
+    val fills = (first -- explicit.keys).values.toSeq
+    assert(fills.length === 7 && fills.distinct.length === 7, first)
+    assert(fills.forall(id => id > 100L && id <= 110L), first)
+    assert(pairs() === first)
+  }
+
+  test("a dump into a table without an integer handle is scanned once") {
+    // the file-system form of the benchmark's src_read_amp: the row-ID
+    // fill reads the checkpointed blocks, never the dump a second time
+    val srcDir = Files.createTempDirectory("graft_rowid_scan")
+    Files.writeString(srcDir.resolve("d.s-schema.sql"),
+      "CREATE TABLE s (pk varchar(16) NOT NULL, v int, note varchar(64), PRIMARY KEY (pk));")
+    val pad = "x" * 60
+    val dump = srcDir.resolve("d.s.sql")
+    Files.writeString(dump, (0 until 130).map { s =>
+      (0 until 120).map { i => val k = s * 120 + i; s"('k$k',$k,'$pad')" }
+        .mkString("INSERT INTO `s` VALUES ", ",", ";\n")
+    }.mkString)
+    val size = Files.size(dump)
+    assert(size >= (1L << 20), s"dump is $size bytes")
+    def fileBytesRead(): Long = {
+      import scala.jdk.CollectionConverters._
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    }
+    val tgt = Files.createTempDirectory("graft_rowid_scan_out").toString
+    val before = fileBytesRead()
+    val reports = Ingest.run(spark, Ingest.Config(srcDir.toString, tgt))
+    val read = fileBytesRead() - before
+    assert(reports.head.checksumOk && reports.head.nRows === 15600L)
+    assert(read < size * 3 / 2, s"read $read bytes for a $size-byte dump")
+  }
+
   test("chunk-crash resume keeps rowids collision-free (failpoint)") {
     // a chunked no-handle table crashes after the first chunk batch,
     // then resumes: fills from the second run must start above the

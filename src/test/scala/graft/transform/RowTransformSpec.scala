@@ -62,6 +62,53 @@ class RowTransformSpec extends SparkSpec {
     val second = withId.select("k", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(first === second)
     assert(first.values.toSeq.sorted === (1L to 500L))
+    // the ids equal a Row-based reference numbering of the same stored
+    // partitions: per-partition counts, a cumulative base, then row k
+    // of partition p numbered base(p) + k + 1
+    def reference(numbered: org.apache.spark.sql.DataFrame, base: Long): Map[Long, Long] = {
+      val parts = numbered.rdd.mapPartitionsWithIndex { case (p, it) =>
+        Iterator.single(p -> it.map(_.getLong(0)).toVector)
+      }.collect().sortBy(_._1).map(_._2)
+      val bases = parts.map(_.size.toLong).scanLeft(base)(_ + _)
+      parts.zip(bases).flatMap { case (ks, b) =>
+        ks.zipWithIndex.map { case (k, i) => k -> (b + i + 1) }
+      }.toMap
+    }
+    val ref = reference(withId, 0L)
+    assert(first === ref && reference(withId, 0L) === ref)
+    val above = RowTransform.chunkedRowId(df, "rid", 77L)
+    val ids77 = above.select("k", "rid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ids77 === reference(above, 77L))
+    assert(ids77.values.toSeq.sorted === (78L to 577L))
+  }
+
+  test("chunkedRowId starts above a non-zero base and skips empty partitions") {
+    import spark.implicits._
+    // six range partitions, the middle four filtered empty
+    val df = spark.range(0, 60, 1, 6).toDF("k").where($"k" < 10 || $"k" >= 50)
+    val withId = RowTransform.chunkedRowId(df, "rid", base = 1000L)
+    assert(withId.rdd.getNumPartitions === 6)
+    assert(withId.schema("rid").dataType === org.apache.spark.sql.types.LongType)
+    assert(!withId.schema("rid").nullable)
+    val rows = withId.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    assert(rows.map(_._2).toSeq === (1001L to 1020L))
+  }
+
+  test("denseIds reports explicit max, NULL count and the last NULL's position") {
+    import spark.implicits._
+    // partitions [5, NULL, 3] [] [NULL, 9, 4]
+    val src = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Seq("5", null, "3"), Nil, Seq(null, "9", "4")), 3)
+        .flatMap(_.map(org.apache.spark.sql.Row(_))),
+      org.apache.spark.sql.types.StructType.fromDDL("s string"))
+    val ids = RowTransform.denseIds(src, Some("s"))
+    assert(ids.counts === Seq(3L, 0L, 3L))
+    assert(ids.explicitMax === 9L && ids.nulls === 2L && ids.lastNull === 4L)
+    // the last NULL row is numbered base + lastNull
+    val numbered = ids.withIds("rid", 9L).collect()
+    assert(numbered.filter(_.isNullAt(0)).map(_.getLong(1)).max === 9L + ids.lastNull)
+    val none = RowTransform.denseIds(src.where($"s".isNotNull), Some("s"))
+    assert(none.nulls === 0L && none.lastNull === 0L && none.explicitMax === 9L)
   }
 
   test("autoRandom packs shard bits above the row id") {
