@@ -28,21 +28,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val yardBefore = yardstick()
-    val spark = GraftSession.benchSession(cpus)
-    // Warm-up: table scans plus fixture dirs pre-build, so pipeline
-    // queries measure the import, not the scaffolding that writes
-    // their input.
-    GraftSession.warmTables(spark, sfDir)
-    try operators.PipelineQueries.warmFixtures(spark, sfDir)
-    catch { case _: Throwable => }
-    try operators.SimilarityQueries.warmLayouts(spark, sfDir)
-    catch { case _: Throwable => }
-    try operators.DedupQueries.warmLayouts(spark, sfDir)
-    catch { case _: Throwable => }
-    try operators.TextQueries.warmLayouts(spark, sfDir)
-    catch { case _: Throwable => }
+    val spark = GraftSession.session()
+    GraftSession.warmAll(spark, sfDir)
     // fixed name order: Map iteration order reshuffles whenever a query
     // is added, which would move warm-up/cache effects between queries
     // and break round-over-round comparability

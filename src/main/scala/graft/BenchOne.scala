@@ -11,9 +11,8 @@ object BenchOne {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.benchSession(cpus)
-    GraftSession.warmTables(spark, sfDir)
+    val spark = GraftSession.session()
+    GraftSession.warmAll(spark, sfDir)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()

@@ -4,130 +4,70 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session + table helpers shared by SparkEntry / Verify / Bench.
   *
-  * Tables are the driver-generated TPC-H-ish corpus described in
-  * /root/repo/TESTDATA.md (one parquet file per table under the sf dir).
+  * Tables are the TPC-H-ish corpus described in TESTDATA.md (one
+  * parquet file per table under the sf dir).
   */
 object GraftSession {
 
-  /** Build a local session tuned for the test harness: 32 shuffle
-    * partitions (matches local[32]), AQE on so range-partitioned
-    * writes coalesce like they would on a real cluster.
+  /** Cores a session runs on: `SPARK_GRAFT_CPUS` when set, else every
+    * processor the JVM may use (the reference's region-concurrency
+    * default is NumCPU).
     */
-  def build(master: String = "local[*]"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName("graft")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // see [[events]]
-      // the two operational partition knobs, same names and defaults
-      // as [[benchSession]] (documented in SCALING.md §knobs): scan
-      // split ceiling and AQE coalesce target. Defaults are Spark's
-      // own (128 MB / 64 MB) — right for the 100 TB regime where
-      // splits ≫ cores; the env override exists for the opposite
-      // regime (a tiny-on-disk corpus packs into one split and
-      // serializes CPU-heavy narrow chains — see [[fanOut]]'s note).
-      // Build-time confs so child sessions (knnSession's newSession)
-      // inherit them; runtime spark.conf.set does NOT reach children.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "67108864"))
-      // join-strategy knobs at SPARK DEFAULTS (same rationale as
-      // [[benchSession]], documented there; env-overridable for
-      // cluster-scale A/Bs)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", "0"))
-      .config("spark.sql.execution.sortBeforeRepartition",
-        sys.env.getOrElse("SPARK_GRAFT_SORT_BEFORE_REPARTITION", "false"))
-      // NB the ObjectHashAggregate fallback threshold is deliberately
-      // NOT raised here: its 128-entry default is the OOM bound for
-      // UNBOUNDED object buffers (collect_set shingle sets, position
-      // lists). Operators whose buffers are provably bounded scope the
-      // raise to a child session (SimilarityQueries.knnSession).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** The benchmark-harness session — shared by Bench and BenchOne so a
-    * config change cannot make their timings non-comparable.
+  /** THE session factory: the CLI, the server, Verify, Bench, the
+    * tools and the test suite all run this one config, so the oracle
+    * checks exactly what gets benched. Anything not set here is
+    * Spark's default; override it per run with a `-Dspark.sql.…` JVM
+    * property.
+    *  - one shuffle partition per core;
+    *  - sortBeforeRepartition off: every KEYLESS repartition here
+    *    roots on a deterministic file scan (fanOut, simhashCompact's
+    *    re-pack, the knn probe spread) or falls back to a full-row
+    *    hash (`Export.table`), so the SPARK-23207 retry hazard the
+    *    per-partition sort guards against cannot occur and the sort
+    *    is pure cost;
+    *  - nanosAsLong: see [[events]].
+    * The ObjectHashAggregate fallback threshold is deliberately left at
+    * its 128-entry default, the OOM bound for unbounded object buffers;
+    * operators with provably bounded buffers raise it in a child
+    * session (SimilarityQueries.knnSession).
     */
-  def benchSession(cpus: String): SparkSession = {
+  def session(cpus: Int = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .appName("graft")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // probe knob (default = Spark's 128 MB, so Bench is untouched):
-      // a synthetic low-dim corpus is a few MB on disk, which packs
-      // into ONE scan partition and serializes the ring join's
-      // post-join explosion onto a single thread — build-time conf so
-      // child sessions (knnSession's newSession) inherit it
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      // same probe rationale for the reduce side: AQE coalesces the
-      // top-k aggregation to ~3 tasks when map output is small even
-      // though each group's object buffer is CPU-heavy (default =
-      // Spark's 64 MB, Bench untouched)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "67108864"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // r18 negative result, value = Spark's DEFAULT (true): coalescing
-      // to the advisory target size (false) was measured on a 12-query
-      // basket and REJECTED — q_profile 1.40×, q_window_funcs 1.36×,
-      // q_source_overlap 1.29× WORSE (CPU-dense-per-byte stages lose
-      // their parallelism at sf0.1). The config line exists only as an
-      // env-overridable A/B knob so the next round need not re-try it
-      // blind; explicit repartition() calls (the fanOut path) are never
-      // AQE-coalesced either way.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      // r19: the r18 SHJ knobs (preferSortMergeJoin=false + AQE
-      // localMapThreshold=64m) are REVERTED to Spark defaults. The r18
-      // verdict demanded plan evidence of an actual SMJ→SHJ flip;
-      // r19's genuinely-final plan dumps (plans/r19/shj/, 9 join-heavy
-      // queries, both knob arms) contain ZERO ShuffledHashJoin — every
-      // equi-join here ends up broadcast once AQE sees runtime sizes,
-      // so the knob provably changed nothing and was config noise. The
-      // env overrides remain for a future cluster-scale A/B, where
-      // build sides can exceed the broadcast cap and the flip can
-      // actually occur (guide §3.1).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", "0"))
-      // r18 (guide §2.5 note): every KEYLESS repartition in this
-      // codebase roots directly on a deterministic file scan (fanOut
-      // over parquet/CSV, simhashCompact's defrag re-pack, the knn
-      // probe spread) — re-run order is reproducible, so the
-      // SPARK-23207 retry hazard the default local sort guards
-      // against cannot occur, and the per-partition binary sort is
-      // pure cost. Env-overridable back to Spark's default.
-      .config("spark.sql.execution.sortBeforeRepartition",
-        sys.env.getOrElse("SPARK_GRAFT_SORT_BEFORE_REPARTITION", "false"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.execution.sortBeforeRepartition", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // see [[events]]
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Warm-up pass: JVM/codegen/parquet-footer costs land here, not on
-    * the first measured query.
+  /** [[session]] with the core count as a string, the form the
+    * benchmark's entry point (`perfbench/src/graftbench/Main.scala`)
+    * calls.
     */
-  def warmTables(spark: SparkSession, sfDir: String): Unit =
-    tableNames.foreach { t =>
-      try table(spark, sfDir, t).count()
-      catch { case _: Throwable => }
-    }
+  def benchSession(cpus: String): SparkSession = session(cpus.toInt)
+
+  /** Warm-up before measuring: table scans plus every operator family's
+    * fixtures and standing layouts, so JVM/codegen/parquet-footer and
+    * scaffolding costs land here, not on the first measured query. A
+    * failing warm-up throws.
+    */
+  def warmAll(spark: SparkSession, sfDir: String): Unit = {
+    tableNames.foreach(t => table(spark, sfDir, t).count())
+    operators.PipelineQueries.warmFixtures(spark, sfDir)
+    operators.SimilarityQueries.warmLayouts(spark, sfDir)
+    operators.DedupQueries.warmLayouts(spark, sfDir)
+    operators.TextQueries.warmLayouts(spark, sfDir)
+  }
 
   /** Canonical spelling of a corpus dir — ONE fixture key per real
     * directory: trailing slashes, `.`/`..` segments, and relative

@@ -191,7 +191,7 @@ object Main {
       val srv = HttpServer.start(spool, port)
       println(s"graft server mode on http://127.0.0.1:${srv.getAddress.getPort} " +
         s"(spool: $spool) — stop with ${spool}/stop")
-      val spark = GraftSession.build()
+      val spark = GraftSession.session()
       val stop = Paths.get(spool, "stop")
       try {
         while (!Files.exists(stop)) {
@@ -202,7 +202,7 @@ object Main {
         }
       } finally { srv.stop(0); spark.stop() }
     } else {
-      val spark = GraftSession.build()
+      val spark = GraftSession.session()
       try {
         val reports = Ingest.run(spark, cfg)
         reports.foreach { r =>

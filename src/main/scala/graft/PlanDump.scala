@@ -7,8 +7,9 @@ package graft
   * (`plans/r18/<query>_{before,after}.txt`).
   *
   * Usage: `runMain graft.PlanDump <tag> <outDir> <q1,q2,...>`
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS — the same
-  * bench session shape, so the dumped plans are the benched plans.
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1). Runs [[GraftSession.session]]
+  * and [[GraftSession.warmAll]] like Bench, so the dumped plans are the
+  * benched plans.
   */
 /** Evidence hook for subtrees a query eagerly checkpoints (their plan
   * is invisible in the registered query's own explain — it shows only
@@ -43,17 +44,8 @@ object PlanDump {
     }
     val Array(tag, outDir, names) = args.take(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.benchSession(cpus)
-    GraftSession.warmTables(spark, sfDir)
-    try operators.PipelineQueries.warmFixtures(spark, sfDir)
-    catch { case _: Throwable => }
-    try operators.SimilarityQueries.warmLayouts(spark, sfDir)
-    catch { case _: Throwable => }
-    try operators.DedupQueries.warmLayouts(spark, sfDir)
-    catch { case _: Throwable => }
-    try operators.TextQueries.warmLayouts(spark, sfDir)
-    catch { case _: Throwable => }
+    val spark = GraftSession.session()
+    GraftSession.warmAll(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.split(",").foreach { name =>
       val out = new StringBuilder

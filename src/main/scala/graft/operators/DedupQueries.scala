@@ -303,11 +303,11 @@ object DedupQueries {
   // ------------------------------------------------------ MinHash LSH
   /** One row per doc: all 12 min-hashes computed in a single map-side-
     * combining groupBy (no ×k row explosion) plus the DISTINCT shingle
-    * count (`collect_set` dedups in the aggregation buffer; `min` is
-    * duplicate-insensitive). The set itself is dropped BEFORE any
-    * caching: the signature relation is 14 longs per doc — at 100 TB
-    * it must never carry the corpus's whole shingle universe. Shared
-    * by [[dedupMinhash]] and [[minhashEstimate]].
+    * count (a count over the deduped (doc, h) rows; `min` is
+    * duplicate-insensitive). No shingle set is ever held: the
+    * signature relation is 14 longs per doc — at 100 TB it must never
+    * carry the corpus's whole shingle universe. Shared by
+    * [[dedupMinhash]] and [[minhashEstimate]].
     */
   private def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame = {
     // r18 (guide §4): the distinct-shingle count was size(collect_set)
@@ -320,45 +320,25 @@ object DedupQueries {
     // min() is duplicate-insensitive and count-over-distinct IS the
     // distinct count, so every output value is bit-identical; no
     // object buffer, no sort fallback, whole-stage codegen end to end.
-    // r19 A/B arm (VERDICT #2): the pre-r18 one-pass collect_set form,
-    // re-enableable by env so both shapes interleave-bench in ONE
-    // binary. Values are bit-identical (min over raw = min over
-    // distinct; size(collect_set) = count over distinct).
-    if (sys.env.get("SPARK_GRAFT_MINHASH_SIG").contains("collectset")) {
-      val aggCols =
-        collect_set(col("h")).as("hs") +:
-          (0 until MinhashK).map { i =>
-            min((lit(hashA(i)) * pmod(col("h"), lit(M31)) + lit(hashB(i))) % M31)
-              .as(s"mh$i")
-          }
-      minhashShingleRel(spark, sfDir)
-        .groupBy("doc_id")
-        .agg(aggCols.head, aggCols.tail: _*)
-        .withColumn("n", size(col("hs")).cast("long"))
-        .drop("hs")
-    } else {
-      val aggCols =
-        count(lit(1)).as("n") +:
-          (0 until MinhashK).map { i =>
-            min((lit(hashA(i)) * pmod(col("h"), lit(M31)) + lit(hashB(i))) % M31)
-              .as(s"mh$i")
-          }
-      // r19 (guide §2.5): one EXPLICIT doc_id exchange replaces both of
-      // the r18 form's exchanges — doc_id ⊂ (doc_id, h) satisfies the
-      // distinct's clustering and doc_id the groupBy's, so dedup and
-      // the 13-aggregate pass both run partition-local above it at the
-      // explicit width (the r18 shape paid a (doc_id, h) shuffle for
-      // the distinct and a second doc_id shuffle for the groupBy).
-      minhashShingleRel(spark, sfDir)
-        .repartition(
-          spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-        .distinct()
-        .groupBy("doc_id")
-        .agg(aggCols.head, aggCols.tail: _*)
-    }
-  }.transform(graft.PlanProbe.dump(_,
-    "minhash_signatures_" +
-      sys.env.getOrElse("SPARK_GRAFT_MINHASH_SIG", "distinct")))
+    val aggCols =
+      count(lit(1)).as("n") +:
+        (0 until MinhashK).map { i =>
+          min((lit(hashA(i)) * pmod(col("h"), lit(M31)) + lit(hashB(i))) % M31)
+            .as(s"mh$i")
+        }
+    // r19 (guide §2.5): one EXPLICIT doc_id exchange replaces both of
+    // the r18 form's exchanges — doc_id ⊂ (doc_id, h) satisfies the
+    // distinct's clustering and doc_id the groupBy's, so dedup and
+    // the 13-aggregate pass both run partition-local above it at the
+    // explicit width (the r18 shape paid a (doc_id, h) shuffle for
+    // the distinct and a second doc_id shuffle for the groupBy).
+    minhashShingleRel(spark, sfDir)
+      .repartition(
+        spark.sessionState.conf.numShufflePartitions, col("doc_id"))
+      .distinct()
+      .groupBy("doc_id")
+      .agg(aggCols.head, aggCols.tail: _*)
+  }.transform(graft.PlanProbe.dump(_, "minhash_signatures_distinct"))
 
   private def minhashShingleRel(spark: SparkSession, sfDir: String): DataFrame =
     table(spark, sfDir, "documents")
@@ -424,11 +404,10 @@ object DedupQueries {
     * sides, so the join itself needs NO exchange and keeps the full
     * explicit width. Hot-h skew is pre-bounded on both call sites
     * (dedupNgram drops df>DfCap shingles first; minhashExactInter is
-    * semi-filtered to candidate docs). Env-revertable for A/B.
+    * semi-filtered to candidate docs).
     */
   private def spreadByH(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_PAIR_SPREAD").contains("off")) df
-    else df.repartition(
+    df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, col("h"))
 
   /** MinHash + banded LSH near-dup detection: k=12 md5-family hashes,

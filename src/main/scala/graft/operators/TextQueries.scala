@@ -3048,16 +3048,14 @@ object TextQueries {
     // pre-aggregated per-doc ledger) cuts the tokenize/explode passes
     // from five to two; the token total then folds out of uni
     // (sum of per-word counts IS the token count — same long, exactly)
-    // instead of paying its own pass. Env-revertable for A/B.
-    val lmOld = sys.env.get("SPARK_GRAFT_LM_CKPT").contains("off")
-    val uni0 = trTok.groupBy("w").agg(count(lit(1)).as("c1"))
-    val uni = if (lmOld) uni0
-      else graft.PlanProbe.dump(uni0, "lm_uni").localCheckpoint(true)
-    val nTr = if (lmOld) trTok.agg(count(lit(1)).as("n"))
-      else uni.agg(sum(col("c1")).as("n"))
-    val occ0 = bigramsOf(all).groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("k"))
-    val occ = if (lmOld) occ0
-      else graft.PlanProbe.dump(occ0, "lm_occ").localCheckpoint(true)
+    // instead of paying its own pass.
+    val uni = graft.PlanProbe.dump(
+      trTok.groupBy("w").agg(count(lit(1)).as("c1")), "lm_uni")
+      .localCheckpoint(true)
+    val nTr = uni.agg(sum(col("c1")).as("n"))
+    val occ = graft.PlanProbe.dump(
+      bigramsOf(all).groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("k")),
+      "lm_occ").localCheckpoint(true)
     val big = occ.where(col("doc_id") % 2 === 0)
       .groupBy("w1", "w2").agg(sum("k").as("c2"))
     val s = when(col("c2").isNotNull,

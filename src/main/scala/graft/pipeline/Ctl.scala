@@ -126,7 +126,7 @@ object Ctl {
 
     case "compact" :: targetDir :: table :: rest =>
       val n = rest.headOption.map(_.toInt).getOrElse(1)
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       val (before, after) = Compaction.compact(spark, s"$targetDir/$table", n)
       println(s"compacted $table: $before -> $after files")
       spark.stop()
@@ -136,7 +136,7 @@ object Ctl {
         System.err.println(s"export: warehouse dir not found: $warehouseDir")
         sys.exit(2)
       }
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       val written = Export.run(spark, warehouseDir, outDir, db)
       spark.stop()
       if (written.isEmpty) {
@@ -172,7 +172,7 @@ object Ctl {
       // silently running a full index BUILD (a present-but-stale one
       // refreshes first by design — current-and-defragmented is what
       // the operator asked for)
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       try {
         if (which == "invindex" || which == "all") {
           if (graft.operators.TextQueries.invIndexPresent(sfDir)) {
@@ -244,7 +244,7 @@ object Ctl {
       // the system in a form a compliance tool reads. Non-destructive:
       // an existing forget_log.csv refuses loudly (exit 1), nothing
       // else in outDir is ever touched
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       val dumpFailure: Option[String] =
         try {
           val n = Governance.forgetLogDump(spark, sfDir, outDir)
@@ -275,7 +275,7 @@ object Ctl {
       // is `q_forget`'s job (PipelineQueries.forget); this verb is
       // its standing-layout complement.
       val ids = parseIds("index-forget", idsCsv)
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       try {
         val applied = Governance.applyForget(spark, sfDir, ids)
         if (applied.isEmpty)
@@ -293,7 +293,7 @@ object Ctl {
       // serve: deletion is federated too.
       val pairs = parseCorpora("forget-fed", corporaSpec)
       val ids = parseIds("forget-fed", idsCsv)
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       try {
         val fanned = try Governance.applyForgetFederated(spark, pairs, ids)
         catch {
@@ -334,7 +334,7 @@ object Ctl {
           sys.exit(2)
         }
       }
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       try {
         val layout = graft.operators.SimilarityQueries
           .evalRefRebuild(spark, sfDir, evalSrc)
@@ -365,7 +365,7 @@ object Ctl {
       // at-least-once safe by construction (see
       // StreamingOps.indexForgetStream) — so the checkpoint only
       // tracks WHICH request files were consumed.
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       val failure =
         try {
           java.nio.file.Files.createDirectories(Paths.get(requestsDir))
@@ -403,7 +403,7 @@ object Ctl {
       // stop at their next poll, checkpointed for a clean resume.
       // sys.exit only AFTER the try/finally (the quarantine-release
       // rule: exiting inside would skip spark.stop())
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       val chainFailure: Option[String] =
         try {
           val qs = graft.streaming.StreamingOps.doorChain(spark, sfDir,
@@ -433,7 +433,7 @@ object Ctl {
       // full door chain runs per corpus (own references, layouts,
       // checkpoints). Stop with: touch <fedRoot>/stop
       val pairs = parseCorpora("door-run-fed", corporaSpec)
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       val fedFailure: Option[String] =
         try {
           val qs = graft.streaming.StreamingOps.doorChainFederated(
@@ -460,7 +460,7 @@ object Ctl {
       // gate picks it up like any passed batch); idempotence marker
       // refuses a double release loudly. sys.exit only AFTER the
       // try/finally — exiting inside a catch would skip spark.stop()
-      val spark = graft.GraftSession.build()
+      val spark = graft.GraftSession.session()
       val failure: Option[String] =
         try {
           val n = graft.streaming.StreamingOps.quarantineRelease(

@@ -106,7 +106,7 @@ object HttpServer {
     * can run a real localhost round trip.
     */
   def start(spool: String, port: Int): JdkHttpServer =
-    start(spool, port, None, () => graft.GraftSession.build())
+    start(spool, port, None, () => graft.GraftSession.session())
 
   def start(spool: String, port: Int, doorDir: Option[String],
       sparkProvider: () => org.apache.spark.sql.SparkSession): JdkHttpServer =
@@ -693,7 +693,7 @@ object HttpServer {
     val corpus = args.lift(4)
     val fed = args.lift(5)
     val srv = start(spool, port, door, guard, corpus, fed,
-      () => graft.GraftSession.build())
+      () => graft.GraftSession.session())
     println(s"graft task API on http://127.0.0.1:${srv.getAddress.getPort} (spool: $spool" +
       door.map(d => s", door: $d").getOrElse("") +
       guard.map(g => s", guard: $g").getOrElse("") +

@@ -370,7 +370,7 @@ object Server {
     val spool = args.headOption.getOrElse(
       sys.error("usage: Server <spoolDir> [pollMillis]"))
     val poll = args.lift(1).map(_.toLong).getOrElse(2000L)
-    val spark = graft.GraftSession.build()
+    val spark = graft.GraftSession.session()
     val stop: Path = Paths.get(spool, "stop")
     try {
       while (!Files.exists(stop)) {

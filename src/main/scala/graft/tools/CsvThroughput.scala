@@ -17,11 +17,11 @@ import graft.sources.{CsvDialect, MySqlCsv}
 object CsvThroughput {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cores = args.headOption.getOrElse("8")
-    val spark = GraftSession.benchSession(cores)
+    val cores = args.headOption.map(_.toInt).getOrElse(8)
+    val spark = GraftSession.session(cores)
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val dir = Paths.get(s"/tmp/graft_csv_probe_$tag")
-    val nShards = cores.toInt
+    val nShards = cores
     if (!Files.exists(dir.resolve(s"done_$nShards"))) {
       Files.createDirectories(dir)
       // drop any other grid's marker FIRST: csv/ is about to be

@@ -21,8 +21,8 @@ import graft.sources.DumpSource
 object DumpThroughput {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cores = args.headOption.getOrElse("8")
-    val spark = GraftSession.benchSession(cores)
+    val cores = args.headOption.map(_.toInt).getOrElse(8)
+    val spark = GraftSession.session(cores)
     // fixture paths carry the sf dir so a re-run against a different
     // scale never silently reuses stale data
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -40,7 +40,7 @@ object DumpThroughput {
     // that parallelizes inside one big file, which the reference never
     // does (its region maker splits CSV only).
     val shardDir = Paths.get(s"/tmp/graft_dump_probe_shards_$tag")
-    val nShards = cores.toInt
+    val nShards = cores
     if (!Files.exists(shardDir.resolve(s"done_$nShards"))) {
       // statements span multiple lines (one tuple per line) — shard by
       // statement block, never by raw line
@@ -85,7 +85,7 @@ object DumpThroughput {
           spark, dump.toString, off, math.min(grid, bytes - off), cols))
         .reduce(_ union _)
     }
-    val (nc, secc, loc, hic) = medianOf3(() => chunkedDf(cores.toInt).count())
+    val (nc, secc, loc, hic) = medianOf3(() => chunkedDf(cores).count())
     def mib(sec: Double): Double = bytes / 1048576.0 / sec
     // MiB/s from the median; the spread is the (min..max) MiB/s band
     // of the 3 runs (min seconds = max throughput)

@@ -45,8 +45,7 @@ object ForgetProbe {
 
   def main(args: Array[String]): Unit = {
     val maxK = args.headOption.map(_.toInt).getOrElse(16)
-    val spark = GraftSession.benchSession(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.session()
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val ks = Seq(1, 4, 16, 64).filter(_ <= maxK)
 

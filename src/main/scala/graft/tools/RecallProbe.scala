@@ -12,7 +12,7 @@ import graft.operators.SimilarityQueries
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.benchSession("8")
+    val spark = GraftSession.session(8)
     Seq("sf0.001", "sf0.01", "sf0.1").foreach { s =>
       val dir = s"/root/testdata/$s"
       val exact = SimilarityQueries.annBruteForce(spark, dir).collect()

@@ -150,8 +150,7 @@ object ScalingProbe {
     val only = args.lift(1).map(_.split(",").toSet)
     def keep(names: Seq[String]): Seq[String] =
       names.filter(n => only.forall(_.contains(n)))
-    val spark = GraftSession.benchSession(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.session()
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // 8x/16x: the one-decade probe (r12) — a 16x fold of sf0.1 is
     // ~250 MB of parquet, still comfortably /tmp-sized

@@ -42,8 +42,7 @@ object SpliceCrossoverProbe {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = GraftSession.benchSession(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.session()
     val dir = s"/tmp/graft_splicecross_$n"
     val layout = SimilarityQueries.knnLayoutPath(dir)
     if (!Files.exists(Paths.get(s"$layout/edges/_SUCCESS"))) {

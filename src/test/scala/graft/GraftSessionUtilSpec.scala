@@ -58,4 +58,30 @@ class GraftSessionUtilSpec extends SparkSpec {
     // URI-schemed paths are not filesystem paths — untouched
     assert(GraftSession.canonicalDir("s3a://bucket/x/") === "s3a://bucket/x/")
   }
+
+  test("the shared test session runs the benched session config") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.execution.sortBeforeRepartition") === "false")
+    assert(conf.get("spark.sql.shuffle.partitions") === "4")
+    // GraftExtensions is installed: its SQL functions resolve
+    assert(spark.sql("SELECT crc64(CAST('a' AS BINARY))").collect().length === 1)
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    // keys the factory leaves at Spark's defaults: each still reads
+    // the value the session builders used to set explicitly
+    Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
+      "spark.sql.join.preferSortMergeJoin" -> "true"
+    ).foreach { case (k, v) => assert(conf.get(k) === v, k) }
+    Seq(
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> 0L,
+      "spark.sql.files.maxPartitionBytes" -> 134217728L,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> 67108864L
+    ).foreach { case (k, v) =>
+      assert(org.apache.spark.network.util.JavaUtils
+        .byteStringAsBytes(conf.get(k)) === v, k)
+    }
+  }
 }
