@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.types.StructType
 
 /** A7: post-import ANALYZE (reference `analyzeTable`,
   * `lightning/restore/restore.go:2215-2220`; levels
@@ -28,6 +30,25 @@ object Analyze {
     spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
     spark.sql(s"CREATE TABLE `$tbl` USING $format LOCATION '$path'")
     spark.sql(s"ANALYZE TABLE `$tbl` COMPUTE STATISTICS")
+    statsRowCount(spark, tbl)
+  }
+
+  /** What [[analyze]] records, without scanning the data: registers
+    * `path` with its known `schema` (no inference job), lets `ANALYZE …
+    * NOSCAN` list the files for the size, and sets the row count to
+    * `rows`, a count the caller has already verified. Leaves the same
+    * Statistics as a scanning [[analyze]] of the directory.
+    */
+  def record(spark: SparkSession, key: String, path: String, schema: StructType,
+      rows: Long, format: String = "parquet"): Option[Long] = {
+    val tbl = tableName(key)
+    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    spark.catalog.createTable(tbl, format, schema, Map("path" -> path))
+    spark.sql(s"ANALYZE TABLE `$tbl` COMPUTE STATISTICS NOSCAN")
+    val catalog = spark.sessionState.catalog
+    val ident = TableIdentifier(tbl)
+    catalog.alterTableStats(ident,
+      catalog.getTableMetadata(ident).stats.map(_.copy(rowCount = Some(BigInt(rows)))))
     statsRowCount(spark, tbl)
   }
 

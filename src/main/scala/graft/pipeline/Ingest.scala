@@ -268,17 +268,23 @@ object Ingest {
     val filter = new TableFilter(cfg.filters)
     val bwFilter = cfg.bwList.map(new BWFilter(_))
     val tableRouter = new TableRouter(cfg.routes)
-    val it = fs.listFiles(new Path(cfg.sourceDir), true)
+    val root = fs.makeQualified(new Path(cfg.sourceDir)).toString
     val files = scala.collection.mutable.ArrayBuffer[(String, RouteResult)]()
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toString.stripPrefix(
-        fs.makeQualified(new Path(cfg.sourceDir)).toString).stripPrefix("/")
-      router.route(rel).filter(_.kind != FileKind.Ignore).foreach { r =>
-        FileRouter.requireReadable(f.getPath.toString, r) // reject lz4/zstd/xz loudly (S8)
-        files += ((f.getPath.toString, r))
+    // depth-first in listing order, as listFiles(…, recursive) walks —
+    // but over plain FileStatus: listFiles builds LocatedFileStatus,
+    // which loads permissions, and without Hadoop native IO that forks
+    // an `ls -ld` per file
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else {
+        val rel = f.getPath.toString.stripPrefix(root).stripPrefix("/")
+        router.route(rel).filter(_.kind != FileKind.Ignore).foreach { r =>
+          FileRouter.requireReadable(f.getPath.toString, r) // reject lz4/zstd/xz loudly (S8)
+          files += ((f.getPath.toString, r))
+        }
       }
     }
+    walk(new Path(cfg.sourceDir))
     files
       .filter { case (_, r) => r.kind == FileKind.SchemaSchema ||
         (filter.matches(r.database, r.table) &&
@@ -291,8 +297,11 @@ object Ingest {
       .toSeq
   }
 
-  def discover(spark: SparkSession, cfg: Config): Seq[Discovered] = {
-    listRouted(spark, cfg)
+  def discover(spark: SparkSession, cfg: Config): Seq[Discovered] =
+    tablesOf(listRouted(spark, cfg), cfg)
+
+  private def tablesOf(routed: Seq[(String, RouteResult)], cfg: Config): Seq[Discovered] = {
+    routed
       .groupBy { case (_, r) => (r.database, r.table) }
       .map { case ((db, tbl), fs0) =>
         val schemaFile = fs0.collectFirst {
@@ -312,8 +321,8 @@ object Ingest {
   }
 
   /** View schema files: (db, view name, path). */
-  def discoverViews(spark: SparkSession, cfg: Config): Seq[(String, String, String)] =
-    listRouted(spark, cfg).collect {
+  private def viewsOf(routed: Seq[(String, RouteResult)]): Seq[(String, String, String)] =
+    routed.collect {
       case (p, r) if r.kind == FileKind.ViewSchema => (r.database, r.table, p)
     }.sortBy(v => (v._1, v._2))
 
@@ -346,9 +355,18 @@ object Ingest {
     * recorded as "failed" and re-imported next run (the reference only
     * marks a checkpoint verified after the checksum passes).
     */
-  def run(spark: SparkSession, cfg: Config): Seq[TableReport] = {
+  def run(spark: SparkSession, cfg: Config): Seq[TableReport] =
+    run(spark, cfg, DumpSource.SplitMinRangeBytes)
+
+  /** [[run]] with the smallest byte range a split dump read may use
+    * (specs force small ranges on small dumps).
+    */
+  private[pipeline] def run(spark: SparkSession, cfg: Config,
+      splitMinBytes: Long): Seq[TableReport] = {
     val state = new JobState(cfg.stateDir)
-    val tables = discover(spark, cfg)
+    // one listing serves the tables and the views
+    val routed = listRouted(spark, cfg)
+    val tables = tablesOf(routed, cfg)
     def restoreOne(d: Discovered): TableReport = {
       awaitUnpaused(cfg.pauseFile)
       val key = s"${d.db}.${d.table}"
@@ -485,7 +503,8 @@ object Ingest {
         if (i > 0) awaitUnpaused(cfg.pauseFile)
         val isLast = i == batches.size - 1
         val (rep, post) = restoreFiles(spark, cfg, d, batch, prior, maxId,
-          schema, verify = isLast, priorRowid = rowidMax, taskTs = taskTs)
+          schema, verify = isLast, priorRowid = rowidMax, taskTs = taskTs,
+          splitMinBytes = splitMinBytes)
         doneTokens = doneTokens ++ batch.map(_.token)
         cumBad += rep.badRows
         // Fail fast once the error budget is provably blown (the
@@ -543,7 +562,7 @@ object Ingest {
     // serialized last, `lightning/restore/restore.go:443-448`): each
     // imported table gets a plain-name temp view over its output so the
     // view's defining SELECT resolves, then the view DDL is replayed.
-    val views = discoverViews(spark, cfg)
+    val views = viewsOf(routed)
     if (views.nonEmpty) {
       // bare-name temp views: only unambiguous table names register
       // (two dbs with the same table name would silently shadow each
@@ -731,7 +750,8 @@ object Ingest {
       schema0: Option[TableSchema],
       verify: Boolean = true,
       priorRowid: Long = 0L,
-      taskTs: Option[java.sql.Timestamp] = None): (TableReport, KvChecksum) = {
+      taskTs: Option[java.sql.Timestamp] = None,
+      splitMinBytes: Long = DumpSource.SplitMinRangeBytes): (TableReport, KvChecksum) = {
     val dialect = dataDialect(cfg)
     // T6: tables without an integer handle carry `_tidb_rowid` — the
     // TRANSFORM schema gains the pseudo-column; readers that map BY
@@ -792,56 +812,78 @@ object Ingest {
             n, org.apache.spark.sql.types.StringType, nullable = true)))))
     val namesExt = schema.map(_.colNames).getOrElse(Seq.empty)
     val namesPos = schema0.map(_.colNames).getOrElse(Seq.empty)
-    val shards0: Seq[DataFrame] = emptyShard ++ files.map { u =>
-      u.kind match {
-        case FileKind.Csv if u.isChunk =>
-          // chunked CSV is always positional (headered files never
-          // chunk) — original layout
-          MySqlCsv.readRawChunk(spark, u.path, u.start, u.len, namesPos, dialect)
-        case FileKind.Csv =>
-          MySqlCsv.readRaw(spark, Seq(u.path),
-            if (dialect.header) namesExt else namesPos, dialect,
-            forceTokenizer = cfg.strictFormat && !cfg.csvDialect.header)
-        case FileKind.Sql if u.isChunk =>
-          DumpSource.readRawChunk(spark, u.path, u.start, u.len, namesExt)
-        case FileKind.Sql =>
-          DumpSource.readRaw(spark, Seq(u.path), namesExt, cfg.charset)
-        case FileKind.Parquet => spark.read.parquet(u.path)
-        case other => throw new IllegalStateException(s"unroutable kind $other")
+    val autoRand = schema.flatMap(_.columns.find(_.autoRandomBits.isDefined))
+    val autoInc = schema.flatMap(_.columns.find(_.autoIncrement)).orElse(autoRand)
+    // Whole-file native-UTF-8 dumps of a table whose only synthesized
+    // id is the dense `_tidb_rowid` fill parse as about one byte range
+    // per core: the fill numbers rows by global position, which the
+    // split keeps. Auto-inc/auto-random fills depend on the
+    // partitioning (wide fills, shard bits), so those tables read
+    // whole files.
+    val splitDumps = rowidNeeded && autoInc.isEmpty && CharsetReader.isNativeUtf8(cfg.charset)
+    /** The shard union, all strings, hex resolved; with `split`, plus
+      * the split reads whose handshake must hold.
+      */
+    def parse(split: Boolean): (DataFrame, Seq[DumpSource.SplitRead]) = {
+      val splits = scala.collection.mutable.ArrayBuffer[DumpSource.SplitRead]()
+      val shards0: Seq[DataFrame] = emptyShard ++ files.map { u =>
+        u.kind match {
+          case FileKind.Csv if u.isChunk =>
+            // chunked CSV is always positional (headered files never
+            // chunk) — original layout
+            MySqlCsv.readRawChunk(spark, u.path, u.start, u.len, namesPos, dialect)
+          case FileKind.Csv =>
+            MySqlCsv.readRaw(spark, Seq(u.path),
+              if (dialect.header) namesExt else namesPos, dialect,
+              forceTokenizer = cfg.strictFormat && !cfg.csvDialect.header)
+          case FileKind.Sql if u.isChunk =>
+            DumpSource.readRawChunk(spark, u.path, u.start, u.len, namesExt)
+          case FileKind.Sql =>
+            (if (split && !compressed(u.path))
+              DumpSource.readRawSplit(spark, u.path, namesExt, splitMinBytes)
+            else None) match {
+              case Some(r) => splits += r; r.df
+              case None => DumpSource.readRaw(spark, Seq(u.path), namesExt, cfg.charset)
+            }
+          case FileKind.Parquet => spark.read.parquet(u.path)
+          case other => throw new IllegalStateException(s"unroutable kind $other")
+        }
       }
-    }
-    // positional shards lack the rowid column — back-fill NULL so the
-    // shard union lines up
-    val shards = if (!rowidNeeded) shards0 else shards0.map { df =>
-      if (df.columns.exists(_.equalsIgnoreCase(TidbRowidCol))) df
-      else df.withColumn(TidbRowidCol,
-        org.apache.spark.sql.functions.lit(null).cast("string"))
-    }
-    // Hex literals leave the dump parser as lexical sentinels; resolve
-    // them AFTER the shard union so (a) a table mixing SQL and CSV
-    // shards unions as all-strings (an early BinaryType column on the
-    // SQL side would fail the union — Spark does not coerce
-    // string↔binary), and (b) the schema-less path still decodes the
-    // sentinels as text instead of leaking them to the output.
-    // Collision safety: dump-quoted strings that would masquerade as a
-    // sentinel are str-guarded at parse, and parquet can't produce
-    // one, so the dump path is collision-proof. Residual (documented):
-    // the branch only runs when a SQL shard exists, and a CSV shard of
-    // the SAME table whose field deliberately encodes a leading NUL +
-    // "hex:" would resolve as hex — a shape no MySQL tool emits.
-    val rawUnion = shards.reduce(_.unionByName(_))
-    val union =
-      if (!files.exists(_.kind == FileKind.Sql)) rawUnion
-      else {
-        // omitted-column defaults (T3 on the dump path) substitute
-        // BEFORE hex resolution so a hex default still decodes
-        // type-aware; CSV/parquet shards can't carry the sentinel
-        val defaulted = schema
-          .map(RowTransform.applyOmittedDefaults(rawUnion, _, taskTs))
-          .getOrElse(rawUnion)
-        schema.map(DumpSource.resolveHex(defaulted, _))
-          .getOrElse(DumpSource.resolveHexText(defaulted))
+      // positional shards lack the rowid column — back-fill NULL so the
+      // shard union lines up
+      val shards = if (!rowidNeeded) shards0 else shards0.map { df =>
+        if (df.columns.exists(_.equalsIgnoreCase(TidbRowidCol))) df
+        else df.withColumn(TidbRowidCol,
+          org.apache.spark.sql.functions.lit(null).cast("string"))
       }
+      // Hex literals leave the dump parser as lexical sentinels; resolve
+      // them AFTER the shard union so (a) a table mixing SQL and CSV
+      // shards unions as all-strings (an early BinaryType column on the
+      // SQL side would fail the union — Spark does not coerce
+      // string↔binary), and (b) the schema-less path still decodes the
+      // sentinels as text instead of leaking them to the output.
+      // Collision safety: dump-quoted strings that would masquerade as a
+      // sentinel are str-guarded at parse, and parquet can't produce
+      // one, so the dump path is collision-proof. Residual (documented):
+      // the branch only runs when a SQL shard exists, and a CSV shard of
+      // the SAME table whose field deliberately encodes a leading NUL +
+      // "hex:" would resolve as hex — a shape no MySQL tool emits.
+      val rawUnion = shards.reduce(_.unionByName(_))
+      val union =
+        if (!files.exists(_.kind == FileKind.Sql)) rawUnion
+        else {
+          // omitted-column defaults (T3 on the dump path) substitute
+          // BEFORE hex resolution so a hex default still decodes
+          // type-aware; CSV/parquet shards can't carry the sentinel
+          val defaulted = schema
+            .map(RowTransform.applyOmittedDefaults(rawUnion, _, taskTs))
+            .getOrElse(rawUnion)
+          schema.map(DumpSource.resolveHex(defaulted, _))
+            .getOrElse(DumpSource.resolveHexText(defaulted))
+        }
+      (union, splits.toSeq)
+    }
+    val (union, splits) = parse(splitDumps)
     // T4: auto-increment synthesis. A declared AUTO_INCREMENT column
     // that the source doesn't carry (header/column-list projection) is
     // synthesized from the chunk row-ID scheme; a NULL value in a
@@ -854,8 +896,6 @@ object Ingest {
     // reference's composition (`lightning/backend/sql2kv.go:69-77,313-320`
     // uses a per-chunk seed the same way). Tracked/rebased by the LOW
     // bits, mirroring AUTO_RANDOM_BASE (`lightning/restore/tidb.go:369-382`).
-    val autoRand = schema.flatMap(_.columns.find(_.autoRandomBits.isDefined))
-    val autoInc = schema.flatMap(_.columns.find(_.autoIncrement)).orElse(autoRand)
     def synthFor(c: graft.schema.ColumnSpec, base: Long): org.apache.spark.sql.Column =
       c.autoRandomBits match {
         case Some(bits) => RowTransform.autoRandom(
@@ -949,7 +989,18 @@ object Ingest {
     // sink still reads the stored blocks, not the dump
     val rowidFilled = if (!rowidNeeded) merged else {
       val rc = TidbRowidCol
-      val ids = RowTransform.denseIds(merged, Some(rc))
+      val ids = {
+        val first = RowTransform.denseIds(merged, Some(rc))
+        // that job parsed every range of the split dumps: check their
+        // handshake before anything is written. Split reads exist only
+        // without auto-inc columns, where `merged` is the union itself
+        splits.iterator.flatMap(_.chainBreak).nextOption() match {
+          case None => first
+          case Some(why) =>
+            System.err.println(s"[dump-split] $why; re-reading ${d.db}.${d.table} whole-file")
+            RowTransform.denseIds(parse(split = false)._1, Some(rc))
+        }
+      }
       if (ids.nulls == 0L) ids.stable
       else {
         val RFill = "_graft_fill_tidb_rowid"
@@ -1140,11 +1191,15 @@ object Ingest {
     dupIds.foreach(System.err.println)
     val ok = Checksum.matches(expected, post) && badRows <= cfg.maxError &&
       dupIds.isEmpty
-    // A7: collect catalog statistics once the table verified
+    // A7: collect catalog statistics once the table verified — for an
+    // unpartitioned output straight from the verified read-back (its
+    // schema and row count), so no job scans the output again
     val statsRows =
-      if (ok && cfg.analyze)
-        Analyze.analyze(spark, s"${d.db}.${d.table}", out, cfg.outputFormat)
-      else None
+      if (!ok || !cfg.analyze) None
+      else if (partCols.isEmpty)
+        Analyze.record(spark, s"${d.db}.${d.table}", out, readBack.schema, post.totalKvs,
+          cfg.outputFormat)
+      else Analyze.analyze(spark, s"${d.db}.${d.table}", out, cfg.outputFormat)
     (TableReport(d.db, d.table, post.totalKvs, post.checksum,
       checksumOk = ok, skipped = false, statsRows = statsRows, badRows = badRows,
       maxRowId = maxRowId, maxTidbRowid = maxTidbRowid), post)

@@ -15,13 +15,19 @@ import graft.transform.RowTransform
   * backslash-escape + doubled-quote rules, hex (0x…/x'…') and bit
   * (b'…') literals.
   *
-  * Distribution model: one task per dump file (`wholetext` read →
-  * flatMap over statements). MyDumper splits large tables into many
-  * ≤256 MiB files (the reference chunks at the same boundary,
-  * `lightning/mydump/region.go:236-286` — SQL files are not
-  * byte-splittable there either, because a split can land inside a
-  * string literal), so file-level parallelism is the scale unit on a
-  * cluster exactly as it is upstream.
+  * Distribution model, three reads over one scanner:
+  *  - [[readRaw]]: one task per dump file (`wholetext` read → flatMap
+  *    over statements), for any charset and codec. MyDumper splits
+  *    large tables into many ≤256 MiB files (the reference never
+  *    byte-splits SQL files, `lightning/mydump/region.go:236-286`,
+  *    because a split can land inside a string literal).
+  *  - [[readRawChunk]]: one byte range of a strict-format file, the
+  *    unit of chunked, resumable imports.
+  *  - [[readRawSplit]]: one uncompressed native-UTF-8 file as about one
+  *    byte range per core, with no format precondition: each range
+  *    reports where its scan met statements, and the import keeps the
+  *    split only when those offsets prove it parsed as the whole file
+  *    does ([[SplitRead.chainBreak]]).
   *
   * Output is late-typed (all strings, like the CSV path); callers cast
   * via [[RowTransform.applySchema]].
@@ -141,15 +147,136 @@ object DumpSource {
       start: Long,
       len: Long,
       colNames: Seq[String],
-      tailWindowBytes: Long = 4L << 20): DataFrame = {
+      tailWindowBytes: Long = 4L << 20): DataFrame =
+    readRanges(spark, path, colNames, Seq((start, len)), tailWindowBytes, None)
+
+  /** The smallest byte range [[readRawSplit]] cuts a dump into. */
+  val SplitMinRangeBytes: Long = 1L << 20
+
+  /** A split range's first tail window: small, because the window only
+    * has to reach past the statement crossing the range end and the
+    * head of the next one; it grows geometrically from here.
+    */
+  private val SplitTailBytes = 32L << 10
+
+  /** Range-parallel read of ONE uncompressed, native-UTF-8 dump file:
+    * about one byte range per core (`defaultParallelism`), none smaller
+    * than `minRangeBytes`; None when the file has room for only one.
+    * Each range is a [[chunkInserts]] task in handshake mode: it never
+    * fails on the strict-format preconditions, and reports its
+    * statement offsets ([[Spans]]) so [[SplitRead.chainBreak]] can
+    * decide — once a job has parsed every range — whether the ranges
+    * together produced exactly the whole-file parse. Partitions are in
+    * file order, so row positions match [[readRaw]]'s.
+    */
+  def readRawSplit(spark: SparkSession, path: String, colNames: Seq[String],
+      minRangeBytes: Long = SplitMinRangeBytes): Option[SplitRead] = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fileLen = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(hp).getLen
+    val ranges = math.min(spark.sparkContext.defaultParallelism.toLong,
+      fileLen / math.max(1L, minRangeBytes)).toInt
+    if (ranges < 2) None
+    else {
+      val size = (fileLen + ranges - 1) / ranges
+      val edges = spark.sparkContext.collectionAccumulator[(Int, Edge)](s"dump ranges of $path")
+      val df = readRanges(spark, path, colNames,
+        (0 until ranges).map(i => (i * size, math.min(size, fileLen - i * size))),
+        SplitTailBytes, Some(edges))
+      Some(new SplitRead(df, path, fileLen, ranges, edges))
+    }
+  }
+
+  /** A [[readRawSplit]] result: the rows, and the statement handshake
+    * over what its ranges reported.
+    */
+  final class SplitRead private[sources] (
+      val df: DataFrame,
+      path: String,
+      fileLen: Long,
+      ranges: Int,
+      edges: org.apache.spark.util.CollectionAccumulator[(Int, Edge)]) {
+
+    /** None when every range reported and the chain of offsets holds,
+      * i.e. the ranges' rows are exactly the whole-file parse; else why
+      * not. Meaningful only after a job has computed every partition of
+      * `df` (a task retry may report twice, with the same values).
+      */
+    def chainBreak: Option[String] = {
+      import scala.jdk.CollectionConverters._
+      val byRange = edges.value.asScala.toSeq.groupMap(_._1)(_._2)
+      DumpSource.chainBreak((0 until ranges).map(i => byRange.getOrElse(i, Nil).distinct),
+        fileLen).map(why => s"$path: $why")
+    }
+  }
+
+  /** What a handshake-mode [[chunkInserts]] range reports. */
+  private[sources] sealed trait Edge
+
+  /** Byte offsets in the file: `first` = keyword of the first statement
+    * the range's scan accepted (owned or not); `next` = keyword of the
+    * first statement at or after its ownership boundary (the first line
+    * start at or after the range end), or the file length when the scan
+    * reached EOF without one. -1 = unknown: malformed UTF-8 before the
+    * keyword leaves its byte offset unknown.
+    */
+  private[sources] final case class Spans(first: Long, next: Long) extends Edge
+
+  /** No line starts inside the range: it owns nothing, and its
+    * neighbours' boundaries coincide, so the chain passes through it.
+    */
+  private[sources] case object NoLine extends Edge
+
+  /** The statement handshake over ranges 0..k-1 (each with the distinct
+    * edges it reported): None — the ranges' rows are the whole-file
+    * parse — when every range reported once, F_i == N_{i-1} for every
+    * range i ≥ 1 that holds a line start (skipping [[NoLine]] ranges),
+    * and the last N is the file length. By induction: range 0 scans from byte 0, as the whole-file parse
+    * does, so its N is the whole-file parse's first statement at or
+    * after range 1's start; a range whose own scan first accepts a
+    * statement exactly there lexes from it on exactly as the whole-file
+    * parse does (the scanner's only state is its position), so it emits
+    * the same statements up to its boundary and names the same next
+    * one. A scan that started inside a literal or comment and found a
+    * phantom, or skipped a real statement, first-accepts some other
+    * offset and breaks the chain.
+    */
+  private[sources] def chainBreak(edges: IndexedSeq[Seq[Edge]], fileLen: Long): Option[String] = {
+    var handover = -1L
+    var i = 0
+    while (i < edges.size) {
+      edges(i) match {
+        case Seq(NoLine) =>
+        case Seq(Spans(first, next)) =>
+          if (i > 0 && first != handover)
+            return Some(s"range $i first accepts a statement at byte $first, but the " +
+              s"ranges before it hand over at byte $handover")
+          if (next < 0) return Some(s"range $i could not place the statement after its end in bytes")
+          handover = next
+        case Seq() => return Some(s"range $i reported no offsets")
+        case many => return Some(s"range $i reported ${many.mkString(", ")}")
+      }
+      i += 1
+    }
+    if (handover == fileLen) None
+    else Some(s"the last range hands over at byte $handover, not at EOF ($fileLen)")
+  }
+
+  /** One task per (start, len) byte range of `path`, in order, each a
+    * [[chunkInserts]] scan; `edges` switches the scans to handshake mode
+    * and collects their reports by range index.
+    */
+  private def readRanges(spark: SparkSession, path: String, colNames: Seq[String],
+      ranges: Seq[(Long, Long)], tailWindowBytes: Long,
+      edges: Option[org.apache.spark.util.CollectionAccumulator[(Int, Edge)]]): DataFrame = {
     require(colNames.nonEmpty, "chunked dump read requires schema column names")
     val n = colNames.size
     val names = colNames.map(_.toLowerCase)
     val outSchema = StructType(colNames.map(StructField(_, StringType, nullable = true)))
     val confEntries = ConfShip.entries(spark)
-    val rows = spark.sparkContext.parallelize(Seq((path, start, len)), 1)
-      .flatMap { case (p, s0, l) =>
-        val hp = new org.apache.hadoop.fs.Path(p)
+    val rows = spark.sparkContext.parallelize(ranges.zipWithIndex, ranges.size)
+      .flatMap { case ((s0, l), i) =>
+        val hp = new org.apache.hadoop.fs.Path(path)
         val fs = hp.getFileSystem(ConfShip.rebuild(confEntries))
         val fileLen = fs.getFileStatus(hp).getLen
         val in = fs.open(hp)
@@ -159,22 +286,29 @@ object DumpSource {
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
         chunkInserts((pos, buf) => in.readFully(pos, buf, 0, buf.length),
-          fileLen, s0, l, tailWindowBytes)
+          fileLen, s0, l, tailWindowBytes, edges.map(acc => (e: Edge) => acc.add((i, e))))
           .flatMap(stmtRows(_, names, n))
       }
+      .setName(s"dump ranges of $path")
     spark.createDataFrame(rows, outSchema)
   }
 
   /** The chunk scan against any positional reader (`read(pos, buf)`
     * fills `buf` from byte offset `pos`) — ONE implementation behind
-    * both the Hadoop-FS task in [[readRawChunk]] and the in-memory
-    * grid-sweep specs, so boundary arithmetic is pinned where it can
-    * be swept exhaustively.
+    * the Hadoop-FS tasks of [[readRawChunk]] and [[readRawSplit]] and
+    * the in-memory grid-sweep specs, so boundary arithmetic is pinned
+    * where it can be swept exhaustively.
+    *
+    * With `edge` set (handshake mode, [[readRawSplit]]) the scan never
+    * throws on the strict-format preconditions — a range that starts
+    * inside a multi-line comment or literal is caught by the handshake
+    * instead — and reports its [[Edge]] once it finishes.
     */
   private[sources] def chunkInserts(
       read: (Long, Array[Byte]) => Unit,
       fileLen: Long, start: Long, len: Long,
-      tailWindowBytes: Long): Iterator[Insert] = {
+      tailWindowBytes: Long,
+      edge: Option[Edge => Unit] = None): Iterator[Insert] = {
     val end = math.min(start + len, fileLen)
     // snap: first line start at or after `start` (the start-1 trick —
     // a chunk landing exactly on a line start keeps that line)
@@ -183,9 +317,8 @@ object DumpSource {
       else {
         var pos = start - 1
         var found = -1L
-        val buf = new Array[Byte](1 << 16)
         while (found < 0 && pos < end) {
-          val want = math.min(buf.length.toLong, end - pos).toInt
+          val want = math.min(8192L, end - pos).toInt
           val window = new Array[Byte](want)
           read(pos, window)
           var i = 0
@@ -201,7 +334,7 @@ object DumpSource {
     // (256 MiB default) and a window driven past it by one enormous
     // statement/boundary line must fail loudly, not wrap negative
     val maxWindow = (Int.MaxValue - 64).toLong
-    if (snap < 0 || snap >= end) Iterator.empty
+    if (snap < 0 || snap >= end) { edge.foreach(_(NoLine)); Iterator.empty }
     else if (end - snap > maxWindow)
       throw new IllegalStateException(
         s"dump chunk [$start+$len) spans ${end - snap} bytes after the " +
@@ -221,14 +354,20 @@ object DumpSource {
       private var tailLen = math.min(tailWindowBytes, fileLen - end)
       private var growStep = math.max(1L, tailWindowBytes)
       private var eof = false
+      // the window's bytes from `snap`; growth appends the new tail
+      // only, so a range's bytes are read once however often it grows
+      private var bytes = Array.emptyByteArray
       private var text: String = null
+      private var boundaryByte = 0
       private var boundaryChars = 0
       private var scanner: scala.collection.BufferedIterator[(Insert, Int, Int)] = null
       private var lastResume = 0 // resume offset of the last emitted statement
       private var pending: Insert = null
       private var finished = false
+      private var firstKw = -1 // char offset of the first accepted statement
 
       private val ownedLen = (end - snap).toInt
+      private val handshake = edge.isDefined
 
       /** (Re)read + decode the current window; false = must grow
         * before any scanning (boundary line or a block comment still
@@ -242,12 +381,18 @@ object DumpSource {
               "closing a statement or boundary line; the file is not " +
               "strict-format — import it without chunking")
         eof = end + tailLen >= fileLen
-        val buf = new Array[Byte]((ownedLen + tailLen).toInt)
-        read(snap, buf)
+        val want = (ownedLen + tailLen).toInt
+        if (bytes.length < want) {
+          val more = new Array[Byte](want - bytes.length)
+          read(snap + bytes.length, more)
+          val grown = java.util.Arrays.copyOf(bytes, want)
+          System.arraycopy(more, 0, grown, bytes.length, more.length)
+          bytes = grown
+        }
+        val buf = bytes
         // ownership cutoff: first line start at byte offset >= ownedLen
-        val boundaryByte: Int =
-          if (ownedLen <= 0) 0
-          else if (buf(ownedLen - 1) == '\n') ownedLen
+        boundaryByte =
+          if (buf(ownedLen - 1) == '\n') ownedLen
           else {
             var i = ownedLen
             while (i < buf.length && buf(i) != '\n') i += 1
@@ -275,9 +420,10 @@ object DumpSource {
         // Validation and lexing both RESUME at lastResume — a
         // plain-SQL-context offset whose prefix every earlier (smaller)
         // window already validated and emitted — so window growth
-        // re-reads bytes (bounded ~2x total by the geometric growth)
+        // re-decodes bytes (bounded ~2x total by the geometric growth)
         // but never re-parses emitted statements.
-        val (multilineAt, untermAt) = blockCommentIssue(text, lastResume)
+        val (multilineAt, untermAt) =
+          blockCommentIssue(text, lastResume, multilineFails = !handshake)
         // a SINGLE-chunk file has no other boundary to land inside the
         // comment, so the hazard cannot arise — the parse is equivalent
         // to the whole-file path (reference tests/checkpoint_engines
@@ -291,7 +437,7 @@ object DumpSource {
               "file is not strict-format — import it without chunking")
         if (untermAt >= 0) {
           if (!eof) { text = null; return false } // closer beyond window
-          if (text.indexOf('\n', untermAt) >= 0)
+          if (!handshake && text.indexOf('\n', untermAt) >= 0)
             throw new IllegalStateException(
               s"unterminated block comment at offset $untermAt spans lines; " +
                 "not strict-format — import without chunking")
@@ -308,6 +454,36 @@ object DumpSource {
         scanner = null
       }
 
+      /** File byte offset of char offset `c` of the window, or -1 when
+        * the decode replaced malformed bytes before it (the char/byte
+        * mapping is then unknown).
+        */
+      private def fileByte(c: Int): Long =
+        if (text.lastIndexOf('\uFFFD', c - 1) >= 0) -1L
+        else {
+          var b = if (c >= boundaryChars) boundaryByte else 0
+          var k = if (c >= boundaryChars) boundaryChars else 0
+          while (k < c) {
+            val x = bytes(b) & 0xFF
+            if ((x & 0xC0) != 0x80) k += (if (x >= 0xF0) 2 else 1)
+            b += 1
+          }
+          while (b < bytes.length && (bytes(b) & 0xC0) == 0x80) b += 1
+          snap + b
+        }
+
+      /** Stop; in handshake mode report the edge, `next` being the
+        * char offset of the first statement past the boundary, the
+        * text length at EOF, or -1 when unknown.
+        */
+      private def finish(next: Int): Unit = {
+        finished = true
+        edge.foreach { report =>
+          val n = if (next < 0) -1L else if (next >= text.length) fileLen else fileByte(next)
+          report(Spans(if (firstKw < 0) n else fileByte(firstKw), n))
+        }
+      }
+
       @annotation.tailrec
       private def advance(): Unit =
         if (pending == null && !finished) {
@@ -316,14 +492,22 @@ object DumpSource {
             advance()
           } else if (scanner.hasNext) {
             val (ins, kw, resume) = scanner.head
-            if (kw >= boundaryChars) finished = true // next chunk's statement
+            if (kw >= boundaryChars) {
+              // the next chunk's statement. The handshake names it only
+              // from a line the window holds whole: on the window's cut
+              // last line, a quote or keyword test that ran into the
+              // window end may have lexed otherwise than the whole file
+              if (handshake && !eof && text.indexOf('\n', kw) < 0) { growWindow(); advance() }
+              else finish(kw)
+            }
             else if (!eof && resume >= text.length) { growWindow(); advance() }
             else {
               scanner.next()
               pending = ins
               lastResume = resume
+              if (firstKw < 0) firstKw = kw
             }
-          } else if (eof) finished = true
+          } else if (eof) finish(text.length)
           else {
             // scanner exhausted without crossing: owned keywords it
             // skipped with only window-end behind them are
@@ -338,8 +522,11 @@ object DumpSource {
               if (text.length - kw < HeadProbeChars) mustGrow = true
               else kw = nextStatementKeyword(text, kw + 1)
             }
-            if (mustGrow) { growWindow(); advance() }
-            else finished = true
+            // the handshake also needs the statement after the
+            // boundary: grow until one turns up or EOF (never more bytes
+            // than the whole-file re-read a broken chain would cost)
+            if (mustGrow || handshake) { growWindow(); advance() }
+            else finish(-1)
           }
         }
 
@@ -622,9 +809,12 @@ object DumpSource {
     * backticks, line comments, versioned comments whose bodies lex as
     * SQL and are therefore chunk-safe) so a `[slash][star]` inside a
     * string literal can't false-positive — `DumpChunkSpec` pins the
-    * two walkers' agreement on the torture fixtures.
+    * two walkers' agreement on the torture fixtures. With
+    * `multilineFails` off only `untermAt` is reported (handshake-mode
+    * ranges need the window to hold each closer, nothing more).
     */
-  private[sources] def blockCommentIssue(s: String, from: Int = 0): (Int, Int) = {
+  private[sources] def blockCommentIssue(s: String, from: Int = 0,
+      multilineFails: Boolean = true): (Int, Int) = {
     // `from` must be a plain-SQL-context offset (0, or a previous
     // statement's resume): earlier regions were validated by earlier,
     // smaller windows, so re-validation can start where lexing resumes
@@ -643,7 +833,7 @@ object DumpSource {
         else {
           val end = s.indexOf("*/", i + 2)
           if (end < 0) return (-1, i)
-          if (s.lastIndexOf('\n', end) > i) return (i, -1)
+          if (multilineFails && s.lastIndexOf('\n', end) > i) return (i, -1)
           i = end + 2
         }
       } else if (c == '*' && i + 1 < n && s.charAt(i + 1) == '/') {

@@ -534,8 +534,8 @@ object RowTransform {
     * partition gets its base + k + 1. IDs are dense, unique, and
     * deterministic for a fixed partitioning.
     *
-    * The input is eagerly `localCheckpoint`ed, then ONE counting job
-    * reads the stored blocks ([[denseIds]]); the IDs are a
+    * The input is lazily `localCheckpoint`ed, and ONE counting job
+    * both stores its blocks and counts them ([[denseIds]]); the IDs are a
     * whole-stage-codegen'd expression over the checkpointed relation
     * (see [[DenseIds.withIds]]), so later reads (a sink's sampling and
     * write jobs) number rows without a per-row object round trip.
@@ -579,14 +579,14 @@ object RowTransform {
     */
   private val InPartitionMask = (1L << 33) - 1
 
-  /** Checkpoints `df` and runs one job over the stored blocks: per
-    * partition, the row count and, when `stat` names a column, the
-    * explicit max of `stat` cast to bigint, its NULL count and the
-    * in-partition position of its last NULL. A partition of ≥ 2³³ rows
+  /** Checkpoints `df` lazily and runs ONE job, which stores the blocks
+    * and returns per partition the row count and, when `stat` names a
+    * column, the explicit max of `stat` cast to bigint, its NULL count
+    * and the in-partition position of its last NULL. A partition of ≥ 2³³ rows
     * fails loudly: its ordinals would spill into the partition bits.
     */
   def denseIds(df: DataFrame, stat: Option[String] = None): DenseIds = {
-    val stable = df.localCheckpoint(true)
+    val stable = df.localCheckpoint(false)
     val probe = stat.fold(stable.select())(c => stable.select(col(c).isNull, col(c).cast(LongType)))
     val hasStat = stat.isDefined
     // (partition, rows, max or Long.MinValue, nulls, last NULL position)

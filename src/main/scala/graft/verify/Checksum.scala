@@ -34,7 +34,9 @@ object Checksum {
     */
   def canonicalBytesOf(columns: Seq[String]): Column = {
     val cols = columns.sorted.map(c => col(c))
-    encode(to_json(struct(cols: _*)), "UTF-8")
+    // to_json emits valid UTF-8, so the binary cast gives the bytes
+    // encode(…, "UTF-8") would, without its per-row validity scan
+    to_json(struct(cols: _*)).cast("binary")
   }
 
   /** The checksum triple as one aggregate struct: XOR of per-row

@@ -47,13 +47,97 @@ class DumpChunkSpec extends AnyFunSuite {
     }.flatMap(_.rows).map(_.toSeq)
   }
 
+  /** The same grid as one split read: every range in handshake mode.
+    * Returns the rows in range order, the chain verdict and each
+    * range's report.
+    */
+  private def splitSweep(text: String, grid: Long,
+      window: Long): (Seq[Seq[String]], Option[String], Seq[Seq[DumpSource.Edge]]) = {
+    val bytes = text.getBytes(UTF_8)
+    val read = (pos: Long, buf: Array[Byte]) =>
+      System.arraycopy(bytes, pos.toInt, buf, 0, buf.length)
+    val starts = (0L until bytes.length.toLong by grid).toIndexedSeq
+    val edges = starts.map(_ => scala.collection.mutable.ArrayBuffer[DumpSource.Edge]())
+    val rows = starts.zipWithIndex.flatMap { case (off, i) =>
+      DumpSource.chunkInserts(read, bytes.length.toLong, off,
+        math.min(grid, bytes.length - off), window, Some(e => edges(i) += e)).toSeq
+    }.flatMap(_.rows).map(_.toSeq)
+    val reported = edges.map(_.toSeq)
+    (rows, DumpSource.chainBreak(reported.map(_.distinct), bytes.length.toLong), reported)
+  }
+
+  /** Soundness: wherever the handshake holds, the ranges' rows are
+    * exactly the whole-file parse. Returns whether it held.
+    */
+  private def splitSound(text: String, grid: Long, window: Long): Boolean = {
+    val whole = DumpSource.parseStatements(text).flatMap(_.rows).map(_.toSeq)
+    val (rows, verdict, reported) = splitSweep(text, grid, window)
+    assert(reported.forall(_.size == 1), s"grid=$grid window=$window: $reported")
+    if (verdict.isEmpty) assert(rows === whole, s"grid=$grid window=$window: chain held")
+    verdict.isEmpty
+  }
+
   test("every chunk grid and tail window reproduces the whole-file parse") {
     val whole = DumpSource.parseStatements(fixture).flatMap(_.rows).map(_.toSeq)
     assert(whole.size === 11)
     for (grid <- Seq(1L, 3L, 7L, 13L, 64L, 1000L); window <- Seq(1L, 5L, 4096L)) {
       val chunked = sweep(fixture, grid, window)
       assert(chunked === whole, s"grid=$grid window=$window")
+      // the split read of a clean dump: the chain holds on every grid
+      assert(splitSound(fixture, grid, window), s"grid=$grid window=$window")
     }
+  }
+
+  test("split handshake: a raw newline in a literal before an INSERT line breaks the chain") {
+    // the next line of the literal reads as a statement to a range that
+    // starts there; its first accepted offset is not the one the
+    // previous range hands over
+    val text = "INSERT INTO t VALUES (1,'first line\n" +
+      "INSERT INTO t VALUES (99,''phantom'');\n" +
+      "last line');\nINSERT INTO t VALUES (2,'b');\n"
+    val whole = DumpSource.parseStatements(text).flatMap(_.rows).map(_.toSeq)
+    assert(whole.map(_.head) === Seq("1", "2"))
+    val held = for (grid <- 1L to text.length.toLong; window <- Seq(1L, 7L, 4096L))
+      yield splitSound(text, grid, window)
+    assert(held.contains(false) && held.contains(true))
+    val p = text.indexOf("INSERT INTO t VALUES (99")
+    assert(!splitSound(text, p.toLong, 4096L), "a range starting on the phantom line must break")
+  }
+
+  test("split handshake: a multi-line plain block comment holding an INSERT breaks, never throws") {
+    val poisoned =
+      """/* header spanning
+        |INSERT INTO t VALUES (99,'phantom');
+        |lines */
+        |INSERT INTO t VALUES (1,'real');
+        |""".stripMargin
+    val held = for (grid <- 1L to poisoned.length.toLong; window <- Seq(1L, 64L))
+      yield splitSound(poisoned, grid, window)
+    assert(held.contains(false) && held.contains(true))
+    assert(!splitSound(poisoned, poisoned.indexOf("INSERT").toLong, 64L))
+    // an unterminated one at EOF is lexed as the whole-file parse lexes it
+    val unterm = "INSERT INTO t VALUES (1,'a');\n/* trailing\nINSERT INTO t VALUES (2,'b');"
+    for (grid <- 1L to unterm.length.toLong) splitSound(unterm, grid, 8L)
+  }
+
+  test("split handshake: boundaries inside multi-byte characters, one statement over many ranges, empty ranges") {
+    val multiByte = (1 to 12).map(i => s"INSERT INTO t VALUES ($i,'日本語🙂β$i');").mkString("", "\n", "\n")
+    val big = "INSERT INTO t VALUES (0,'small');\nINSERT INTO t VALUES\n" +
+      (1 to 60).map(i => s"($i,'v$i')").mkString(",\n") + ";\nINSERT INTO t VALUES (61,'after');\n"
+    for (text <- Seq(multiByte, big); grid <- 1L to 50L; window <- Seq(1L, 9L, 4096L))
+      assert(splitSound(text, grid, window), s"grid=$grid window=$window text=\n$text")
+    // a grid finer than the lines leaves ranges with no line start
+    val (_, verdict, reported) = splitSweep(big, 3L, 16L)
+    assert(verdict.isEmpty && reported.flatten.contains(DumpSource.NoLine))
+  }
+
+  test("split handshake: a missing, doubled or unplaced report breaks the chain") {
+    import DumpSource.{chainBreak, NoLine, Spans}
+    assert(chainBreak(IndexedSeq(Seq(Spans(0, 10)), Seq(NoLine), Seq(Spans(10, 20))), 20L).isEmpty)
+    assert(chainBreak(IndexedSeq(Seq(Spans(0, 10)), Seq()), 20L).nonEmpty)
+    assert(chainBreak(IndexedSeq(Seq(Spans(0, 10)), Seq(Spans(10, 20), Spans(12, 20))), 20L).nonEmpty)
+    assert(chainBreak(IndexedSeq(Seq(Spans(0, -1)), Seq(Spans(10, 20))), 20L).nonEmpty)
+    assert(chainBreak(IndexedSeq(Seq(Spans(0, 10)), Seq(Spans(10, 15))), 20L).nonEmpty)
   }
 
   test("proven noise cannot mask a truncated multi-line INSERT head at the window end") {
@@ -183,9 +267,11 @@ class DumpChunkSpec extends AnyFunSuite {
       val whole = DumpSource.parseStatements(text).flatMap(_.rows).map(_.toSeq)
       val grids = Seq(1L, 2L + rnd.nextInt(9), 17L + rnd.nextInt(40),
         text.getBytes(UTF_8).length.toLong)
-      for (grid <- grids; window <- Seq(1L, 3L + rnd.nextInt(20), 4096L))
+      for (grid <- grids; window <- Seq(1L, 3L + rnd.nextInt(20), 4096L)) {
         assert(sweep(text, grid, window) === whole,
           s"round=$round grid=$grid window=$window text=\n$text")
+        assert(splitSound(text, grid, window), s"round=$round grid=$grid window=$window text=\n$text")
+      }
     }
   }
 }

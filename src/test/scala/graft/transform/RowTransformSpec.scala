@@ -94,6 +94,35 @@ class RowTransformSpec extends SparkSpec {
     assert(rows.map(_._2).toSeq === (1001L to 1020L))
   }
 
+  test("denseIds runs one job, and later actions read its blocks instead of the input") {
+    val sc = spark.sparkContext
+    val computed = sc.longAccumulator("denseIds input rows")
+    val input = spark.createDataFrame(
+      sc.parallelize(0 until 1000, 4).map { i => computed.add(1); org.apache.spark.sql.Row(i.toLong) },
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField(
+        "x", org.apache.spark.sql.types.LongType))))
+    val group = "dense-ids-one-job"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "denseIds job count")
+    try {
+      val ids = RowTransform.denseIds(input)
+      org.apache.spark.ListenerDrain(sc)
+      assert(jobs.get === 1)
+      assert(computed.sum === 1000L && ids.counts.sum === 1000L)
+      assert(ids.withIds("id", 0L).agg(sum("id"), sum("x")).head.toSeq === Seq(500500L, 499500L))
+      assert(computed.sum === 1000L, "a later action recomputed the input")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("denseIds reports explicit max, NULL count and the last NULL's position") {
     import spark.implicits._
     // partitions [5, NULL, 3] [] [NULL, 9, 4]
