@@ -93,6 +93,8 @@ object Bench {
     // lands in a sidecar FILE, and the LAST line printed is a compact
     // (<1 KB) JSON carrying the totals, guaranteed to fit any tail
     // window. Same timings, same methodology — output plumbing only.
+    // Both lines carry "metric":"total" with the same value; the
+    // trailer's "line":"compact" tells them apart.
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDECAR",
       "bench_last_queries.json")
     try java.nio.file.Files.writeString(
@@ -100,7 +102,7 @@ object Bench {
     catch { case t: Throwable =>
       System.err.println(s"sidecar write failed: $t") }
     val nErr = results.count(_._3.isDefined)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$nErr,"yardstick_s":{"before":$yardBefore,"after":$yardAfter},"queries_sidecar":"$sidecar","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","line":"compact","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$nErr,"yardstick_s":{"before":$yardBefore,"after":$yardAfter},"queries_sidecar":"$sidecar","sf":"$sfDir"}""")
     spark.stop()
     if (results.exists(_._3.isDefined)) sys.exit(1)
   }

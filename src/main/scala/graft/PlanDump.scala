@@ -11,31 +11,6 @@ package graft
   * and [[GraftSession.warmAll]] like Bench, so the dumped plans are the
   * benched plans.
   */
-/** Evidence hook for subtrees a query eagerly checkpoints (their plan
-  * is invisible in the registered query's own explain — it shows only
-  * `Scan ExistingRDD`): when `SPARK_GRAFT_SUBPLAN_DIR` is set, execute
-  * the df's own plan and write its formatted + post-AQE physical plan
-  * under that dir. A NO-OP (returns df untouched) in normal runs, so
-  * Bench/Verify never pay for it.
-  */
-object PlanProbe {
-  def dump(df: org.apache.spark.sql.DataFrame, name: String): org.apache.spark.sql.DataFrame = {
-    sys.env.get("SPARK_GRAFT_SUBPLAN_DIR").foreach { dir =>
-      val out = new StringBuilder
-      out ++= s"===== subplan $name — explain formatted =====\n"
-      out ++= df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      df.queryExecution.executedPlan.execute().count()
-      out ++= s"\n===== subplan $name — final plan after AQE =====\n"
-      out ++= df.queryExecution.executedPlan.toString
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, s"$name.txt"), out.toString)
-    }
-    df
-  }
-}
-
 object PlanDump {
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {

@@ -323,14 +323,11 @@ object CoreQueries {
     */
   private[graft] val SketchLgK = 12
 
-  /** Layout-GC catalog entry (the
-    * [[graft.operators.TextQueries.currentLayoutNames]] sibling): a
-    * precision change (`SketchLgK`) renames the dir — sketches at
-    * different precisions don't merge — so the old-precision tree is
-    * superseded exactly like an old version.
+  /** The layout's dir name: a precision change (`SketchLgK`) renames
+    * it — sketches at different precisions don't merge — so the
+    * old-precision tree is superseded exactly like an old version.
     */
-  private[graft] def currentLayoutNames: Seq[String] =
-    Seq(s"usersketch_v${UserSketchVersion}_k$SketchLgK")
+  private[graft] val UserSketchDir = s"usersketch_v${UserSketchVersion}_k$SketchLgK"
 
   /** The standing per-day distinct-users sketch relation — the
     * incremental-dashboard artifact behind [[sketchRollup]]: one row
@@ -344,7 +341,7 @@ object CoreQueries {
     */
   private[graft] def userSketchLayout(spark: SparkSession, sfDir: String): String = {
     val layout =
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/usersketch_v${UserSketchVersion}_k$SketchLgK"
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$UserSketchDir"
     graft.GraftSession.ensureLayout(spark, layout, s"$sfDir/events.parquet") {
       // a rebuild is a new corpus snapshot — void any streaming
       // maintenance batch marker AND any crashed compaction's staging
@@ -431,11 +428,8 @@ object CoreQueries {
     * ([[graft.GraftSession.compactSnapshot]]): an append landing
     * mid-compaction survives, a crash at any point replays safely.
     */
-  def sketchCompact(spark: SparkSession, sfDir: String): String =
-    sketchCompact(spark, sfDir, () => ())
-
-  private[graft] def sketchCompact(spark: SparkSession, sfDir: String,
-      beforeSwap: () => Unit): String = {
+  def sketchCompact(spark: SparkSession, sfDir: String,
+      beforeSwap: () => Unit = () => ()): String = {
     val daily = userSketchLayout(spark, sfDir)
     graft.GraftSession.compactSnapshot(spark, daily, (df, staged) => df
       .groupBy("day")
@@ -454,7 +448,7 @@ object CoreQueries {
     */
   def userSketchPresent(sfDir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/usersketch_v${UserSketchVersion}_k$SketchLgK/daily"))
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$UserSketchDir/daily"))
 
   /** Last applied maintenance batch id for the standing daily-sketch
     * layout, −1 = no streamed appends ever committed — the
@@ -464,7 +458,7 @@ object CoreQueries {
     */
   def sketchAppendLag(sfDir: String): Long =
     graft.GraftSession.lastBatchIn(
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/usersketch_v${UserSketchVersion}_k$SketchLgK")
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$UserSketchDir")
 
   /** Weekly distinct-users rollup SERVED from the standing daily
     * sketch relation — the mergeability story as a query: the weekly

@@ -281,7 +281,7 @@ object DedupQueries {
       .select("doc_a", "doc_b", "inter", "jaccard")
       .orderBy("doc_a", "doc_b")
     // materialize the (small) pair set, then release the shingle cache
-    val out = graft.PlanProbe.dump(pairs, "dedup_ngram_pairs").localCheckpoint(true)
+    val out = pairs.localCheckpoint(true)
     sh.unpersist(false)
     out
   }
@@ -338,7 +338,7 @@ object DedupQueries {
       .distinct()
       .groupBy("doc_id")
       .agg(aggCols.head, aggCols.tail: _*)
-  }.transform(graft.PlanProbe.dump(_, "minhash_signatures_distinct"))
+  }
 
   private def minhashShingleRel(spark: SparkSession, sfDir: String): DataFrame =
     table(spark, sfDir, "documents")
@@ -383,7 +383,6 @@ object DedupQueries {
       .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
       .transform(spreadByH)
       .distinct()
-      .transform(graft.PlanProbe.dump(_, "minhash_exact_shC"))
       .localCheckpoint(true)
     shC.as("a").join(shC.as("b"), "h")
       .where(col("a.doc_id") < col("b.doc_id"))
@@ -429,7 +428,7 @@ object DedupQueries {
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
     // materialize the (small) pair set, then release the signature cache
-    val out = graft.PlanProbe.dump(pairs, "dedup_minhash_pairs").localCheckpoint(true)
+    val out = pairs.localCheckpoint(true)
     docs.unpersist(false)
     out
   }
@@ -855,10 +854,7 @@ object DedupQueries {
   private[graft] def simhashHexCharsFor(nDocs: Long): Int =
     if (nDocs < SimhashWideTrigger) 14 else 15
 
-  /** Layout-GC catalog entry (the
-    * [[graft.operators.TextQueries.currentLayoutNames]] sibling). */
-  private[graft] def currentLayoutNames: Seq[String] =
-    Seq(s"simhash_v$SimhashLayoutVersion")
+  private[graft] val SimhashDir = s"simhash_v$SimhashLayoutVersion"
 
   /** The simhash fingerprint relation materialized ON DISK (8 bytes
     * per doc) — the "fingerprint index" five queries probe (simhash,
@@ -870,7 +866,7 @@ object DedupQueries {
     * version bumps or the source parquet is newer.
     */
   private[operators] def simhashLayout(spark: SparkSession, sfDir: String): String = {
-    val layout = s"${graft.GraftSession.fixtureRoot(sfDir)}/simhash_v$SimhashLayoutVersion"
+    val layout = s"${graft.GraftSession.fixtureRoot(sfDir)}/$SimhashDir"
     graft.GraftSession.ensureLayout(spark, layout, s"$sfDir/documents.parquet") {
       // a rebuild is a new corpus snapshot — void any streaming
       // maintenance batch marker from the previous one, a crashed
@@ -927,7 +923,7 @@ object DedupQueries {
     */
   def simhashPresent(sfDir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/simhash_v$SimhashLayoutVersion/fp/_SUCCESS"))
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$SimhashDir/fp/_SUCCESS"))
 
   /** Last applied maintenance batch id for the standing fingerprint
     * index, −1 = no streamed appends ever committed — the
@@ -937,7 +933,7 @@ object DedupQueries {
     */
   def simhashAppendLag(sfDir: String): Long =
     graft.GraftSession.lastBatchIn(
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/simhash_v$SimhashLayoutVersion")
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$SimhashDir")
 
   /** Deletion tombstones standing on the fingerprint index (hidden,
     * not yet physically deleted — [[simhashCompact]] retires them).
@@ -945,7 +941,7 @@ object DedupQueries {
     */
   def simhashPendingForgets(spark: SparkSession, sfDir: String): Long =
     graft.GraftSession.tombstonesIn(spark, java.nio.file.Paths.get(
-        s"${graft.GraftSession.fixtureRoot(sfDir)}/simhash_v$SimhashLayoutVersion",
+        s"${graft.GraftSession.fixtureRoot(sfDir)}/$SimhashDir",
         "tombstones"), "doc_id")
       .map(_.count()).getOrElse(0L)
 

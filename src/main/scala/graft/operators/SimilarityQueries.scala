@@ -175,6 +175,7 @@ object SimilarityQueries {
     * is never served to new probes.
     */
   private val LayoutVersion = 2
+  private[graft] val EmbByBucketDir = s"emb_by_bucket_v$LayoutVersion"
 
   /** Build (once per sf dir) the embeddings layout partitioned by LSH
     * bucket — the "index build" side of [[annLshBucketed]], amortized
@@ -184,7 +185,7 @@ object SimilarityQueries {
     * parquet is newer than the cached layout.
     */
   private[operators] def bucketedLayout(spark: SparkSession, sfDir: String): String = {
-    val layout = s"${graft.GraftSession.fixtureRoot(sfDir)}/emb_by_bucket_v$LayoutVersion"
+    val layout = s"${graft.GraftSession.fixtureRoot(sfDir)}/$EmbByBucketDir"
     val success = new java.io.File(s"$layout/_SUCCESS")
     val src = new java.io.File(s"$sfDir/embeddings.parquet")
     val stale = src.exists() && src.lastModified() > success.lastModified()
@@ -440,6 +441,7 @@ object SimilarityQueries {
   }
 
   private val IvfPqVersion = 1
+  private[graft] val IvfPqDir = s"ivfpq_v$IvfPqVersion"
   private val IvfPqProbes = 6 // coarse cells the PQ probe scans
 
   /** Build (once per sf dir) the IVF-PQ index: the codes relation
@@ -561,7 +563,7 @@ object SimilarityQueries {
     */
   def ivfPqPresent(sfDir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/ivfpq_v$IvfPqVersion/codes"))
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$IvfPqDir/codes"))
 
   /** Deletion tombstones standing on the ANN index (hidden, not yet
     * physically deleted — [[ivfPqCompact]] retires them). Direct path
@@ -569,21 +571,13 @@ object SimilarityQueries {
     */
   def ivfPqPendingForgets(spark: SparkSession, sfDir: String): Long =
     graft.GraftSession.tombstonesIn(spark, java.nio.file.Paths.get(
-        s"${graft.GraftSession.fixtureRoot(sfDir)}/ivfpq_v$IvfPqVersion",
+        s"${graft.GraftSession.fixtureRoot(sfDir)}/$IvfPqDir",
         "tombstones"), "vec_id")
       .map(_.count()).getOrElse(0L)
 
-  /** The knn sibling of [[ivfPqPendingForgets]] (at the session's
-    * probe radius — the layout a forget would land on).
-    */
-  def knnPendingForgets(spark: SparkSession, sfDir: String): Long =
-    graft.GraftSession.tombstonesIn(spark,
-        knnTombDir(knnLayoutPath(sfDir, knnProbeRadius(spark))), "vec_id")
-      .map(_.count()).getOrElse(0L)
-
   /** The radii a knn layout may legally stand at — BOTH are
-    * first-class standing layouts ([[currentLayoutNames]] keeps both
-    * current), so the governance dispatch must loop this list, never
+    * first-class standing layouts ([[graft.pipeline.StandingLayouts]]
+    * lists both), so the governance dispatch must loop this list, never
     * the session conf: an operator who switched
     * `spark.graft.knn.probeRadius` between sessions has layouts at
     * both radii, and a forget that only reached the session's radius
@@ -766,7 +760,7 @@ object SimilarityQueries {
   def forgetAnnSql: String = annIvfPqSqlOver("c.vec_id % 97 <> 0")
 
   private[operators] def ivfPqLayout(spark: SparkSession, sfDir: String): String = {
-    val layout = s"${graft.GraftSession.fixtureRoot(sfDir)}/ivfpq_v$IvfPqVersion"
+    val layout = s"${graft.GraftSession.fixtureRoot(sfDir)}/$IvfPqDir"
     val codesOk = new java.io.File(s"$layout/codes/_SUCCESS")
     val booksOk = new java.io.File(s"$layout/books/_SUCCESS")
     val src = new java.io.File(s"$sfDir/embeddings.parquet")
@@ -1455,16 +1449,6 @@ object SimilarityQueries {
   def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
     knnGraphScan(spark, sfDir, knnProbeRadius(spark))
 
-  /** Candidate-pair count of the ring at `radius` — the COST side of
-    * the recall/cost curve ([[graft.tools.RecallProbe]] publishes
-    * both per SF; SCALING.md commits the table).
-    */
-  private[graft] def knnCandidateCount(spark: SparkSession, sfDir: String,
-      radius: Int): Long = {
-    val (_, pairs) = knnRing(spark, sfDir, radius)
-    pairs.count()
-  }
-
   private[graft] def knnGraphScan(spark: SparkSession, sfDir: String,
       radius: Int): DataFrame = {
     val (_, pairs) = knnRing(spark, sfDir, radius)
@@ -1679,8 +1663,10 @@ object SimilarityQueries {
     t
   }
 
+  private[graft] val EvalRefDir = "evalref_v1"
+
   def evalRefPath(sfDir: String): String =
-    s"${graft.GraftSession.fixtureRoot(sfDir)}/evalref_v1"
+    s"${graft.GraftSession.fixtureRoot(sfDir)}/$EvalRefDir"
 
   /** Standing EVAL-REFERENCE layout: the held-out fold's vectors with
     * bucket + norm at a plane count derived from the EVAL count (the
@@ -1987,11 +1973,11 @@ object SimilarityQueries {
   private val KnnRecallCap = 4096L
 
   /** The knn graph's measured RECALL, driver-gated — the honesty
-    * number SCALING.md publishes ([[graft.tools.RecallProbe]]),
-    * re-derived identically in both engines: per audit vector
-    * (vec_id < [[KnnRecallCap]]) the EXACT top-[[KnnK]] neighbors by
-    * quantized dot (same NULL-exclusion contract and (score desc, id
-    * asc) tie rule as the graph), intersected with the ring-blocked
+    * number SCALING.md publishes (its recall/cost table, "Honesty
+    * number: knn-graph edge recall"), re-derived identically in both
+    * engines: per audit vector (vec_id < [[KnnRecallCap]]) the EXACT
+    * top-[[KnnK]] neighbors by quantized dot (same NULL-exclusion
+    * contract and (score desc, id asc) tie rule as the graph), intersected with the ring-blocked
     * top-k at probe radius 1 AND 2 — one row per radius with
     * integer-exact recall in ppm, so the recall/cost curve the
     * `probeRadius` conf buys is pinned by the oracle, not only by a
@@ -2159,22 +2145,16 @@ object SimilarityQueries {
   // edge generation instead of re-derived per query)
   private val KnnVersion = 4
 
-  /** Layout-GC catalog entry (the
-    * [[graft.operators.TextQueries.currentLayoutNames]] sibling).
-    * BOTH legal radii are current — the radius is an operator knob,
-    * not a version; a radius change orphans nothing a GC should take.
+  /** The layout's dir name at `radius`. BOTH legal radii are current
+    * layouts — the radius is an operator knob, not a version; a radius
+    * change orphans nothing a GC should take.
     */
-  private[graft] def currentLayoutNames: Seq[String] = Seq(
-    s"emb_by_bucket_v$LayoutVersion",
-    s"ivfpq_v$IvfPqVersion",
-    s"knn_v${KnnVersion}_r1",
-    s"knn_v${KnnVersion}_r2",
-    "evalref_v1")
+  private[graft] def knnDir(radius: Int): String = s"knn_v${KnnVersion}_r$radius"
   private[operators] val KnnDirBuckets = 64
 
   def knnLayoutPath(sfDir: String,
       radius: Int = KnnProbeRadiusDefault): String =
-    s"${graft.GraftSession.fixtureRoot(sfDir)}/knn_v${KnnVersion}_r$radius"
+    s"${graft.GraftSession.fixtureRoot(sfDir)}/${knnDir(radius)}"
 
   /** Directory fan-out key: the LSH bucket folded into a FIXED number
     * of partition dirs. Raw-bucket dirs would mean 2^p directories
@@ -2312,7 +2292,11 @@ object SimilarityQueries {
     * one-row `meta` (frozen plane count + build count).
     */
   private[operators] def buildKnn(spark: SparkSession, sfDir: String,
-      layout: String): Unit = {
+      layout: String): Unit =
+    buildKnn(spark, sfDir, layout, knnProbeRadius(spark))
+
+  private def buildKnn(spark: SparkSession, sfDir: String, layout: String,
+      radius: Int): Unit = {
     // a rebuild is a new corpus snapshot: void the maintenance
     // markers and any crashed compaction's staging trees (the
     // invIndexLayout rebuild discipline)
@@ -2339,7 +2323,6 @@ object SimilarityQueries {
       java.nio.file.Paths.get(s"$layout/tombstones"))
     java.nio.file.Files.deleteIfExists(knnHealedMarker(layout))
     knnDropDerived(layout) // derived relations follow the edge state
-    val radius = knnProbeRadius(spark)
     val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
     val p = knnPlanes(n)
     val s = knnSession(spark, n)
@@ -2371,10 +2354,17 @@ object SimilarityQueries {
       .write.partitionBy("kb").mode("overwrite").parquet(s"$layout/cedges")
   }
 
-  private[operators] def knnLayout(spark: SparkSession, sfDir: String): String = {
-    val layout = knnLayoutPath(sfDir, knnProbeRadius(spark))
+  private[operators] def knnLayout(spark: SparkSession, sfDir: String): String =
+    knnLayoutAtRadius(spark, sfDir, knnProbeRadius(spark))
+
+  /** The layout at an explicit `radius`, built or refreshed when
+    * missing or stale — at that radius, whatever the session conf.
+    */
+  private def knnLayoutAtRadius(spark: SparkSession, sfDir: String,
+      radius: Int): String = {
+    val layout = knnLayoutPath(sfDir, radius)
     graft.GraftSession.ensureLayout(spark, layout, s"$sfDir/embeddings.parquet") {
-      buildKnn(spark, sfDir, layout)
+      buildKnn(spark, sfDir, layout, radius)
     }
     layout
   }
@@ -2545,8 +2535,17 @@ object SimilarityQueries {
     * full rewrite; run a second (clean) compact to also defrag.
     * Served rows are invariant either way (spec-pinned).
     */
-  def knnCompact(spark: SparkSession, sfDir: String): String = {
-    val layout = knnLayout(spark, sfDir)
+  def knnCompact(spark: SparkSession, sfDir: String): String =
+    knnCompactAtRadius(spark, sfDir, knnProbeRadius(spark))
+
+  /** [[knnCompact]] of the layout at an explicit `radius` (the
+    * per-radius maintenance entry behind `Ctl index-compact knn`,
+    * which compacts every standing radius); a stale layout refreshes
+    * at its own radius first.
+    */
+  def knnCompactAtRadius(spark: SparkSession, sfDir: String,
+      radius: Int): String = {
+    val layout = knnLayoutAtRadius(spark, sfDir, radius)
     knnCompactAt(spark, layout)
     layout
   }

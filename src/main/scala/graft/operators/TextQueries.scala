@@ -1501,18 +1501,7 @@ object TextQueries {
     */
   private val InvIndexVersion = 2 // v2: content-stamp marker
 
-  /** This module's CURRENT standing-layout directory names — the
-    * layout-GC catalog entry ([[graft.pipeline.Governance.gcLayouts]]):
-    * a version bump here automatically marks the predecessor dirs
-    * superseded, because the names derive from the same constants the
-    * layout builders use.
-    */
-  private[graft] def currentLayoutNames: Seq[String] = Seq(
-    s"invindex_v$InvIndexVersion",
-    s"langstats_v$LangStatsVersion",
-    s"scriptstats_v$ScriptStatsVersion",
-    s"lenstats_v$LenStatsVersion",
-    s"tokstats_v$TokStatsVersion")
+  private[graft] val InvIndexDir = s"invindex_v$InvIndexVersion"
   private val InvIndexBuckets = 64
 
   /** CRC32-based term bucket — the one hash both the Spark builtin
@@ -1527,7 +1516,7 @@ object TextQueries {
 
   private[operators] def invIndexLayout(spark: SparkSession, sfDir: String): String = {
     val layout =
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/invindex_v$InvIndexVersion"
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$InvIndexDir"
     graft.GraftSession.ensureLayout(spark, layout, s"$sfDir/documents.parquet") {
       // a rebuild is a new corpus snapshot — any streaming-maintenance
       // batch marker from the previous snapshot is void, and so is a
@@ -1575,10 +1564,10 @@ object TextQueries {
     */
   def warmLayouts(spark: SparkSession, sfDir: String): Unit = {
     invIndexLayout(spark, sfDir)
-    langStatsSeed(spark, sfDir)
-    scriptStatsSeed(spark, sfDir)
-    lenStatsSeed(spark, sfDir)
-    tokStatsSeed(spark, sfDir)
+    langStats.seed(spark, sfDir)
+    scriptStats.seed(spark, sfDir)
+    lenStats.seed(spark, sfDir)
+    tokStats.seed(spark, sfDir)
     ()
   }
 
@@ -1753,7 +1742,7 @@ object TextQueries {
     */
   def invIndexPresent(sfDir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/invindex_v$InvIndexVersion/postings"))
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$InvIndexDir/postings"))
 
   /** Last applied maintenance batch id for the standing inverted
     * index, −1 = no streamed appends ever committed — the
@@ -1763,7 +1752,7 @@ object TextQueries {
     */
   def invIndexAppendLag(sfDir: String): Long =
     graft.GraftSession.lastBatchIn(
-      s"${graft.GraftSession.fixtureRoot(sfDir)}/invindex_v$InvIndexVersion")
+      s"${graft.GraftSession.fixtureRoot(sfDir)}/$InvIndexDir")
 
   /** Deletion tombstones standing on the index (hidden but not yet
     * physically deleted — the next [[invIndexCompact]] retires them).
@@ -1772,7 +1761,7 @@ object TextQueries {
     */
   def invIndexPendingForgets(spark: SparkSession, sfDir: String): Long =
     graft.GraftSession.tombstonesIn(spark, java.nio.file.Paths.get(
-        s"${graft.GraftSession.fixtureRoot(sfDir)}/invindex_v$InvIndexVersion",
+        s"${graft.GraftSession.fixtureRoot(sfDir)}/$InvIndexDir",
         "tombstones"), "doc_id")
       .map(_.count()).getOrElse(0L)
 
@@ -3049,13 +3038,11 @@ object TextQueries {
     // from five to two; the token total then folds out of uni
     // (sum of per-word counts IS the token count — same long, exactly)
     // instead of paying its own pass.
-    val uni = graft.PlanProbe.dump(
-      trTok.groupBy("w").agg(count(lit(1)).as("c1")), "lm_uni")
+    val uni = trTok.groupBy("w").agg(count(lit(1)).as("c1"))
       .localCheckpoint(true)
     val nTr = uni.agg(sum(col("c1")).as("n"))
-    val occ = graft.PlanProbe.dump(
-      bigramsOf(all).groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("k")),
-      "lm_occ").localCheckpoint(true)
+    val occ = bigramsOf(all).groupBy("doc_id", "w1", "w2")
+      .agg(count(lit(1)).as("k")).localCheckpoint(true)
     val big = occ.where(col("doc_id") % 2 === 0)
       .groupBy("w1", "w2").agg(sum("k").as("c2"))
     val s = when(col("c2").isNotNull,
@@ -3219,7 +3206,7 @@ object TextQueries {
     * rows per lang (counts are trivially mergeable — [[driftOf]] sums
     * them at read), seeded once per corpus stamp
     * ([[graft.GraftSession.ensureLayout]]) and maintained LIVE by
-    * [[langStatsAppend]]/[[langStatsAppendOnce]] with what the door
+    * [[DriftReference.append]]/[[DriftReference.appendOnce]] with what the door
     * PASSES — a 24/7 door must track the corpus as it legitimately
     * shifts, not compare against the day-one snapshot forever. At
     * 100 TB this is the point: the gate never rescans the corpus, it
@@ -3245,7 +3232,7 @@ object TextQueries {
     * REBUILD clears the appends with the seed (the documented reseed
     * contract: a new corpus snapshot voids maintenance history).
     */
-  private final class DriftReference(layoutName: String, key: String,
+  private[graft] final class DriftReference(val layoutName: String, key: String,
       countsOf: DataFrame => DataFrame) {
 
     private def root(sfDir: String): String =
@@ -3325,7 +3312,7 @@ object TextQueries {
     }
 
     def compact(spark: SparkSession, sfDir: String,
-        beforeSwap: () => Unit): String = {
+        beforeSwap: () => Unit = () => ()): String = {
       seed(spark, sfDir)
       val hist = histDir(sfDir)
       // the seed never fragments (one file, rewritten only at corpus
@@ -3353,14 +3340,14 @@ object TextQueries {
   /** Standing corpus language histogram (a few partial rows per lang;
     * [[driftCounts]] sums them at read).
     */
-  private val langStats = new DriftReference(s"langstats_v$LangStatsVersion",
+  private[graft] val langStats = new DriftReference(s"langstats_v$LangStatsVersion",
     "lang", _.groupBy("lang").agg(count(lit(1)).as("n")))
 
   /** The SECOND standing drift reference: the corpus's per-script
     * codepoint histogram (5 rows — bounded domain by construction,
     * exactly like the lang axis's |langs|).
     */
-  private val scriptStats = new DriftReference(
+  private[graft] val scriptStats = new DriftReference(
     s"scriptstats_v$ScriptStatsVersion", "script", scriptCountsOf)
 
   private val LenStatsVersion = 1
@@ -3383,7 +3370,7 @@ object TextQueries {
   /** The THIRD standing drift reference: the corpus's length-bucket
     * histogram ([[lenCountsOf]]).
     */
-  private val lenStats = new DriftReference(
+  private[graft] val lenStats = new DriftReference(
     s"lenstats_v$LenStatsVersion", "len_bucket", lenCountsOf)
 
   private val TokStatsVersion = 1
@@ -3419,172 +3406,8 @@ object TextQueries {
   /** The FOURTH standing drift reference: the corpus's mean-token-
     * length-bucket histogram ([[tokCountsOf]]).
     */
-  private val tokStats = new DriftReference(
+  private[graft] val tokStats = new DriftReference(
     s"tokstats_v$TokStatsVersion", "tok_bucket", tokCountsOf)
-
-  private[graft] def langStatsSeed(spark: SparkSession, sfDir: String): String =
-    langStats.seed(spark, sfDir)
-
-  /** The door's view of the standing reference: seed ∪ maintenance
-    * appends — what a 24/7 gate compares batches against.
-    */
-  private[graft] def langStatsRead(spark: SparkSession, sfDir: String): DataFrame =
-    langStats.read(spark, sfDir)
-
-  private[graft] def langStatsDir(sfDir: String): String = langStats.dir(sfDir)
-
-  /** Histogram maintenance — the [[graft.operators.DedupQueries
-    * .simhashAppend]] sibling for the drift door's standing reference:
-    * the PASSED batch's per-lang counts append as partial rows (counts
-    * merge by sum, so the append is O(batch) and the layout never
-    * rewrites).
-    */
-  private[graft] def langStatsAppend(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame): String =
-    langStats.append(spark, sfDir, passedDocs)
-
-  /** foreachBatch-idempotent histogram append (the `simhashAppendOnce`
-    * pattern): the layout-local `_LAST_BATCH` marker makes a replayed
-    * batchId a no-op instead of double-counted partials — counts,
-    * unlike fingerprint rows, are corrupted by duplication, so the
-    * door's inline maintenance rides THIS form too (one door per
-    * layout: the marker namespaces batchIds per checkpoint, exactly
-    * the `_LAST_BATCH` lifetime contract).
-    */
-  def langStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long): Boolean =
-    langStats.appendOnce(spark, sfDir, passedDocs, batchId)
-
-  /** The door's form: the idempotence marker lives where the CALLER's
-    * batchId namespace lives (inside the door's outDir), so the door
-    * checkpoint-reset contract clears it together with the door's own
-    * `_LAST_BATCH`.
-    */
-  private[graft] def langStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long,
-      marker: java.nio.file.Path): Boolean =
-    langStats.appendOnce(spark, sfDir, passedDocs, batchId, Some(marker))
-
-  /** SEMANTIC compaction for the histogram layout — the
-    * [[graft.operators.CoreQueries.sketchCompact]] sibling: N partial
-    * rows per lang collapse to one (counts sum), so steady-state size
-    * is |langs| however many batches the door ever passed. Verdicts
-    * invariant (spec-pinned); rides the shared snapshot/manifest swap
-    * engine, so a concurrent door append survives and a crash replays.
-    */
-  def langStatsCompact(spark: SparkSession, sfDir: String): String =
-    langStats.compact(spark, sfDir, () => ())
-
-  private[graft] def langStatsCompact(spark: SparkSession, sfDir: String,
-      beforeSwap: () => Unit): String =
-    langStats.compact(spark, sfDir, beforeSwap)
-
-  /** Whether a standing histogram exists for `sfDir` (the `Ctl
-    * index-compact` nothing-to-compact guard).
-    */
-  def langStatsPresent(sfDir: String): Boolean = langStats.present(sfDir)
-
-  private[graft] def scriptStatsSeed(spark: SparkSession, sfDir: String): String =
-    scriptStats.seed(spark, sfDir)
-
-  private[graft] def scriptStatsRead(spark: SparkSession, sfDir: String): DataFrame =
-    scriptStats.read(spark, sfDir)
-
-  /** [[langStatsAppend]]'s script-axis twin: the passed batch's
-    * per-script codepoint counts append as 5 mergeable partial rows.
-    */
-  private[graft] def scriptStatsAppend(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame): String =
-    scriptStats.append(spark, sfDir, passedDocs)
-
-  /** [[langStatsAppendOnce]]'s script-axis twin — same batchId-dedup
-    * rationale: counts are corrupted by replay duplication.
-    */
-  def scriptStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long): Boolean =
-    scriptStats.appendOnce(spark, sfDir, passedDocs, batchId)
-
-  private[graft] def scriptStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long,
-      marker: java.nio.file.Path): Boolean =
-    scriptStats.appendOnce(spark, sfDir, passedDocs, batchId, Some(marker))
-
-  /** Semantic compaction of the script histogram's partials
-    * ([[langStatsCompact]]'s twin — one row per script after).
-    */
-  def scriptStatsCompact(spark: SparkSession, sfDir: String): String =
-    scriptStats.compact(spark, sfDir, () => ())
-
-  private[graft] def scriptStatsCompact(spark: SparkSession, sfDir: String,
-      beforeSwap: () => Unit): String =
-    scriptStats.compact(spark, sfDir, beforeSwap)
-
-  def scriptStatsPresent(sfDir: String): Boolean = scriptStats.present(sfDir)
-
-  private[graft] def lenStatsSeed(spark: SparkSession, sfDir: String): String =
-    lenStats.seed(spark, sfDir)
-
-  private[graft] def lenStatsRead(spark: SparkSession, sfDir: String): DataFrame =
-    lenStats.read(spark, sfDir)
-
-  /** [[langStatsAppend]]'s length-axis twin: the passed batch's
-    * per-length-bucket doc counts append as mergeable partial rows.
-    */
-  private[graft] def lenStatsAppend(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame): String =
-    lenStats.append(spark, sfDir, passedDocs)
-
-  /** [[langStatsAppendOnce]]'s length-axis twin — same batchId-dedup
-    * rationale: counts are corrupted by replay duplication.
-    */
-  def lenStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long): Boolean =
-    lenStats.appendOnce(spark, sfDir, passedDocs, batchId)
-
-  private[graft] def lenStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long,
-      marker: java.nio.file.Path): Boolean =
-    lenStats.appendOnce(spark, sfDir, passedDocs, batchId, Some(marker))
-
-  /** Semantic compaction of the length histogram's partials
-    * ([[langStatsCompact]]'s twin — one row per bucket after).
-    */
-  def lenStatsCompact(spark: SparkSession, sfDir: String): String =
-    lenStats.compact(spark, sfDir, () => ())
-
-  private[graft] def lenStatsCompact(spark: SparkSession, sfDir: String,
-      beforeSwap: () => Unit): String =
-    lenStats.compact(spark, sfDir, beforeSwap)
-
-  def lenStatsPresent(sfDir: String): Boolean = lenStats.present(sfDir)
-
-  private[graft] def tokStatsSeed(spark: SparkSession, sfDir: String): String =
-    tokStats.seed(spark, sfDir)
-
-  private[graft] def tokStatsRead(spark: SparkSession, sfDir: String): DataFrame =
-    tokStats.read(spark, sfDir)
-
-  private[graft] def tokStatsAppend(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame): String =
-    tokStats.append(spark, sfDir, passedDocs)
-
-  def tokStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long): Boolean =
-    tokStats.appendOnce(spark, sfDir, passedDocs, batchId)
-
-  private[graft] def tokStatsAppendOnce(spark: SparkSession, sfDir: String,
-      passedDocs: DataFrame, batchId: Long,
-      marker: java.nio.file.Path): Boolean =
-    tokStats.appendOnce(spark, sfDir, passedDocs, batchId, Some(marker))
-
-  def tokStatsCompact(spark: SparkSession, sfDir: String): String =
-    tokStats.compact(spark, sfDir, () => ())
-
-  private[graft] def tokStatsCompact(spark: SparkSession, sfDir: String,
-      beforeSwap: () => Unit): String =
-    tokStats.compact(spark, sfDir, beforeSwap)
-
-  def tokStatsPresent(sfDir: String): Boolean = tokStats.present(sfDir)
 
   /** L1 distance (ppm) between a batch's language distribution and the
     * standing histogram — THE one drift computation (batch query,
@@ -3721,7 +3544,7 @@ object TextQueries {
     // recomputes the histogram from `documents`, and a maintaining
     // door's appends into the same sfDir would otherwise silently
     // diverge the two forever (r12 advice — parity contract)
-    val hist = spark.read.parquet(langStatsSeed(spark, sfDir))
+    val hist = spark.read.parquet(langStats.seed(spark, sfDir))
     val docs = table(spark, sfDir, "documents")
     // bounded driver value: the synthetic skewed batch's language
     val minLang = docs.agg(min(col("lang"))).head.getString(0)
@@ -3783,8 +3606,8 @@ object TextQueries {
   def driftAxes(spark: SparkSession, sfDir: String): DataFrame = {
     // seeds, not the maintained references — the parity contract (see
     // [[driftGate]])
-    val langHist = spark.read.parquet(langStatsSeed(spark, sfDir))
-    val scriptHist = spark.read.parquet(scriptStatsSeed(spark, sfDir))
+    val langHist = spark.read.parquet(langStats.seed(spark, sfDir))
+    val scriptHist = spark.read.parquet(scriptStats.seed(spark, sfDir))
     val docs = table(spark, sfDir, "documents")
     // bounded driver value: the synthetic skewed batch's language
     val minLang = docs.agg(min(col("lang"))).head.getString(0)
@@ -3925,9 +3748,9 @@ object TextQueries {
     * (the [[driftAxes]] AQE exchange-reuse shape).
     */
   def driftAxes3(spark: SparkSession, sfDir: String): DataFrame = {
-    val langHist = spark.read.parquet(langStatsSeed(spark, sfDir))
-    val scriptHist = spark.read.parquet(scriptStatsSeed(spark, sfDir))
-    val lenHist = spark.read.parquet(lenStatsSeed(spark, sfDir))
+    val langHist = spark.read.parquet(langStats.seed(spark, sfDir))
+    val scriptHist = spark.read.parquet(scriptStats.seed(spark, sfDir))
+    val lenHist = spark.read.parquet(lenStats.seed(spark, sfDir))
     val docs = table(spark, sfDir, "documents")
     def langLeg(batch: DataFrame): DataFrame =
       driftOf(batch, langHist)
@@ -4064,10 +3887,10 @@ object TextQueries {
     * domains.
     */
   def driftAxes4(spark: SparkSession, sfDir: String): DataFrame = {
-    val langHist = spark.read.parquet(langStatsSeed(spark, sfDir))
-    val scriptHist = spark.read.parquet(scriptStatsSeed(spark, sfDir))
-    val lenHist = spark.read.parquet(lenStatsSeed(spark, sfDir))
-    val tokHist = spark.read.parquet(tokStatsSeed(spark, sfDir))
+    val langHist = spark.read.parquet(langStats.seed(spark, sfDir))
+    val scriptHist = spark.read.parquet(scriptStats.seed(spark, sfDir))
+    val lenHist = spark.read.parquet(lenStats.seed(spark, sfDir))
+    val tokHist = spark.read.parquet(tokStats.seed(spark, sfDir))
     val docs = table(spark, sfDir, "documents")
     def langLeg(batch: DataFrame): DataFrame =
       driftOf(batch, langHist)

@@ -18,10 +18,9 @@ import java.nio.file.{Files, Paths}
   *                                          to the MyDumper layout (the
   *                                          dumpling direction, [[Export]])
   *   index-compact <sfDir> <which|all>      defragment the append-maintained
-  *                                          standing layouts (invindex,
-  *                                          simhash, ivfpq, knn, sketch,
-  *                                          langstats, scriptstats, lenstats,
-  *                                          tokstats, forgetlog); pending
+  *                                          standing layouts
+  *                                          ([[StandingLayouts]]; knn =
+  *                                          every standing radius); pending
   *                                          deletion tombstones apply
   *                                          PHYSICALLY here
   *   forget-log-dump <sfDir> <outDir>       export the GDPR audit ledger as
@@ -151,92 +150,17 @@ object Ctl {
     case "index-compact" :: sfDir :: which :: Nil =>
       // defragment the append-maintained standing layouts (every
       // append adds one file per touched partition dir; probe cost
-      // grows with file count): invindex = the positional inverted
-      // index's postings, ivfpq = the ANN codes, knn = the knn-graph
-      // vecs + edge partials (SEMANTIC top-k merge), sketch = the daily
-      // distinct-users partials (SEMANTIC merge), langstats /
-      // scriptstats / lenstats = the drift door's standing references
-      // (SEMANTIC merge of count partials), all = every layout.
-      // Safe under live maintenance appends (snapshot-isolated swap,
-      // GraftSession.compactSnapshot); the one thing NOT to run is a
-      // second index-compact of the same layout concurrently — both
-      // would claim the same staging sibling
-      val known = Set("invindex", "simhash", "ivfpq", "knn", "sketch",
-        "langstats", "scriptstats", "lenstats", "tokstats", "forgetlog",
-        "all")
-      if (!known(which)) {
-        System.err.println(s"index-compact: unknown index '$which' (${known.mkString("|")})")
+      // grows with file count) and apply pending deletion tombstones
+      // physically — one loop over the StandingLayouts registry, which
+      // never builds a missing layout
+      if (!StandingLayouts.compactVerbs.contains(which)) {
+        System.err.println(s"index-compact: unknown index '$which' " +
+          s"(${StandingLayouts.compactVerbs.mkString("|")})")
         sys.exit(2)
       }
-      // a MISSING layout reports "nothing to compact" instead of
-      // silently running a full index BUILD (a present-but-stale one
-      // refreshes first by design — current-and-defragmented is what
-      // the operator asked for)
       val spark = graft.GraftSession.session()
-      try {
-        if (which == "invindex" || which == "all") {
-          if (graft.operators.TextQueries.invIndexPresent(sfDir)) {
-            graft.operators.TextQueries.invIndexCompact(spark, sfDir)
-            println("compacted inverted-index postings")
-          } else println(s"no standing inverted index for $sfDir; nothing to compact")
-        }
-        if (which == "simhash" || which == "all") {
-          if (graft.operators.DedupQueries.simhashPresent(sfDir)) {
-            graft.operators.DedupQueries.simhashCompact(spark, sfDir)
-            println("compacted simhash fingerprints")
-          } else println(s"no standing simhash layout for $sfDir; nothing to compact")
-        }
-        if (which == "ivfpq" || which == "all") {
-          if (graft.operators.SimilarityQueries.ivfPqPresent(sfDir)) {
-            graft.operators.SimilarityQueries.ivfPqCompact(spark, sfDir)
-            println("compacted ivf-pq codes")
-          } else println(s"no standing ivf-pq layout for $sfDir; nothing to compact")
-        }
-        if (which == "knn" || which == "all") {
-          if (graft.operators.SimilarityQueries.knnPresent(sfDir)) {
-            graft.operators.SimilarityQueries.knnCompact(spark, sfDir)
-            println("compacted knn-graph vecs + edge partials")
-          } else println(s"no standing knn layout for $sfDir; nothing to compact")
-        }
-        if (which == "sketch" || which == "all") {
-          if (graft.operators.CoreQueries.userSketchPresent(sfDir)) {
-            graft.operators.CoreQueries.sketchCompact(spark, sfDir)
-            println("compacted daily sketch partials")
-          } else println(s"no standing sketch layout for $sfDir; nothing to compact")
-        }
-        if (which == "langstats" || which == "all") {
-          if (graft.operators.TextQueries.langStatsPresent(sfDir)) {
-            graft.operators.TextQueries.langStatsCompact(spark, sfDir)
-            println("compacted drift-door language histogram partials")
-          } else println(s"no standing language histogram for $sfDir; nothing to compact")
-        }
-        if (which == "scriptstats" || which == "all") {
-          if (graft.operators.TextQueries.scriptStatsPresent(sfDir)) {
-            graft.operators.TextQueries.scriptStatsCompact(spark, sfDir)
-            println("compacted drift-door script histogram partials")
-          } else println(s"no standing script histogram for $sfDir; nothing to compact")
-        }
-        if (which == "lenstats" || which == "all") {
-          if (graft.operators.TextQueries.lenStatsPresent(sfDir)) {
-            graft.operators.TextQueries.lenStatsCompact(spark, sfDir)
-            println("compacted drift-door length histogram partials")
-          } else println(s"no standing length histogram for $sfDir; nothing to compact")
-        }
-        if (which == "tokstats" || which == "all") {
-          if (graft.operators.TextQueries.tokStatsPresent(sfDir)) {
-            graft.operators.TextQueries.tokStatsCompact(spark, sfDir)
-            println("compacted drift-door token-length histogram partials")
-          } else println(s"no standing token-length histogram for $sfDir; nothing to compact")
-        }
-        if (which == "forgetlog" || which == "all") {
-          // the audit ledger fragments one file per deletion request;
-          // rows are bit-identical after (the ledger must survive
-          // forever — this is defrag, never expiry)
-          if (Governance.forgetLogCompact(spark, sfDir))
-            println("compacted forget audit ledger")
-          else println(s"no forget ledger for $sfDir; nothing to compact")
-        }
-      } finally spark.stop()
+      try StandingLayouts.compact(spark, sfDir, which, println)
+      finally spark.stop()
 
     case "forget-log-dump" :: sfDir :: outDir :: Nil =>
       // export the GDPR audit ledger as one header-carrying CSV (the
@@ -501,7 +425,7 @@ object Ctl {
       System.err.println(
         "usage: Ctl checkpoint-dump <stateDir> | checkpoint-remove <stateDir> <key|all> | " +
           "error-destroy <stateDir> <targetDir> <key> | compact <targetDir> <table> [n] | " +
-          "index-compact <sfDir> <invindex|simhash|ivfpq|knn|sketch|langstats|scriptstats|lenstats|tokstats|forgetlog|all> | " +
+          s"index-compact <sfDir> <${StandingLayouts.compactVerbs.mkString("|")}> | " +
           "index-forget <sfDir> <id,id,...> | " +
           "forget-fed <tag=sfDir[,...]> <id,id,...> | " +
           "forget-log-dump <sfDir> <outDir> | " +

@@ -3,15 +3,16 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The governance tier's shared dispatch — one deletion request
-  * propagated into every PRESENT per-document standing layout
-  * (inverted index + negative stats, simhash fingerprints, IVF-PQ
-  * codes, knn graph + top-k heal). The single body behind
-  * `Ctl index-forget` and the HTTP shim's `POST /forget`, so the
-  * layout set and the presence guards cannot drift between the two
-  * operational surfaces. Aggregate-statistics layouts (daily
-  * sketches, drift references) are out of scope by design: they hold
-  * count partials, not per-document rows — nothing to hide — and an
-  * erase-influence regime rebuilds them from the purged source.
+  * propagated into every PRESENT per-document standing layout of
+  * [[StandingLayouts]] (inverted index + negative stats, simhash
+  * fingerprints, IVF-PQ codes, knn graph + top-k heal at each radius).
+  * The single body behind `Ctl index-forget` and the HTTP shim's
+  * `POST /forget`, so the layout set and the presence guards cannot
+  * drift between the two operational surfaces. Aggregate-statistics
+  * layouts (daily sketches, drift references) are out of scope by
+  * design: they hold count partials, not per-document rows — nothing
+  * to hide — and an erase-influence regime rebuilds them from the
+  * purged source.
   */
 object Governance {
 
@@ -25,32 +26,8 @@ object Governance {
   def applyForget(spark: SparkSession, sfDir: String,
       ids: Seq[Long]): Seq[(String, String)] = {
     require(ids.nonEmpty, "forget request carries no ids")
-    val out = Seq.newBuilder[(String, String)]
-    if (graft.operators.TextQueries.invIndexPresent(sfDir)) {
-      val (dn, dt) = graft.operators.TextQueries.invIndexForget(spark, sfDir, ids)
-      out += "invindex" -> s"""{"docs":$dn,"tokens":$dt}"""
-    }
-    if (graft.operators.DedupQueries.simhashPresent(sfDir)) {
-      val dn = graft.operators.DedupQueries.simhashForget(spark, sfDir, ids)
-      out += "simhash" -> s"""{"docs":$dn}"""
-    }
-    if (graft.operators.SimilarityQueries.ivfPqPresent(sfDir)) {
-      val dn = graft.operators.SimilarityQueries.ivfPqForget(spark, sfDir, ids)
-      out += "ivfpq" -> s"""{"vectors":$dn}"""
-    }
-    // BOTH legal radii, not the session conf's: knn layouts at r1 AND
-    // r2 are first-class standing state (gcLayouts keeps both
-    // current), and "every PRESENT per-document layout" means a
-    // forget must reach each one that stands — dispatching only at
-    // the ambient radius would leave the other radius serving the
-    // forgotten vectors with no pending marker.
-    for (r <- graft.operators.SimilarityQueries.KnnLegalRadii
-        if graft.operators.SimilarityQueries.knnPresent(sfDir, r)) {
-      val dn = graft.operators.SimilarityQueries
-        .knnForgetAtRadius(spark, sfDir, r, ids)
-      out += s"knn_r$r" -> s"""{"vectors":$dn}"""
-    }
-    val applied = out.result()
+    val applied = for (l <- StandingLayouts.all; f <- l.forget
+        if l.present(sfDir)) yield l.name -> f(spark, sfDir, ids)
     logForget(spark, sfDir, ids, applied)
     applied
   }
@@ -129,14 +106,21 @@ object Governance {
     graft.GraftSession.stagedAppend(
       rows.toDF("ts", "cohort", "n_ids", "layout", "applied"),
       root.resolve(s".forget_log_stage_$tag"),
-      root.resolve("forget_log"), tag)
+      root.resolve(ForgetLogDir), tag)
   }
 
+  /** The ledger's dir name under the fixture root. */
+  private[pipeline] val ForgetLogDir = "forget_log"
+
+  private def forgetLogPath(sfDir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(graft.GraftSession.fixtureRoot(sfDir), ForgetLogDir)
+
+  private[pipeline] def forgetLogPresent(sfDir: String): Boolean =
+    graft.GraftSession.hasVisibleData(forgetLogPath(sfDir))
+
   /** The ledger, newest first — `GET /forget/log`'s relation. */
-  def forgetLog(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Paths.get(
-      graft.GraftSession.fixtureRoot(sfDir), "forget_log")
-    if (!graft.GraftSession.hasVisibleData(dir))
+  def forgetLog(spark: SparkSession, sfDir: String): DataFrame =
+    if (!forgetLogPresent(sfDir))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -150,10 +134,9 @@ object Governance {
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("applied",
             org.apache.spark.sql.types.StringType))))
-    else spark.read.parquet(dir.toString)
+    else spark.read.parquet(forgetLogPath(sfDir).toString)
       .orderBy(org.apache.spark.sql.functions.col("ts").desc,
         org.apache.spark.sql.functions.col("layout"))
-  }
 
   /** Compact the forget audit ledger (`Ctl index-compact <sf>
     * forgetlog`): every [[applyForget]] call staged-appends one small
@@ -169,10 +152,8 @@ object Governance {
     * at any realistic rate.
     */
   def forgetLogCompact(spark: SparkSession, sfDir: String): Boolean = {
-    val dir = java.nio.file.Paths.get(
-      graft.GraftSession.fixtureRoot(sfDir), "forget_log")
-    if (!graft.GraftSession.hasVisibleData(dir)) return false
-    graft.GraftSession.compactSnapshot(spark, dir.toString,
+    if (!forgetLogPresent(sfDir)) return false
+    graft.GraftSession.compactSnapshot(spark, forgetLogPath(sfDir).toString,
       (df, staged) =>
         df.coalesce(1).write.mode("overwrite").parquet(staged))
     true
@@ -243,17 +224,6 @@ object Governance {
     victims.map(_.toString)
   }
 
-  /** The layout-GC catalog: every CURRENT standing-layout directory
-    * name, collected from the same constants the builders use — a
-    * version bump anywhere automatically marks its predecessors
-    * superseded here.
-    */
-  private def currentLayoutNames: Set[String] =
-    (graft.operators.TextQueries.currentLayoutNames ++
-      graft.operators.DedupQueries.currentLayoutNames ++
-      graft.operators.SimilarityQueries.currentLayoutNames ++
-      graft.operators.CoreQueries.currentLayoutNames).toSet
-
   /** Garbage-collect SUPERSEDED standing-layout generations under a
     * corpus's fixture root — every version bump (or sketch-precision
     * change) orphans the predecessor's whole tree, which on a
@@ -275,7 +245,7 @@ object Governance {
       apply: Boolean = false): (Seq[String], Seq[String]) = {
     val root = java.nio.file.Paths.get(graft.GraftSession.fixtureRoot(sfDir))
     if (!java.nio.file.Files.isDirectory(root)) return (Nil, Nil)
-    val current = currentLayoutNames
+    val current = StandingLayouts.currentDirNames
     // family = the name up to its version suffix ("emb_by_bucket_v2"
     // → "emb_by_bucket", "knn_v4_r1" → "knn")
     val families = current.map(_.replaceAll("_v\\d.*$", ""))
@@ -337,23 +307,9 @@ object Governance {
     * the next `index-compact` retires them.
     */
   def pendingForgets(spark: SparkSession,
-      sfDir: String): Seq[(String, Long)] = {
-    val out = Seq.newBuilder[(String, Long)]
-    if (graft.operators.TextQueries.invIndexPresent(sfDir))
-      out += "invindex" ->
-        graft.operators.TextQueries.invIndexPendingForgets(spark, sfDir)
-    if (graft.operators.DedupQueries.simhashPresent(sfDir))
-      out += "simhash" ->
-        graft.operators.DedupQueries.simhashPendingForgets(spark, sfDir)
-    if (graft.operators.SimilarityQueries.ivfPqPresent(sfDir))
-      out += "ivfpq" ->
-        graft.operators.SimilarityQueries.ivfPqPendingForgets(spark, sfDir)
-    for (r <- graft.operators.SimilarityQueries.KnnLegalRadii
-        if graft.operators.SimilarityQueries.knnPresent(sfDir, r))
-      out += s"knn_r$r" -> graft.operators.SimilarityQueries
-        .knnPendingForgetsAtRadius(spark, sfDir, r)
-    out.result()
-  }
+      sfDir: String): Seq[(String, Long)] =
+    for (l <- StandingLayouts.all; p <- l.pending if l.present(sfDir))
+      yield l.name -> p(spark, sfDir)
 
   /** APPEND positions for every present BATCH-MAINTAINED standing
     * layout — the `GET /forget/lag` relation. Each maintain stream
@@ -374,21 +330,7 @@ object Governance {
     * eternally stale. Its staleness guards are the layout stamp
     * chain and the derivation claim.
     */
-  def appendLag(sfDir: String): Seq[(String, Long)] = {
-    val out = Seq.newBuilder[(String, Long)]
-    if (graft.operators.TextQueries.invIndexPresent(sfDir))
-      out += "invindex" ->
-        graft.operators.TextQueries.invIndexAppendLag(sfDir)
-    if (graft.operators.DedupQueries.simhashPresent(sfDir))
-      out += "simhash" ->
-        graft.operators.DedupQueries.simhashAppendLag(sfDir)
-    if (graft.operators.CoreQueries.userSketchPresent(sfDir))
-      out += "sketch" ->
-        graft.operators.CoreQueries.sketchAppendLag(sfDir)
-    for (r <- graft.operators.SimilarityQueries.KnnLegalRadii
-        if graft.operators.SimilarityQueries.knnPresent(sfDir, r))
-      out += s"knn_r$r" ->
-        graft.operators.SimilarityQueries.knnAppendLagAtRadius(sfDir, r)
-    out.result()
-  }
+  def appendLag(sfDir: String): Seq[(String, Long)] =
+    for (l <- StandingLayouts.all; lag <- l.appendLag if l.present(sfDir))
+      yield l.name -> lag(sfDir)
 }

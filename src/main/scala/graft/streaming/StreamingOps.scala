@@ -228,7 +228,7 @@ object StreamingOps {
           graft.GraftSession.appliedOnce(
             java.nio.file.Paths.get(outDir, "_LAST_BATCH"), batchId) {
             val spark = batch.sparkSession
-            val hist = graft.operators.TextQueries.langStatsRead(spark, sfDir)
+            val hist = graft.operators.TextQueries.langStats.read(spark, sfDir)
             graft.GraftSession.clearDeadAppend(outDir) // resurrection guard
             graft.operators.TextQueries.driftOf(batch.toDF(), hist)
               .withColumn("batch_id", lit(batchId))
@@ -268,7 +268,7 @@ object StreamingOps {
     * is a corpus-restamp decision, not a release side effect. The
     * appends ride batchId markers kept in the DOOR's own outDir
     * (`_LANGSTATS_LAST_BATCH` / `_SCRIPTSTATS_LAST_BATCH`, via
-    * [[graft.operators.TextQueries.langStatsAppendOnce]]'s explicit-
+    * [[graft.operators.TextQueries.DriftReference.appendOnce]]'s explicit-
     * marker form), so a replay of the door's own sink-then-marker
     * window cannot double-count a batch into the reference, AND the
     * checkpoint-reset contract (clear the door dir; batchIds restart)
@@ -330,7 +330,7 @@ object StreamingOps {
             java.nio.file.Paths.get(outDir, "_LAST_BATCH"), batchId) {
             val spark = batch.sparkSession
             import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-            val hist = graft.operators.TextQueries.langStatsRead(spark, sfDir)
+            val hist = graft.operators.TextQueries.langStats.read(spark, sfDir)
             // the batch feeds both the verdict and the routed write —
             // materialize once (the nearDupGateStream discipline)
             val b = batch.toDF().localCheckpoint()
@@ -344,13 +344,13 @@ object StreamingOps {
                 else { val s = leg; Some((s.getLong(1), s.getBoolean(2))) }
               val script = axisLeg(scriptAxis,
                 graft.operators.TextQueries.driftScriptOf(b,
-                  graft.operators.TextQueries.scriptStatsRead(spark, sfDir)).head())
+                  graft.operators.TextQueries.scriptStats.read(spark, sfDir)).head())
               val len = axisLeg(lenAxis,
                 graft.operators.TextQueries.driftLenOf(b,
-                  graft.operators.TextQueries.lenStatsRead(spark, sfDir)).head())
+                  graft.operators.TextQueries.lenStats.read(spark, sfDir)).head())
               val tok = axisLeg(tokAxis,
                 graft.operators.TextQueries.driftTokOf(b,
-                  graft.operators.TextQueries.tokStatsRead(spark, sfDir)).head())
+                  graft.operators.TextQueries.tokStats.read(spark, sfDir)).head())
               val drifted = langDrifted || script.exists(_._2) ||
                 len.exists(_._2) || tok.exists(_._2)
               val axisEntries: Seq[(String, Long, Boolean)] =
@@ -386,22 +386,17 @@ object StreamingOps {
               // reset door never silently no-ops its first N appends
               // against a stale layout-local high-water mark
               if (maintainHistogram && !drifted) {
-                graft.operators.TextQueries.langStatsAppendOnce(
-                  spark, sfDir, b, batchId,
-                  java.nio.file.Paths.get(outDir, "_LANGSTATS_LAST_BATCH"))
+                def maintain(ref: graft.operators.TextQueries.DriftReference,
+                    marker: String): Unit =
+                  ref.appendOnce(spark, sfDir, b, batchId,
+                    Some(java.nio.file.Paths.get(outDir, marker)))
+                maintain(graft.operators.TextQueries.langStats, "_LANGSTATS_LAST_BATCH")
                 if (scriptAxis)
-                  graft.operators.TextQueries.scriptStatsAppendOnce(
-                    spark, sfDir, b, batchId,
-                    java.nio.file.Paths.get(outDir, "_SCRIPTSTATS_LAST_BATCH"))
+                  maintain(graft.operators.TextQueries.scriptStats, "_SCRIPTSTATS_LAST_BATCH")
                 if (lenAxis)
-                  graft.operators.TextQueries.lenStatsAppendOnce(
-                    spark, sfDir, b, batchId,
-                    java.nio.file.Paths.get(outDir, "_LENSTATS_LAST_BATCH"))
+                  maintain(graft.operators.TextQueries.lenStats, "_LENSTATS_LAST_BATCH")
                 if (tokAxis)
-                  graft.operators.TextQueries.tokStatsAppendOnce(
-                    spark, sfDir, b, batchId,
-                    java.nio.file.Paths.get(outDir, "_TOKSTATS_LAST_BATCH"))
-                ()
+                  maintain(graft.operators.TextQueries.tokStats, "_TOKSTATS_LAST_BATCH")
               }
             } finally { b.unpersist(); () }
           }

@@ -230,20 +230,10 @@ object ScalingProbe {
         // warm the on-disk layouts for the fold dir (Bench's warm-up
         // discipline): a layout-backed probe must measure the probe,
         // not the one-time index build
-        try graft.operators.DedupQueries.warmLayouts(spark, dir.toString)
-        catch { case _: Throwable => }
-        try graft.operators.TextQueries.warmLayouts(spark, dir.toString)
-        catch { case _: Throwable => }
-        try graft.operators.SimilarityQueries.warmLayouts(spark, dir.toString)
-        catch { case _: Throwable => }
-        try graft.operators.CoreQueries.userSketchLayout(spark, dir.toString)
-        catch { case _: Throwable => }
-        try graft.operators.TextQueries.langStatsSeed(spark, dir.toString)
-        catch { case _: Throwable => }
-        try graft.operators.TextQueries.scriptStatsSeed(spark, dir.toString)
-        catch { case _: Throwable => }
-        try graft.operators.TextQueries.lenStatsSeed(spark, dir.toString)
-        catch { case _: Throwable => }
+        graft.operators.DedupQueries.warmLayouts(spark, dir.toString)
+        graft.operators.TextQueries.warmLayouts(spark, dir.toString)
+        graft.operators.SimilarityQueries.warmLayouts(spark, dir.toString)
+        graft.operators.CoreQueries.userSketchLayout(spark, dir.toString)
         k -> dir.toString
       }
     }.toMap
@@ -308,8 +298,7 @@ object ScalingProbe {
         // above-floor ladder's own cold dirs, never these
         if (keep(Seq("q_semdedup", "q_semdedup_hier",
             "q_knn_graph")).nonEmpty)
-          try graft.operators.SimilarityQueries.warmLayouts(spark, dir.toString)
-          catch { case _: Throwable => }
+          graft.operators.SimilarityQueries.warmLayouts(spark, dir.toString)
         k -> dir.toString
       }
     }.toMap
@@ -451,9 +440,7 @@ object ScalingProbe {
           (if (names.isEmpty) None
            else Some("knn_planes" -> ksAbove.map { k =>
             val meta = s"${graft.operators.SimilarityQueries.knnLayoutPath(aboveDirs(k))}/meta"
-            k -> (try spark.read.parquet(meta)
-                    .select("p").head.getInt(0).toDouble
-                  catch { case _: Throwable => -1d })
+            k -> spark.read.parquet(meta).select("p").head.getInt(0).toDouble
           }.toMap))
       }
 

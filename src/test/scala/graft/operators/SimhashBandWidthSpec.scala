@@ -67,7 +67,7 @@ class SimhashBandWidthSpec extends SparkSpec {
     assert(DedupQueries.dedupSimhashPairs(spark, dir).count() >= 0)
     val stamp = java.nio.file.Files.readString(java.nio.file.Paths.get(
       graft.GraftSession.fixtureRoot(dir),
-      DedupQueries.currentLayoutNames.head, "_BAND_HEX")).trim
+      DedupQueries.SimhashDir, "_BAND_HEX")).trim
     assert(stamp === "14")
   }
 }

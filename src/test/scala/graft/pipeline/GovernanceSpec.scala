@@ -174,5 +174,13 @@ class GovernanceSpec extends SparkSpec {
     val lag = Governance.appendLag(dir).toMap
     assert(lag === Map("knn_r1" -> 42L, "knn_r2" -> -1L),
       s"append lag must be visible per radius: $lag")
+
+    // `index-compact knn` retires the tombstones at EVERY standing
+    // radius, not only the session's — pending drains at both
+    assert(StandingLayouts.compact(spark, dir, "knn") ===
+      Seq("knn_r1", "knn_r2"))
+    val drained = Governance.pendingForgets(spark, dir).toMap
+    assert(drained === Map("knn_r1" -> 0L, "knn_r2" -> 0L),
+      s"after index-compact knn: $drained")
   }
 }

@@ -50,7 +50,7 @@ class DriftGateStreamSpec extends SparkSpec {
       "an all-one-language batch drifts by the full de share, flagged")
 
     // parity: the shared computation gives the same rows directly
-    val hist = TextQueries.langStatsRead(spark, corpusDir)
+    val hist = TextQueries.langStats.read(spark, corpusDir)
     val direct = TextQueries.driftOf(skewed.toDF(), hist).head()
     assert((direct.getLong(0), direct.getLong(1), direct.getBoolean(2))
       === ((10L, 1000000L, true)))
@@ -70,7 +70,7 @@ class DriftGateStreamSpec extends SparkSpec {
     val corpusDir = java.nio.file.Files.createTempDirectory("graft_drift0").toString
     Seq.empty[DriftDoc].toDF()
       .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    val hist = TextQueries.langStatsRead(spark, corpusDir)
+    val hist = TextQueries.langStats.read(spark, corpusDir)
     assert(hist.count() === 0)
     val batch = (1 to 10).map(i => DriftDoc(i.toLong, "x", "en"))
     val v = TextQueries.driftOf(batch.toDF(), hist).head()
@@ -211,7 +211,7 @@ class DriftGateStreamSpec extends SparkSpec {
   }
 
   private def mergedHist(corpusDir: String): Map[String, Long] =
-    TextQueries.langStatsRead(spark, corpusDir)
+    TextQueries.langStats.read(spark, corpusDir)
       .groupBy("lang").agg(sum("n").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
@@ -273,25 +273,25 @@ class DriftGateStreamSpec extends SparkSpec {
     // lang; verdicts invariant; an append landing mid-compaction
     // survives. (The seed never fragments — compaction is an appends
     // concern, seed rows stay untouched beside the compacted partials.)
-    assert(TextQueries.langStatsRead(spark, corpusDir).count() >
-      TextQueries.langStatsRead(spark, corpusDir)
+    assert(TextQueries.langStats.read(spark, corpusDir).count() >
+      TextQueries.langStats.read(spark, corpusDir)
         .select("lang").distinct().count(),
       "the door's appends must have produced multiple partials per lang")
     val probe = (200 to 209).map(i => DriftDoc(i.toLong, "x", "en"))
     val before = TextQueries.driftOf(probe.toDF(),
-      TextQueries.langStatsRead(spark, corpusDir)).head()
+      TextQueries.langStats.read(spark, corpusDir)).head()
     val late = Seq(DriftDoc(300, "g", "en"), DriftDoc(301, "h", "de"))
-    TextQueries.langStatsCompact(spark, corpusDir,
-      () => { TextQueries.langStatsAppend(spark, corpusDir, late.toDF()); () })
+    TextQueries.langStats.compact(spark, corpusDir,
+      () => { TextQueries.langStats.append(spark, corpusDir, late.toDF()); () })
     assert(mergedHist(corpusDir) ===
       expected2.map { case (l, n) => l -> (n + 1) },
       "the mid-compaction append must survive the swap")
     val after = TextQueries.driftOf(
-      probe.toDF(), TextQueries.langStatsRead(spark, corpusDir)).head()
+      probe.toDF(), TextQueries.langStats.read(spark, corpusDir)).head()
     assert(before.getLong(1) !== 0L)
     assert(after.getBoolean(2) === before.getBoolean(2))
-    TextQueries.langStatsCompact(spark, corpusDir)
-    assert(TextQueries.langStatsRead(spark, corpusDir).count() === 4,
+    TextQueries.langStats.compact(spark, corpusDir)
+    assert(TextQueries.langStats.read(spark, corpusDir).count() === 4,
       "a quiet compaction collapses to seed row + one compacted partial per lang")
     assert(mergedHist(corpusDir) === expected2.map { case (l, n) => l -> (n + 1) })
   }
@@ -302,8 +302,8 @@ class DriftGateStreamSpec extends SparkSpec {
     (1 to 10).map(i => DriftDoc(i.toLong, "t", "en"))
       .toDF().write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
     val batch = Seq(DriftDoc(50, "u", "en"), DriftDoc(51, "v", "fr")).toDF()
-    assert(TextQueries.langStatsAppendOnce(spark, corpusDir, batch, batchId = 0L))
-    assert(!TextQueries.langStatsAppendOnce(spark, corpusDir, batch, batchId = 0L),
+    assert(TextQueries.langStats.appendOnce(spark, corpusDir, batch, batchId = 0L))
+    assert(!TextQueries.langStats.appendOnce(spark, corpusDir, batch, batchId = 0L),
       "a replayed batch must not double the counts")
     assert(mergedHist(corpusDir) === Map("en" -> 11L, "fr" -> 1L))
 
@@ -313,10 +313,10 @@ class DriftGateStreamSpec extends SparkSpec {
     val doorMark = java.nio.file.Files.createTempDirectory("graft_hist_mark")
       .resolve("_LANGSTATS_LAST_BATCH")
     val one = Seq(DriftDoc(60, "w", "fr")).toDF()
-    assert(TextQueries.langStatsAppendOnce(spark, corpusDir, one, 0L, doorMark))
+    assert(TextQueries.langStats.appendOnce(spark, corpusDir, one, 0L, Some(doorMark)))
     assert(mergedHist(corpusDir) === Map("en" -> 11L, "fr" -> 2L))
     val layoutLocal = java.nio.file.Paths.get(
-      TextQueries.langStatsDir(corpusDir)).resolve("_LAST_BATCH")
+      TextQueries.langStats.dir(corpusDir)).resolve("_LAST_BATCH")
     assert(!java.nio.file.Files.exists(layoutLocal),
       "the superseded layout-local mark must not booby-trap a later switch back")
   }
@@ -332,7 +332,7 @@ class DriftGateStreamSpec extends SparkSpec {
     // the frozen reference: same seed corpus, nothing maintained
     val frozenDir = java.nio.file.Files.createTempDirectory("graft_frozen").toString
     seed.toDF().write.mode("overwrite").parquet(s"$frozenDir/documents.parquet")
-    val frozenHist = TextQueries.langStatsRead(spark, frozenDir)
+    val frozenHist = TextQueries.langStats.read(spark, frozenDir)
 
     // the maintained door: three passing 10%-fr batches ramp the
     // source in, then a 15%-fr batch arrives
@@ -402,7 +402,7 @@ class DriftGateStreamSpec extends SparkSpec {
     // maintenance feeds BOTH standing references with the passed batch
     assert(mergedHist(corpusDir) === Map("en" -> 21L, "de" -> 21L))
     def scriptHist(): Map[String, Long] =
-      TextQueries.scriptStatsRead(spark, corpusDir)
+      TextQueries.scriptStats.read(spark, corpusDir)
         .groupBy("script").agg(sum("n").as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // "alpha beta" = 9 latin codepoints × (40 seed + 2 passed) docs
@@ -410,13 +410,13 @@ class DriftGateStreamSpec extends SparkSpec {
       "digit" -> 0L, "other" -> 0L))
 
     // detached-append idempotence + semantic compaction, script twin
-    assert(TextQueries.scriptStatsAppendOnce(spark, corpusDir,
+    assert(TextQueries.scriptStats.appendOnce(spark, corpusDir,
       Seq(DriftDoc(200, "x 5", "en")).toDF(), batchId = 7L))
-    assert(!TextQueries.scriptStatsAppendOnce(spark, corpusDir,
+    assert(!TextQueries.scriptStats.appendOnce(spark, corpusDir,
       Seq(DriftDoc(200, "x 5", "en")).toDF(), batchId = 7L))
-    assert(TextQueries.scriptStatsPresent(corpusDir))
-    TextQueries.scriptStatsCompact(spark, corpusDir)
-    assert(TextQueries.scriptStatsRead(spark, corpusDir).count() === 10,
+    assert(TextQueries.scriptStats.present(corpusDir))
+    TextQueries.scriptStats.compact(spark, corpusDir)
+    assert(TextQueries.scriptStats.read(spark, corpusDir).count() === 10,
       "compaction collapses appends to one partial per script beside the 5 seed rows")
     assert(scriptHist()
       === Map("latin" -> 379L, "cjk" -> 0L, "cyr" -> 0L,
@@ -467,19 +467,19 @@ class DriftGateStreamSpec extends SparkSpec {
     // the passed batch fed the length reference; the quarantined one
     // did not (seed 20+20 docs + 4 passed, len buckets 2/3)
     def lenHist(): Map[Long, Long] =
-      TextQueries.lenStatsRead(spark, corpusDir)
+      TextQueries.lenStats.read(spark, corpusDir)
         .groupBy("len_bucket").agg(sum("n").as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lenHist() === Map(2L -> 22L, 3L -> 22L))
 
     // full maintenance symmetry: batchId-deduped detached append +
     // semantic compaction + presence probe, the lang/script twins
-    assert(TextQueries.lenStatsAppendOnce(spark, corpusDir,
+    assert(TextQueries.lenStats.appendOnce(spark, corpusDir,
       Seq(DriftDoc(300, "abc", "en")).toDF(), batchId = 9L))
-    assert(!TextQueries.lenStatsAppendOnce(spark, corpusDir,
+    assert(!TextQueries.lenStats.appendOnce(spark, corpusDir,
       Seq(DriftDoc(300, "abc", "en")).toDF(), batchId = 9L))
-    assert(TextQueries.lenStatsPresent(corpusDir))
-    TextQueries.lenStatsCompact(spark, corpusDir)
+    assert(TextQueries.lenStats.present(corpusDir))
+    TextQueries.lenStats.compact(spark, corpusDir)
     assert(lenHist() === Map(1L -> 1L, 2L -> 22L, 3L -> 22L))
   }
 
@@ -540,16 +540,16 @@ class DriftGateStreamSpec extends SparkSpec {
     // maintenance symmetry: the passed batch fed the tok reference,
     // batchId-deduped detached append + semantic compaction + probe
     def tokHist(): Map[Long, Long] =
-      TextQueries.tokStatsRead(spark, corpusDir)
+      TextQueries.tokStats.read(spark, corpusDir)
         .groupBy("tok_bucket").agg(sum("n").as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(tokHist() === Map(1L -> 44L)) // 40 seed + 4 passed
-    assert(TextQueries.tokStatsAppendOnce(spark, corpusDir,
+    assert(TextQueries.tokStats.appendOnce(spark, corpusDir,
       Seq(DriftDoc(300, "abcdefghijkl", "en")).toDF(), batchId = 9L))
-    assert(!TextQueries.tokStatsAppendOnce(spark, corpusDir,
+    assert(!TextQueries.tokStats.appendOnce(spark, corpusDir,
       Seq(DriftDoc(300, "abcdefghijkl", "en")).toDF(), batchId = 9L))
-    assert(TextQueries.tokStatsPresent(corpusDir))
-    TextQueries.tokStatsCompact(spark, corpusDir)
+    assert(TextQueries.tokStats.present(corpusDir))
+    TextQueries.tokStats.compact(spark, corpusDir)
     assert(tokHist() === Map(1L -> 44L, 2L -> 1L))
   }
 
@@ -646,14 +646,14 @@ class DriftGateStreamSpec extends SparkSpec {
       .toDF().write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
     assert(mergedHist(corpusDir) === Map("en" -> 10L)) // seed built
     val torn = java.nio.file.Paths.get(
-      TextQueries.langStatsDir(corpusDir), "hist", "_temporary", "0")
+      TextQueries.langStats.dir(corpusDir), "hist", "_temporary", "0")
     java.nio.file.Files.createDirectories(torn)
     java.nio.file.Files.writeString(torn.resolve("part-00000.parquet"),
       "torn partial, not parquet")
     assert(mergedHist(corpusDir) === Map("en" -> 10L),
       "an uncommitted append must read as absent, not crash the door")
     // a real append beside the litter still lands and reads
-    TextQueries.langStatsAppend(spark, corpusDir,
+    TextQueries.langStats.append(spark, corpusDir,
       Seq(DriftDoc(50, "u", "fr")).toDF())
     assert(mergedHist(corpusDir) === Map("en" -> 10L, "fr" -> 1L))
   }
