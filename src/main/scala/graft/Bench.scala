@@ -95,11 +95,16 @@ object Bench {
     // window. Same timings, same methodology — output plumbing only.
     // Both lines carry "metric":"total" with the same value; the
     // trailer's "line":"compact" tells them apart.
-    val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDECAR",
-      "bench_last_queries.json")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sidecar), fullLine + "\n")
-    catch { case t: Throwable =>
+    // A filtered run writes under target/: the repo-root file is the
+    // committed full-run artifact.
+    val sidecar = java.nio.file.Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_BENCH_SIDECAR",
+      if (only.isDefined) "target/bench_last_queries.json"
+      else "bench_last_queries.json")).toAbsolutePath
+    try {
+      java.nio.file.Files.createDirectories(sidecar.getParent)
+      java.nio.file.Files.writeString(sidecar, fullLine + "\n")
+    } catch { case t: Throwable =>
       System.err.println(s"sidecar write failed: $t") }
     val nErr = results.count(_._3.isDefined)
     println(s"""{"metric":"total","line":"compact","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$nErr,"yardstick_s":{"before":$yardBefore,"after":$yardAfter},"queries_sidecar":"$sidecar","sf":"$sfDir"}""")

@@ -104,44 +104,19 @@ object GraftSession {
       finally walk.close() // walk streams hold directory handles
     }
 
-  /** Pre-append hygiene for every append-maintained layout and
-    * streaming sink dir: clear a DEAD job's `_temporary` tree before
-    * writing. Hadoop's FileOutputCommitter merges any committed-task
-    * files it finds under `<dir>/_temporary/0` into the NEXT job's
-    * commit — so a crashed append's partials would resurrect inside a
-    * later append's commit, materializing rows whose batch the
-    * idempotence marker never recorded (under at-least-once replay,
-    * a silent double count; for counting layouts like the drift
-    * histograms, a silently skewed reference). Safe under the
-    * documented ONE-writer-per-layout contract: any `_temporary`
-    * present when a new append starts is necessarily a dead job's.
-    */
-  def clearDeadAppend(dir: String): Unit =
-    deleteRec(java.nio.file.Paths.get(dir, "_temporary"))
-
   /** The deletion tombstones standing in `dir` — ids a `*Forget` call
     * hid from a standing layout's serving reads — or None in the
-    * normal no-deletions state (the fast path: one directory listing,
-    * no parquet read). Deletion requests are people-scale, so the
+    * normal no-deletions state (the fast path: one directory walk, no
+    * parquet read). Deletion requests are people-scale, so the
     * relation is bounded and broadcastable by construction — every
     * serving hook applies it as one broadcast anti-join. Shared by
     * the invindex/simhash/ivfpq/knn forget paths so the
     * dir-has-data-files probe cannot drift between layouts.
     */
   def tombstonesIn(spark: SparkSession, dir: java.nio.file.Path,
-      idCol: String): Option[DataFrame] = {
-    val hasRows = java.nio.file.Files.isDirectory(dir) && {
-      val l = java.nio.file.Files.list(dir)
-      try l.filter(p =>
-        java.nio.file.Files.isRegularFile(p) && {
-          val fn = p.getFileName.toString
-          !fn.startsWith("_") && !fn.startsWith(".")
-        }).findFirst().isPresent
-      finally l.close()
-    }
-    if (!hasRows) None
+      idCol: String): Option[DataFrame] =
+    if (!hasVisibleData(dir)) None
     else Some(spark.read.parquet(dir.toString).select(idCol).distinct())
-  }
 
   /** Last committed append batch id recorded in a layout's
     * `_LAST_BATCH` marker, or −1 when the marker does not exist (no
@@ -390,30 +365,81 @@ object GraftSession {
     * claim (a crashed attempt's leftover refuses loudly with the
     * delete-to-retry contract) while distinct cohorts never collide.
     */
-  def forgetTag(ids: Seq[Long]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(ids.distinct.sorted.mkString(",").getBytes("UTF-8"))
-    "forget-" + h.take(6).map(b => f"$b%02x").mkString
+  def forgetTag(ids: Seq[Long]): String =
+    "forget-" + hex6(ids.distinct.sorted.mkString(","))
+
+  private def hex6(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
+
+  /** THE commit path into every append-maintained directory (standing
+    * layouts, tombstone and delta relations, streaming sink dirs):
+    * each leg's writer materializes its rows into a private stage
+    * `<root>/.<kind>_stage_<name>`, EVERY leg stages before ANY moves,
+    * and then each leg's visible data files move, in leg order, into
+    * that leg's live dir ([[moveStagedInto]]: partition subdirs kept,
+    * `append-<tag>-<i>.parquet` names). No Spark job ever writes a
+    * live dir, so no `_temporary` appears there and N concurrent
+    * committers are legal — beside each other, a compaction, or a
+    * peer's crashed Hadoop write.
+    *  - `tag = Some(t)`: the TAGGED commit. The stage claim refuses a
+    *    live or crashed attempt of `t` (delete-to-retry), and the move
+    *    sweeps exactly `t`'s earlier files, so a retry lands once.
+    *  - `tag = None`: each call gets a fresh name and sweeps nothing —
+    *    a door reset that restarts batch ids can never delete
+    *    committed rows. Inside an [[appliedOnce]] body the STAGE name
+    *    is the marker's own (one writer per marker), cleared before
+    *    the claim: a crashed once-append never blocks the next batch,
+    *    and no other writer's stage is ever touched.
+    * A failure while staging deletes the stage (nothing escaped); one
+    * after the moves began keeps it — some legs may be live, so the
+    * next tagged attempt must refuse until someone looks.
+    */
+  def commitAppend(root: String, tag: Option[String] = None,
+      kind: String = "append")(
+      legs: (String, org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])*): Unit = {
+    tag.foreach(t => require(t.nonEmpty &&
+      t.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
+      s"tag must be [A-Za-z0-9_-]+, got '$t'"))
+    val lives = legs.map(l => java.nio.file.Paths.get(l._1))
+    require(lives.map(_.getFileName).distinct.size == lives.size,
+      s"commit legs need distinct dir names: ${lives.mkString(", ")}")
+    val once = if (tag.isEmpty) Option(onceStage.get) else None
+    val fileTag = tag.getOrElse(java.util.UUID.randomUUID.toString.replace("-", ""))
+    val stage = java.nio.file.Paths.get(root,
+      s".${kind}_stage_${once.getOrElse(fileTag)}")
+    java.nio.file.Files.createDirectories(stage.getParent)
+    once.foreach(_ => deleteRec(stage))
+    claimStage(stage, s"the $kind stage '${stage.getFileName}'")
+    val staged =
+      try legs.zip(lives).map { case ((_, w), live) =>
+        val d = stage.resolve(live.getFileName)
+        w.parquet(d.toString)
+        d
+      }
+      catch { case e: Throwable => deleteRec(stage); throw e }
+    staged.zip(lives).foreach { case (d, live) =>
+      moveStagedInto(d, live, fileTag)
+      afterLegMoveSeam(live)
+    }
+    deleteRec(stage)
   }
 
-  /** One-relation staged append: write `df` under a claimed stage dir,
-    * then MOVE its files into `liveDir` under tag-deterministic names
-    * ([[moveStagedInto]]) — no `_temporary` ever appears in the live
-    * dir, which is what makes the write legal BESIDE a plain appender
-    * or any number of staged ones (two plain appenders share one
-    * committer tree; a file move does not). The forget tier's
-    * tombstone writes ride this so a deletion request never has to
-    * wait for a live maintenance stream.
+  /** Test seam: runs after each [[commitAppend]] leg has moved in —
+    * the window between two legs' moves.
     */
-  def stagedAppend(df: DataFrame, stage: java.nio.file.Path,
-      liveDir: java.nio.file.Path, jobTag: String): Unit = {
-    claimStage(stage, s"a staged write tagged '$jobTag'")
-    try {
-      val data = stage.resolve("data")
-      df.coalesce(1).write.mode("overwrite").parquet(data.toString)
-      moveStagedInto(data, liveDir, jobTag)
-    } finally deleteRec(stage)
-  }
+  private[graft] var afterLegMoveSeam: java.nio.file.Path => Unit = _ => ()
+
+  /** The stage name a [[commitAppend]] inside this thread's innermost
+    * [[appliedOnce]] body uses (null outside one).
+    */
+  private val onceStage = new ThreadLocal[String]
+
+  /** [[appliedOnce]]'s stage name for `marker` — `once-` and a hash of
+    * the marker's absolute path, so two markers never share a stage.
+    */
+  private[graft] def onceStageName(marker: java.nio.file.Path): String =
+    "once-" + hex6(marker.toAbsolutePath.normalize.toString)
 
   /** The shared forget-gate fixture: a COPY of the corpus tables the
     * registered `q_forget_*` queries mutate (tombstones + standing
@@ -607,19 +633,13 @@ object GraftSession {
     finally walk.close()
   }
 
-  /** Relative paths of the parquet data files under `root` — the
-    * [[visibleRel]] rule, matching what a Spark scan lists: reading a
-    * `_temporary` file races the committer's rename, and deleting it
-    * in the compaction swap would duplicate or kill the append.
-    */
-  /** Job-scoped staging, the MOVE leg (shared by every
-    * `*AppendStaged`): bring a staged parquet dir's data files into
-    * the live dir under deterministic `append-<jobTag>-<i>` names,
-    * sweeping same-prefix leftovers first so a retried crashed
-    * attempt lands exactly once. Concurrent movers with distinct tags
-    * touch distinct names and no shared `_temporary` exists — the
-    * property that makes N simultaneous appenders legal where the
-    * plain append path is one-writer.
+  /** The MOVE leg of [[commitAppend]]: bring a staged parquet tree's
+    * data files into the live dir under deterministic
+    * `append-<jobTag>-<i>` names — partition subdirs (`col=value`)
+    * map onto the live dir's, recursively — sweeping the tag's own
+    * leftovers in each live dir first so a retried crashed attempt
+    * lands exactly once. Movers with distinct tags touch distinct
+    * names.
     *
     * The retry sweep matches EXACTLY `append-<jobTag>-<digits>
     * .parquet` (tag regex-escaped), never a bare name prefix: tags
@@ -637,18 +657,23 @@ object GraftSession {
     try sweep.filter(p => own.matcher(p.getFileName.toString).matches())
       .forEach(p => java.nio.file.Files.deleteIfExists(p))
     finally sweep.close()
-    var i = 0
-    val fs = java.nio.file.Files.list(stagedDir)
-    try fs.filter { p =>
-      val fn = p.getFileName.toString
-      java.nio.file.Files.isRegularFile(p) &&
-        !fn.startsWith("_") && !fn.startsWith(".")
-    }.forEach { p =>
-      java.nio.file.Files.move(p,
-        liveDir.resolve(s"append-$jobTag-$i.parquet"))
-      i += 1
+    val visible = {
+      val l = java.nio.file.Files.list(stagedDir)
+      try {
+        val b = Seq.newBuilder[java.nio.file.Path]
+        l.forEach { p =>
+          val fn = p.getFileName.toString
+          if (!fn.startsWith("_") && !fn.startsWith(".")) b += p
+        }
+        b.result()
+      } finally l.close()
     }
-    finally fs.close()
+    val (dirs, files) = visible.partition(java.nio.file.Files.isDirectory(_))
+    files.zipWithIndex.foreach { case (p, i) =>
+      java.nio.file.Files.move(p, liveDir.resolve(s"append-$jobTag-$i.parquet"))
+    }
+    dirs.foreach(d =>
+      moveStagedInto(d, liveDir.resolve(d.getFileName.toString), jobTag))
   }
 
   /** The staging CLAIM (atomic createDirectory; the quarantineRelease
@@ -665,6 +690,11 @@ object GraftSession {
             s"$stage); delete that directory to retry")
     }
 
+  /** Relative paths of the parquet data files under `root` — the
+    * [[visibleRel]] rule, matching what a Spark scan lists: reading a
+    * `_temporary` file races the committer's rename, and deleting it
+    * in the compaction swap would duplicate or kill the append.
+    */
   private def dataFilesUnder(root: java.nio.file.Path): Seq[String] = {
     if (!java.nio.file.Files.exists(root)) return Nil
     val walk = java.nio.file.Files.walk(root)
@@ -734,6 +764,10 @@ object GraftSession {
     * would trade duplicates for silent LOSS, which is worse); callers
     * that need exactly-once across it should dedup on batch_id at
     * read time or compact with a batch_id-keyed overwrite.
+    *
+    * The marker is what needs ONE writer: every [[commitAppend]] the
+    * body makes stages under this marker's own name, which a crashed
+    * earlier attempt may have left and which the next attempt clears.
     */
   def appliedOnce(marker: java.nio.file.Path, batchId: Long)(
       body: => Unit): Boolean = {
@@ -742,7 +776,9 @@ object GraftSession {
       catch { case _: Exception => Long.MinValue }
     if (batchId <= last) false
     else {
-      body
+      val outer = onceStage.get
+      onceStage.set(onceStageName(marker))
+      try body finally onceStage.set(outer)
       java.nio.file.Files.createDirectories(marker.getParent)
       val tmp = marker.resolveSibling(marker.getFileName.toString + ".tmp")
       java.nio.file.Files.writeString(tmp, batchId.toString)

@@ -116,11 +116,7 @@ object Main {
         "no source: pass --config or -d <dump dir>"))
       val tgt = targetOverride.getOrElse(sys.error(
         "no target: pass --config, --sorted-kv-dir or --target-dir"))
-      // maxError = 0: the CLI is the reference binary's surface, which
-      // aborts on bad rows — matching TomlConfig.load's default, so the
-      // no-config path can't silently null-out rows the config path
-      // would refuse (the library Config default stays permissive)
-      TomlConfig.Loaded(Ingest.Config(src, tgt, maxError = 0L),
+      TomlConfig.Loaded(Ingest.Config(src, tgt, maxError = Ingest.TaskMaxError),
         serverMode = false,
         statusAddr = None, checksum = "required", ignored = Nil)
     }

@@ -3,7 +3,6 @@ package graft.functions
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
@@ -219,18 +218,5 @@ object MysqlAes {
       case _: javax.crypto.BadPaddingException |
           _: javax.crypto.IllegalBlockSizeException if !encrypt => null
     }
-  }
-
-  /** Column wrappers mirroring the SQL functions. */
-  def aesEncrypt(in: Column, key: Column, mode: Column, iv: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(MysqlAes(shims.expression(in), shims.expression(key),
-      shims.expression(mode), shims.expression(iv), encrypt = true))
-  }
-
-  def aesDecrypt(in: Column, key: Column, mode: Column, iv: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(MysqlAes(shims.expression(in), shims.expression(key),
-      shims.expression(mode), shims.expression(iv), encrypt = false))
   }
 }

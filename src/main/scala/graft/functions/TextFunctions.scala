@@ -43,10 +43,6 @@ object TextFunctions {
   def md5LongComposed(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 14), 16, 10).cast(LongType)
 
-  /** Seeded variant: hash family member i (for MinHash). */
-  def md5LongSeeded(i: Int, c: Column): Column =
-    md5Long(concat(lit(s"$i:"), c))
-
   /** Driver-side twin of [[md5Long]], for deterministic constants
     * (LSH hyperplanes) computed once and broadcast as literals.
     */

@@ -367,55 +367,37 @@ object CoreQueries {
       .agg(hll_sketch_agg(col("user_id"), lit(SketchLgK)).as("sk"),
         count(lit(1)).as("n_events"))
 
-  /** foreachBatch-idempotent partial-sketch append (the
-    * [[graft.operators.DedupQueries.simhashAppendOnce]] pattern).
-    * Unlike the posting/fingerprint appends there is no "new ids only"
-    * caller contract on the USERS: HLL distinct counts are
-    * duplicate-insensitive, so re-seen user_ids across batches merge
-    * away exactly — only the event ROWS must be disjoint (they sum
-    * into the exact n_events anchor), which the batchId marker
-    * guarantees for an at-least-once replay.
+  /** Partial-sketch append: partials are SUMMABLE state by
+    * construction (register-wise HLL union + summed exact n_events
+    * anchors), so through [[graft.GraftSession.commitAppend]] (`tag` =
+    * its tagged form) N simultaneous appenders — say, per-region
+    * event feeds — are legal. Unlike the posting/fingerprint appends
+    * there is no "new ids only" caller contract on the USERS: HLL
+    * distinct counts are duplicate-insensitive, so re-seen user_ids
+    * across batches merge away exactly — only the event ROWS must be
+    * disjoint across batches (they sum into the exact n_events
+    * anchor).
     */
-  def sketchAppendOnce(spark: SparkSession, sfDir: String,
-      newEvents: DataFrame, batchId: Long): Boolean = {
+  def sketchAppend(spark: SparkSession, sfDir: String,
+      newEvents: DataFrame, tag: Option[String] = None): String = {
     val daily = userSketchLayout(spark, sfDir)
-    graft.GraftSession.appliedOnce(
-      java.nio.file.Paths.get(daily).getParent.resolve("_LAST_BATCH"), batchId) {
-      graft.GraftSession.clearDeadAppend(daily) // resurrection guard
-      sketchPartials(newEvents).write.mode("append").parquet(daily)
-    }
-  }
-
-  /** CONCURRENT-writer partial-sketch append — the
-    * [[graft.operators.TextQueries.invIndexAppendStaged]] sibling for
-    * the sketch tier: partials are SUMMABLE state by construction
-    * (register-wise HLL union + summed exact n_events anchors), so N
-    * simultaneous appenders — say, per-region event feeds — are legal
-    * once each stages under its own claimed dir and moves files in
-    * under deterministic names. No stats leg, no partition dirs: the
-    * claim + stage + move core over the flat `daily` dir. Caller
-    * contract: unique jobTag per batch, event rows disjoint across
-    * batches (they sum into the exact anchor; user_ids may repeat —
-    * HLL is duplicate-insensitive), base layout fresh.
-    */
-  def sketchAppendStaged(spark: SparkSession, sfDir: String,
-      newEvents: DataFrame, jobTag: String): String = {
-    require(jobTag.nonEmpty &&
-      jobTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"jobTag must be [A-Za-z0-9_-]+, got '$jobTag'")
-    val daily = userSketchLayout(spark, sfDir)
-    val stage = java.nio.file.Paths.get(daily).getParent
-      .resolve(s".append_stage_$jobTag")
-    graft.GraftSession.claimStage(stage, s"an append tagged '$jobTag'")
-    try {
-      val staged = stage.resolve("daily")
-      sketchPartials(newEvents)
-        .write.mode("overwrite").parquet(staged.toString)
-      graft.GraftSession.moveStagedInto(staged,
-        java.nio.file.Paths.get(daily), jobTag)
-    } finally graft.GraftSession.deleteRec(stage)
+    graft.GraftSession.commitAppend(
+      java.nio.file.Paths.get(daily).getParent.toString, tag)(
+      daily -> sketchPartials(newEvents).write)
     daily
   }
+
+  /** foreachBatch-idempotent [[sketchAppend]] (the
+    * [[graft.operators.DedupQueries.simhashAppendOnce]] pattern): the
+    * batchId marker keeps an at-least-once replay from summing a
+    * batch's event rows twice.
+    */
+  def sketchAppendOnce(spark: SparkSession, sfDir: String,
+      newEvents: DataFrame, batchId: Long): Boolean =
+    graft.GraftSession.appliedOnce(java.nio.file.Paths.get(
+      userSketchLayout(spark, sfDir)).getParent.resolve("_LAST_BATCH"), batchId) {
+      sketchAppend(spark, sfDir, newEvents)
+    }
 
   /** SEMANTIC compaction for the sketch layout — the
     * [[graft.operators.TextQueries.invIndexCompact]] sibling, but

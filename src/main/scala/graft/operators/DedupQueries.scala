@@ -979,10 +979,10 @@ object DedupQueries {
       // staged + moved (no `_temporary` in the live dir): legal beside
       // the live fingerprint maintenance stream; concurrent forgets
       // with distinct cohorts get distinct claim tags
-      val tag = graft.GraftSession.forgetTag(ids)
-      graft.GraftSession.stagedAppend(ids.distinct.toDF("doc_id"),
-        java.nio.file.Paths.get(fp).getParent.resolve(s".forget_stage_$tag"),
-        simhashTombDir(fp), tag)
+      graft.GraftSession.commitAppend(
+        java.nio.file.Paths.get(fp).getParent.toString,
+        Some(graft.GraftSession.forgetTag(ids)), "forget")(
+        simhashTombDir(fp).toString -> ids.distinct.toDF("doc_id").coalesce(1).write)
     }
     dn
   }
@@ -1053,45 +1053,16 @@ object DedupQueries {
     * their 8-byte rows. Bit-equal to a rebuild over the union corpus
     * (spec-pinned) because fingerprints are per-doc and appended
     * doc_ids are new — same caller contract as every append path.
+    * Through [[graft.GraftSession.commitAppend]] (`tag` = its tagged
+    * form), N admission gates — or a gate beside a batch backfill —
+    * may maintain the index SIMULTANEOUSLY.
     */
   def simhashAppend(spark: SparkSession, sfDir: String,
-      newDocs: DataFrame): String = {
+      newDocs: DataFrame, tag: Option[String] = None): String = {
     val fp = simhashLayout(spark, sfDir) // ensure the base exists
-    graft.GraftSession.clearDeadAppend(fp) // resurrection guard
-    simhashOf(newDocs, simhashHexCharsAt(fp)).write.mode("append").parquet(fp)
-    fp
-  }
-
-  /** CONCURRENT-writer fingerprint append — the
-    * [[graft.operators.TextQueries.invIndexAppendStaged]] sibling:
-    * each appender stages under its own claimed dir and moves its
-    * 8-byte rows in under deterministic names
-    * ([[graft.GraftSession.moveStagedInto]]), so N admission gates
-    * (or a gate beside a batch backfill) may maintain the index
-    * SIMULTANEOUSLY — the plain [[simhashAppend]] is one-writer
-    * because two jobs appending one dir share its `_temporary`
-    * committer tree. Fingerprints need no stats leg (the admission
-    * join distincts, and nothing aggregates the relation), so the
-    * port is the claim + stage + move core alone. Caller contract:
-    * unique jobTag per batch, doc_ids not yet indexed, base layout
-    * fresh before appending.
-    */
-  def simhashAppendStaged(spark: SparkSession, sfDir: String,
-      newDocs: DataFrame, jobTag: String): String = {
-    require(jobTag.nonEmpty &&
-      jobTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"jobTag must be [A-Za-z0-9_-]+, got '$jobTag'")
-    val fp = simhashLayout(spark, sfDir)
-    val stage = java.nio.file.Paths.get(fp).getParent
-      .resolve(s".append_stage_$jobTag")
-    graft.GraftSession.claimStage(stage, s"an append tagged '$jobTag'")
-    try {
-      val stageData = stage.resolve("data")
-      simhashOf(newDocs, simhashHexCharsAt(fp))
-        .write.mode("overwrite").parquet(stageData.toString)
-      graft.GraftSession.moveStagedInto(stageData,
-        java.nio.file.Paths.get(fp), jobTag)
-    } finally graft.GraftSession.deleteRec(stage)
+    graft.GraftSession.commitAppend(
+      java.nio.file.Paths.get(fp).getParent.toString, tag)(
+      fp -> simhashOf(newDocs, simhashHexCharsAt(fp)).write)
     fp
   }
 
@@ -1101,14 +1072,11 @@ object DedupQueries {
     * instead of duplicate fingerprint rows.
     */
   def simhashAppendOnce(spark: SparkSession, sfDir: String,
-      newDocs: DataFrame, batchId: Long): Boolean = {
-    val fp = simhashLayout(spark, sfDir)
-    graft.GraftSession.appliedOnce(
-      java.nio.file.Paths.get(fp).getParent.resolve("_LAST_BATCH"), batchId) {
-      graft.GraftSession.clearDeadAppend(fp) // resurrection guard
-      simhashOf(newDocs, simhashHexCharsAt(fp)).write.mode("append").parquet(fp)
+      newDocs: DataFrame, batchId: Long): Boolean =
+    graft.GraftSession.appliedOnce(java.nio.file.Paths.get(
+      simhashLayout(spark, sfDir)).getParent.resolve("_LAST_BATCH"), batchId) {
+      simhashAppend(spark, sfDir, newDocs)
     }
-  }
 
   /** Near-dup ADMISSION against the standing corpus: of `incoming`
     * documents, keep only those whose simhash is NOT within hamming ≤3

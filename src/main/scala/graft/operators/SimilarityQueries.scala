@@ -507,55 +507,18 @@ object SimilarityQueries {
     * same books ([[pqEncode]] is the shared definition; the spec pins
     * the equivalence). Re-training (codebook drift after heavy
     * appends) is a rebuild via [[buildIvfPq]], as in any IVF system.
+    * Through [[graft.GraftSession.commitAppend]] (`tag` = its tagged
+    * form), N appenders may run at once. Caller contract: vec_ids not
+    * yet indexed, base layout fresh before appending.
     */
   def ivfPqAppend(spark: SparkSession, sfDir: String, layout: String,
-      newVecs: DataFrame): Unit = {
+      newVecs: DataFrame, tag: Option[String] = None): Unit = {
     val books = readBooks(spark, layout)
     val cents = ivfCentroids(spark, sfDir)
-    graft.GraftSession.clearDeadAppend(s"$layout/codes") // resurrection guard
-    pqEncode(newVecs.select(col("vec_id"), col("embedding")), books, cents)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$layout/codes")
-  }
-
-  /** CONCURRENT-writer code append — the [[graft.operators
-    * .TextQueries.invIndexAppendStaged]] sibling for the IVF-PQ
-    * layout: each appender encodes its batch with the layout's FROZEN
-    * books/centroids inside a privately claimed stage dir, then moves
-    * the per-cell code files into the live cell directories under
-    * deterministic `append-<jobTag>-<i>` names — so N simultaneous
-    * appenders are legal where [[ivfPqAppend]] is one-writer (two
-    * jobs appending one dir share its `_temporary` committer tree).
-    * Codes need no stats leg (nothing aggregates the relation — the
-    * probe scans code rows), so the port is the claim + stage + move
-    * core alone, exactly the simhash shape. Caller contract: unique
-    * jobTag per batch, vec_ids not yet indexed, base layout fresh
-    * before appending.
-    */
-  def ivfPqAppendStaged(spark: SparkSession, sfDir: String, layout: String,
-      newVecs: DataFrame, jobTag: String): Unit = {
-    require(jobTag.nonEmpty &&
-      jobTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"jobTag must be [A-Za-z0-9_-]+, got '$jobTag'")
-    val stage = java.nio.file.Paths.get(layout, s".append_stage_$jobTag")
-    graft.GraftSession.claimStage(stage, s"an append tagged '$jobTag'")
-    try {
-      val books = readBooks(spark, layout)
-      val cents = ivfCentroids(spark, sfDir)
-      val stageCodes = stage.resolve("codes")
-      pqEncode(newVecs.select(col("vec_id"), col("embedding")), books, cents)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(stageCodes.toString)
-      val liveCodes = java.nio.file.Paths.get(layout, "codes")
-      val parts = java.nio.file.Files.list(stageCodes)
-      try parts.filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("cell=")).forEach { pd =>
-        graft.GraftSession.moveStagedInto(pd,
-          liveCodes.resolve(pd.getFileName.toString), jobTag)
-      }
-      finally parts.close()
-    } finally graft.GraftSession.deleteRec(stage)
+    graft.GraftSession.commitAppend(layout, tag)(
+      s"$layout/codes" ->
+        pqEncode(newVecs.select(col("vec_id"), col("embedding")), books, cents)
+          .repartition(col("cell")).write.partitionBy("cell"))
   }
 
   /** Whether a standing IVF-PQ layout exists for `sfDir` (the
@@ -728,11 +691,10 @@ object SimilarityQueries {
       // distinct cohorts get distinct claim tags. Rows carry the
       // victims' coarse CELL (null when absent from the index) — the
       // pruned compaction's dirty-partition list.
-      val tag = graft.GraftSession.forgetTag(ids)
-      graft.GraftSession.stagedAppend(
-        ids.distinct.toDF("vec_id").join(standing, Seq("vec_id"), "left"),
-        java.nio.file.Paths.get(layout, s".forget_stage_$tag"),
-        java.nio.file.Paths.get(s"$layout/tombstones"), tag)
+      graft.GraftSession.commitAppend(layout,
+        Some(graft.GraftSession.forgetTag(ids)), "forget")(
+        s"$layout/tombstones" -> ids.distinct.toDF("vec_id")
+          .join(standing, Seq("vec_id"), "left").coalesce(1).write)
     }
     dn
   }
@@ -2395,9 +2357,9 @@ object SimilarityQueries {
     * vec_ids not yet indexed, batches are bounded (the ring-bucket
     * set collects to the driver), one writer per layout.
     *
-    * ONE-WRITER BY SEMANTICS, not just by committer mechanics (why no
-    * `knnAppendStaged` exists where invindex/simhash/ivfpq/sketch all
-    * grew one): those layouts' appends are order-INDEPENDENT row adds
+    * ONE-WRITER BY SEMANTICS, not by committer mechanics (why
+    * knnAppend takes no tag where invindex/simhash/ivfpq/sketch
+    * do): those layouts' appends are order-INDEPENDENT row adds
     * — any interleaving unions to the same relation. A knn append is
     * order-DEPENDENT: batch B's "new vs grown corpus" leg must see
     * batch A's vectors as corpus (and A's affected-old leg must cover
@@ -2498,26 +2460,14 @@ object SimilarityQueries {
     // append can move — recorded BEFORE any partial lands (delta-first
     // ordering, see knnInvalidateDerived), its own idempotence marker
     // under stage replay
-    stage("DELTA", () => {
-      graft.GraftSession.clearDeadAppend(s"$layout/derived_delta")
-      newIds.unionByName(affOld.select("vec_id")).distinct()
-        .coalesce(1).write.mode("append").parquet(s"$layout/derived_delta")
-    })
-    stage("EDGES", () => {
-      graft.GraftSession.clearDeadAppend(s"$layout/edges") // resurrection guard
-      dots.repartition(col("kb"))
-        .write.partitionBy("kb").mode("append").parquet(s"$layout/edges")
-    })
-    stage("CEDGES", () => {
-      graft.GraftSession.clearDeadAppend(s"$layout/cedges")
-      coss.repartition(col("kb"))
-        .write.partitionBy("kb").mode("append").parquet(s"$layout/cedges")
-    })
-    stage("VECS", () => {
-      graft.GraftSession.clearDeadAppend(s"$layout/vecs")
-      newE.repartition(col("kb"))
-        .write.partitionBy("kb").mode("append").parquet(s"$layout/vecs")
-    })
+    def commit(name: String, rel: String,
+        w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]): Unit =
+      stage(name, () => graft.GraftSession.commitAppend(layout)(s"$layout/$rel" -> w))
+    commit("DELTA", "derived_delta",
+      newIds.unionByName(affOld.select("vec_id")).distinct().coalesce(1).write)
+    commit("EDGES", "edges", dots.repartition(col("kb")).write.partitionBy("kb"))
+    commit("CEDGES", "cedges", coss.repartition(col("kb")).write.partitionBy("kb"))
+    commit("VECS", "vecs", newE.repartition(col("kb")).write.partitionBy("kb"))
   }
 
   /** Standing-layout compaction, `Ctl index-compact <sf> knn`. CLEAN
@@ -2711,19 +2661,12 @@ object SimilarityQueries {
       // distincts).
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(layout, "_DERIVED_OK"))
-      graft.GraftSession.clearDeadAppend(s"$layout/derived_delta")
-      affIds.coalesce(1).write.mode("append")
-        .parquet(s"$layout/derived_delta")
-    }
-    if (nDots > 0) {
-      graft.GraftSession.clearDeadAppend(s"$layout/edges")
-      dotsNew.repartition(col("kb"))
-        .write.partitionBy("kb").mode("append").parquet(s"$layout/edges")
-    }
-    if (nCoss > 0) {
-      graft.GraftSession.clearDeadAppend(s"$layout/cedges")
-      cossNew.repartition(col("kb"))
-        .write.partitionBy("kb").mode("append").parquet(s"$layout/cedges")
+      graft.GraftSession.commitAppend(layout)(
+        Seq(s"$layout/derived_delta" -> affIds.coalesce(1).write) ++
+          (if (nDots > 0) Seq(s"$layout/edges" ->
+            dotsNew.repartition(col("kb")).write.partitionBy("kb")) else Nil) ++
+          (if (nCoss > 0) Seq(s"$layout/cedges" ->
+            cossNew.repartition(col("kb")).write.partitionBy("kb")) else Nil): _*)
     }
     // the heal-skip stamp writes LAST: a crash anywhere above leaves
     // it absent/stale and the next heal re-runs in full (idempotent)
@@ -2808,17 +2751,16 @@ object SimilarityQueries {
           .select("vec_id"))
         .distinct().collect().map(_.getLong(0)).toSeq
       if (priorTombs.isEmpty) affHint = Some(affected)
-      graft.GraftSession.clearDeadAppend(s"$layout/derived_delta")
-      (ids.distinct ++ affected).distinct.toDF("vec_id")
-        .coalesce(1).write.mode("append").parquet(s"$layout/derived_delta")
-      graft.GraftSession.clearDeadAppend(knnTombDir(layout).toString)
-      // rows carry the victims' directory-fan-out key (null when the
-      // id is absent from the layout) — the pruned compaction's
-      // dirty-partition list; partition VALUES are content-derived,
-      // so they stay valid across rewrites, unlike file names
-      ids.distinct.toDF("vec_id").join(standing, Seq("vec_id"), "left")
-        .coalesce(1)
-        .write.mode("append").parquet(knnTombDir(layout).toString)
+      // tombstone rows carry the victims' directory-fan-out key (null
+      // when the id is absent from the layout) — the pruned
+      // compaction's dirty-partition list; partition VALUES are
+      // content-derived, so they stay valid across rewrites, unlike
+      // file names
+      graft.GraftSession.commitAppend(layout)(
+        s"$layout/derived_delta" ->
+          (ids.distinct ++ affected).distinct.toDF("vec_id").coalesce(1).write,
+        knnTombDir(layout).toString -> ids.distinct.toDF("vec_id")
+          .join(standing, Seq("vec_id"), "left").coalesce(1).write)
     }
     // heal runs whenever tombstones stand — a rerun after a crashed
     // heal (dn == 0) still repairs (affHint stays None there, so the

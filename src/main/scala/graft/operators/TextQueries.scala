@@ -1574,24 +1574,42 @@ object TextQueries {
   /** Incremental index maintenance — the [[SimilarityQueries
     * .ivfPqAppend]] sibling for the TEXT index: tokenize ONLY the new
     * documents and append their postings into the standing bucket
-    * directories; the one-row stats update by addition. Bit-equal to
-    * a from-scratch rebuild of the union corpus (spec-pinned) because
-    * posting rows are per (tok, doc) and appended doc_ids are new —
-    * the production path keeps the serving index ahead of the batch
-    * corpus snapshot without ever re-tokenizing what already landed.
-    * Caller contract (ivfPqAppend's too): `newDocs` carries doc_ids
-    * not yet indexed.
+    * directories, plus a stats DELTA partial (readers SUM the relation
+    * — [[indexStats]] — so N appenders never race a read-add-write).
+    * Bit-equal to a from-scratch rebuild of the union corpus
+    * (spec-pinned) because posting rows are per (tok, doc) and
+    * appended doc_ids are new — the production path keeps the serving
+    * index ahead of the batch corpus snapshot without ever
+    * re-tokenizing what already landed. Commits through
+    * [[graft.GraftSession.commitAppend]] (`tag` = its tagged form), so
+    * any number of appenders, forgets and compactions may run beside
+    * it. Caller contract (ivfPqAppend's too): `newDocs` carries
+    * doc_ids not yet indexed; the layout's rebuild stays one-writer.
+    *
+    * BOTH legs stage fully before ANY move: a crash mid-staging
+    * commits nothing. The moves then go stats-FIRST — the remaining
+    * crash window (stats moved, postings not) leaves the index
+    * UNDER-counting postings against slightly over-counted
+    * n_docs/t_tokens, which only deflates BM25 scores for the missing
+    * docs; a postings-first order would leave docs SERVEABLE with
+    * idf/avgdl computed from stats that never saw them.
     */
   def invIndexAppend(spark: SparkSession, sfDir: String,
-      newDocs: DataFrame): String = {
+      newDocs: DataFrame, tag: Option[String] = None): String = {
     val layout = invIndexLayout(spark, sfDir) // ensure the base exists
-    appendPostings(spark, layout, newDocs)
+    val (base, rows) = postingRowsOf(newDocs)
+    val (dn, dt) = statsDeltaOf(base)
+    import spark.implicits._
+    graft.GraftSession.commitAppend(layout, tag)(
+      s"$layout/stats" ->
+        Seq((dn, dt)).toDF("n_docs", "t_tokens").coalesce(1).write,
+      s"$layout/postings" ->
+        rows.repartition(col("tb")).write.partitionBy("tb"))
     layout
   }
 
-  /** The one tokenize-and-group definition shared by the single-writer
-    * append, the job-scoped staged append, and (shape-wise) the build:
-    * returns (tokenized base, posting rows).
+  /** The one tokenize-and-group definition shared by the append and
+    * (shape-wise) the build: returns (tokenized base, posting rows).
     */
   private def postingRowsOf(newDocs: DataFrame): (DataFrame, DataFrame) = {
     val base = newDocs
@@ -1619,101 +1637,6 @@ object TextQueries {
     (d.getLong(0), d.getLong(1))
   }
 
-  private def appendPostings(spark: SparkSession, layout: String,
-      newDocs: DataFrame): Unit = {
-    val (base, rows) = postingRowsOf(newDocs)
-    graft.GraftSession.clearDeadAppend(s"$layout/postings") // resurrection guard
-    rows.repartition(col("tb"))
-      .write.partitionBy("tb").mode("append").parquet(s"$layout/postings")
-    // stats land as an append-only DELTA partial (readers SUM the
-    // relation — [[indexStats]]): the read-add-overwrite update this
-    // replaces was the one stats write that could never be made
-    // multi-writer-safe (two appenders would both read the same old
-    // row and the second overwrite would swallow the first's delta)
-    val (dn, dt) = statsDeltaOf(base)
-    graft.GraftSession.clearDeadAppend(s"$layout/stats")
-    import spark.implicits._
-    Seq((dn, dt)).toDF("n_docs", "t_tokens")
-      .coalesce(1).write.mode("append").parquet(s"$layout/stats")
-  }
-
-  /** CONCURRENT-writer append — the [[graft.streaming.StreamingOps
-    * .quarantineRelease]] private-stage + deterministic-rename shape
-    * ported to the busiest maintained layout, making N simultaneous
-    * appenders LEGAL here where the plain [[invIndexAppend]] is bound
-    * by the one-writer contract. Why the plain path can't be shared:
-    * two Spark jobs appending the same directory share its
-    * `_temporary/0` committer tree, so either job's cleanup can eat
-    * the other's in-flight task files (and [[graft.GraftSession
-    * .clearDeadAppend]] would eat a LIVE peer's). Here each appender
-    * (a) claims a private `.append_stage_<jobTag>` dir (atomic
-    * createDirectory — a second attempt under the same tag is refused,
-    * the quarantineRelease claim rule), (b) writes its postings +
-    * stats delta INSIDE the stage (its own committer tree, nobody
-    * else's), then (c) MOVES the data files into the live tree under
-    * deterministic `append-<jobTag>-<i>` names, sweeping exactly its
-    * own tag's leftovers first (exact-name match, never a prefix —
-    * tags may contain '-') so a retried crash is exactly-once. The stats
-    * delta lands as one ATOMIC_MOVE+REPLACE'd partial file. No step
-    * writes a shared `_temporary`; movers with distinct tags touch
-    * distinct names. Caller contract: unique jobTag per logical batch,
-    * doc_ids not yet indexed, layout fresh before appending (the
-    * ensureLayout rebuild itself is still one-writer).
-    */
-  def invIndexAppendStaged(spark: SparkSession, sfDir: String,
-      newDocs: DataFrame, jobTag: String): String = {
-    require(jobTag.nonEmpty &&
-      jobTag.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"jobTag must be [A-Za-z0-9_-]+, got '$jobTag'")
-    val layout = invIndexLayout(spark, sfDir)
-    val stage = java.nio.file.Paths.get(layout, s".append_stage_$jobTag")
-    graft.GraftSession.claimStage(stage, s"an append tagged '$jobTag'")
-    try {
-      // BOTH legs stage fully before ANY move: a crash mid-staging
-      // commits nothing. The moves then go stats-FIRST — the
-      // remaining crash window (stats moved, postings not) leaves the
-      // index UNDER-counting postings against slightly over-counted
-      // n_docs/t_tokens, which only deflates BM25 scores for the
-      // missing docs; the old postings-first order left docs
-      // SERVEABLE with idf/avgdl computed from stats that never saw
-      // them. Either way the leftover stage dir makes the retry
-      // refuse loudly, and a delete-and-retry of the same tag lands
-      // exactly once (stats partial REPLACE_EXISTING under its
-      // deterministic name; postings swept per-tag).
-      val (base, rows) = postingRowsOf(newDocs)
-      val stageData = stage.resolve("data")
-      rows.repartition(col("tb"))
-        .write.partitionBy("tb").mode("overwrite").parquet(stageData.toString)
-      val (dn, dt) = statsDeltaOf(base)
-      import spark.implicits._
-      val stageStats = stage.resolve("stats")
-      Seq((dn, dt)).toDF("n_docs", "t_tokens")
-        .coalesce(1).write.mode("overwrite").parquet(stageStats.toString)
-      val statsDir = java.nio.file.Paths.get(layout, "stats")
-      java.nio.file.Files.createDirectories(statsDir)
-      val sfiles = java.nio.file.Files.list(stageStats)
-      try sfiles.filter { p =>
-        val fn = p.getFileName.toString
-        java.nio.file.Files.isRegularFile(p) &&
-          !fn.startsWith("_") && !fn.startsWith(".")
-      }.findFirst().ifPresent(p =>
-        java.nio.file.Files.move(p,
-          statsDir.resolve(s"append-$jobTag.parquet"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING))
-      finally sfiles.close()
-      val livePost = java.nio.file.Paths.get(layout, "postings")
-      val parts = java.nio.file.Files.list(stageData)
-      try parts.filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("tb=")).forEach { pd =>
-        graft.GraftSession.moveStagedInto(pd,
-          livePost.resolve(pd.getFileName.toString), jobTag)
-      }
-      finally parts.close()
-    } finally graft.GraftSession.deleteRec(stage)
-    layout
-  }
-
   /** foreachBatch-idempotent append — the streaming maintenance
     * entrypoint. foreachBatch is at-least-once on failure recovery: a
     * replayed batch would re-append the same postings and double-add
@@ -1726,13 +1649,11 @@ object TextQueries {
     * contract as every foreachBatch-idempotence marker.
     */
   def invIndexAppendOnce(spark: SparkSession, sfDir: String,
-      newDocs: DataFrame, batchId: Long): Boolean = {
-    val layout = invIndexLayout(spark, sfDir)
-    graft.GraftSession.appliedOnce(
-      java.nio.file.Paths.get(layout, "_LAST_BATCH"), batchId) {
-      appendPostings(spark, layout, newDocs)
+      newDocs: DataFrame, batchId: Long): Boolean =
+    graft.GraftSession.appliedOnce(java.nio.file.Paths.get(
+      invIndexLayout(spark, sfDir), "_LAST_BATCH"), batchId) {
+      invIndexAppend(spark, sfDir, newDocs)
     }
-  }
 
   /** Whether a standing inverted index exists for `sfDir` — the guard
     * an OPERATIONAL caller (Ctl index-compact) wants: compaction of a
@@ -1883,19 +1804,12 @@ object TextQueries {
     * contribute nothing, so a retried request never double-subtracts.
     * CONCURRENCY: both writes are staged + moved (no `_temporary` in
     * the live dirs), so a forget is legal beside the live maintenance
-    * stream and staged appenders; concurrent forgets need disjoint
+    * stream and any appender; concurrent forgets need disjoint
     * cohorts (a shared id would double-subtract stats — both would
     * measure it un-tombstoned), and an identical retried cohort maps
     * to the same claim tag and refuses loudly instead of racing.
     * Returns (docs newly hidden, their token count).
     */
-  /** Test seam (the [[graft.GraftSession.compactPartitioned]]
-    * `beforeSwap` pattern): runs between the tombstone move and the
-    * stats move — the crash window whose keep-the-stage contract the
-    * forget spec pins.
-    */
-  private[graft] var invForgetCrashSeam: () => Unit = () => ()
-
   def invIndexForget(spark: SparkSession, sfDir: String,
       ids: Seq[Long]): (Long, Long) = {
     require(ids.nonEmpty, "forget request carries no ids")
@@ -1922,48 +1836,22 @@ object TextQueries {
         coalesce(sum(col("tf")), lit(0L)).as("dt")).head()
     val (dn, dt) = (row.getLong(0), row.getLong(1))
     if (dn > 0) {
-      // STAGED two-leg write (the invIndexAppendStaged core): both
-      // relations stage fully under one cohort-derived claim, then
-      // MOVE in — no `_temporary` in the live dirs, so a forget is
-      // legal BESIDE the live maintenance stream and any number of
-      // staged appenders. Tombstones move FIRST (privacy: hide before
-      // the books adjust; the crash window under-counts stats, which
-      // compaction heals). Concurrent forgets need DISJOINT cohorts —
-      // two requests sharing an id would both measure it un-tombstoned
-      // and double-subtract; an identical retried cohort maps to the
-      // same tag and refuses via the claim instead.
-      val tag = graft.GraftSession.forgetTag(ids)
-      val stage = java.nio.file.Paths.get(layout, s".forget_stage_$tag")
-      graft.GraftSession.claimStage(stage, s"a forget tagged '$tag'")
-      // the stage clears ONLY on success: an exception between the two
-      // moves (tombstones in, stats not) must leave the claim standing
-      // so the retry refuses loudly per the delete-to-retry contract —
-      // a silent cleanup would let the retry measure the victims as
-      // already-tombstoned (dn = 0) and never apply the negative stats
-      // delta, skewing idf/avgdl until an index-compact. The kept
-      // stage still holds the measured stats leg for the operator's
-      // inspection; compaction remains the stats healer of record.
-      val stageTomb = stage.resolve("tombstones")
-      // (doc_id, tb) rows — the victims' recorded term buckets double
-      // as the pruned compaction's dirty-partition list (partition
-      // values are content-derived, so they stay valid across any
-      // number of rewrites, unlike file names). An id absent from the
-      // index tombstones with a null tb; the compaction re-resolves
-      // those against the postings of ITS day (a later append could
-      // have indexed them).
-      ids.distinct.toDF("doc_id")
-        .join(victims.select("doc_id", "tb").distinct(), Seq("doc_id"), "left")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(stageTomb.toString)
-      val stageStats = stage.resolve("stats")
-      Seq((-dn, -dt)).toDF("n_docs", "t_tokens").coalesce(1)
-        .write.mode("overwrite").parquet(stageStats.toString)
-      graft.GraftSession.moveStagedInto(stageTomb,
-        java.nio.file.Paths.get(layout, "tombstones"), tag)
-      invForgetCrashSeam()
-      graft.GraftSession.moveStagedInto(stageStats,
-        java.nio.file.Paths.get(layout, "stats"), tag)
-      graft.GraftSession.deleteRec(stage)
+      // one two-leg commit under the cohort-derived tag. Tombstones
+      // move FIRST (privacy: hide before the books adjust). A failure
+      // between the moves KEEPS the stage, with its measured stats
+      // leg, so the retry refuses (the check above) instead of
+      // measuring dn = 0. Tombstone rows are (doc_id, tb): the
+      // victims' term buckets double as the pruned compaction's
+      // dirty-partition list (content-derived, so valid across
+      // rewrites, unlike file names); an id absent from the index
+      // gets a null tb, re-resolved by the compaction of ITS day.
+      graft.GraftSession.commitAppend(layout,
+        Some(graft.GraftSession.forgetTag(ids)), "forget")(
+        s"$layout/tombstones" -> ids.distinct.toDF("doc_id")
+          .join(victims.select("doc_id", "tb").distinct(), Seq("doc_id"), "left")
+          .coalesce(1).write,
+        s"$layout/stats" ->
+          Seq((-dn, -dt)).toDF("n_docs", "t_tokens").coalesce(1).write)
     }
     (dn, dt)
   }
@@ -3272,18 +3160,11 @@ object TextQueries {
       else s
     }
 
-    /** [[graft.GraftSession.clearDeadAppend]]: a crashed append's
-      * `_temporary` would otherwise resurrect inside the next append's
-      * commit — for a COUNTING layout, a silently skewed reference.
-      */
-    private def clearStaleTemporary(sfDir: String): Unit =
-      graft.GraftSession.clearDeadAppend(histDir(sfDir))
-
     def append(spark: SparkSession, sfDir: String, passedDocs: DataFrame): String = {
       seed(spark, sfDir) // ensure the base exists
-      clearStaleTemporary(sfDir)
       val hist = histDir(sfDir)
-      countsOf(passedDocs).write.mode("append").parquet(hist)
+      graft.GraftSession.commitAppend(root(sfDir))(
+        hist -> countsOf(passedDocs).write)
       hist
     }
 
@@ -3298,16 +3179,14 @@ object TextQueries {
       // documented checkpoint-reset contract (clear the door dir,
       // batchIds restart) clears the maintenance high-water mark WITH
       // it — a reset door must not silently no-op its first N appends
-      // against a stale layout-local mark. ONE maintaining writer per
-      // layout either way (concurrent writers would share the hist
-      // dir's _temporary and clobber each other's commits); a caller
-      // with its own marker OWNS the layout, so the superseded
-      // layout-local mark is voided — it must not booby-trap a LATER
-      // switch to detached maintenance with a silent freeze.
+      // against a stale layout-local mark. ONE maintaining marker per
+      // layout either way; a caller with its own marker OWNS the
+      // layout, so the superseded layout-local mark is voided — it
+      // must not booby-trap a LATER switch to detached maintenance
+      // with a silent freeze.
       marker.foreach(_ => java.nio.file.Files.deleteIfExists(layoutLocal))
       graft.GraftSession.appliedOnce(marker.getOrElse(layoutLocal), batchId) {
-        clearStaleTemporary(sfDir) // see [[append]] — resurrection guard
-        countsOf(passedDocs).write.mode("append").parquet(histDir(sfDir))
+        append(spark, sfDir, passedDocs)
       }
     }
 

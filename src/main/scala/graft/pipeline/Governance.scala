@@ -98,15 +98,13 @@ object Governance {
     val cohort = graft.GraftSession.forgetTag(ids)
     val rows = if (applied.isEmpty) Seq((ts, cohort, ids.distinct.size, "none", "{}"))
       else applied.map { case (l, s) => (ts, cohort, ids.distinct.size, l, s) }
-    val root = java.nio.file.Paths.get(graft.GraftSession.fixtureRoot(sfDir))
-    java.nio.file.Files.createDirectories(root)
+    val root = graft.GraftSession.fixtureRoot(sfDir)
     // nanoTime, not ts: two same-cohort retries inside one
     // millisecond must still get distinct stage claims
-    val tag = s"$cohort-${System.nanoTime()}"
-    graft.GraftSession.stagedAppend(
-      rows.toDF("ts", "cohort", "n_ids", "layout", "applied"),
-      root.resolve(s".forget_log_stage_$tag"),
-      root.resolve(ForgetLogDir), tag)
+    graft.GraftSession.commitAppend(root,
+      Some(s"$cohort-${System.nanoTime()}"), "forget_log")(
+      s"$root/$ForgetLogDir" -> rows.toDF("ts", "cohort", "n_ids", "layout", "applied")
+        .coalesce(1).write)
   }
 
   /** The ledger's dir name under the fixture root. */
@@ -194,7 +192,11 @@ object Governance {
     * deliberately never deletes them — this is the operator's
     * delete-to-retry tool once the inspection is done. Deletes ONLY
     * the named tag's stage dirs under the named layout; returns what
-    * died (empty = nothing stood, reported not invented).
+    * died (empty = nothing stood, reported not invented). Every name
+    * [[graft.GraftSession.commitAppend]] can leave is one of these
+    * shapes — an untagged commit's fresh name or an
+    * [[graft.GraftSession.appliedOnce]] body's `once-<hash>` name
+    * sweeps as its tag.
     *
     * Layout `"root"` sweeps the FIXTURE-ROOT stages [[gcLayouts]]
     * also reports — `.forget_log_stage_<tag>` under its unique tag,

@@ -34,6 +34,14 @@ object Ingest {
     */
   val NullFillBase: Long = 1L << 52
 
+  /** The bad-row budget of every TASK surface — the CLI's `-d` path, a
+    * TOML body, a JSON spool file or `/tasks` body: the reference
+    * aborts on bad rows rather than silently tolerating them, so one
+    * dump posted either way lands in the same verdict. The library
+    * [[Config]] default stays permissive for callers who opt in.
+    */
+  val TaskMaxError: Long = 0L
+
   case class Config(
       sourceDir: String,
       targetDir: String,

@@ -362,7 +362,8 @@ object Server {
       targetDir = target,
       filters = str("filters").map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(Nil),
-      stateDir = str("stateDir"))
+      stateDir = str("stateDir"),
+      maxError = Ingest.TaskMaxError)
   }
 
   /** Long-running loop: poll the queue until `<spool>/stop` appears. */

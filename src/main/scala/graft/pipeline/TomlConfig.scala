@@ -408,11 +408,8 @@ object TomlConfig {
       // does without STRICT_TRANS_TABLES, `tests/sqlmode/off.toml`);
       // absent sql-mode keeps the library's honest-NULL default
       lenientCasts = sqlMode.exists(!_.contains("STRICT")),
-      // absent max-error → 0: the reference aborts on bad rows rather
-      // than silently tolerating them (the programmatic Ingest.Config
-      // default stays permissive for library users who opt in)
       maxError = take("lightning.max-error").orElse(take("app.max-error"))
-        .map(long(_, "max-error")).getOrElse(0L),
+        .map(long(_, "max-error")).getOrElse(Ingest.TaskMaxError),
       tableConcurrency = take("lightning.table-concurrency")
         .map(long(_, "lightning.table-concurrency")).getOrElse(1L).toInt,
       noSchema = take("mydumper.no-schema")

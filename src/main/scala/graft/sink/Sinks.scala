@@ -99,15 +99,6 @@ object SortedParquetSink {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).save(path)
   }
 
-  /** Write with a dedup policy applied on the key, mirroring the tidb
-    * backend's on-duplicate switch (reference
-    * `lightning/config/config.go:62-67`): "error" (assert unique),
-    * "replace" (last wins), "ignore" (first wins).
-    */
-  def writeDedup(df: DataFrame, path: String, keyCols: Seq[String],
-      policy: String, orderCol: Option[String] = None): Unit =
-    write(dedup(df, keyCols, policy, orderCol), path, keyCols)
-
   /** The on-duplicate policy as a standalone operator (reference
     * `lightning/config/config.go:62-67`, `tests/tidb_duplicate_data`):
     * "error" asserts key uniqueness and FAILS the job on the first

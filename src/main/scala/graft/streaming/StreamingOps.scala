@@ -148,10 +148,8 @@ object StreamingOps {
               .nearDupAdmitFor(batch.sparkSession, sfDir, batch.toDF())
               .localCheckpoint()
             try {
-              graft.GraftSession.clearDeadAppend(outDir) // resurrection guard
-              admitted
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("append").parquet(outDir)
+              graft.GraftSession.commitAppend(outDir)(
+                outDir -> admitted.withColumn("batch_id", lit(batchId)).write)
               if (maintainIndex)
                 graft.operators.DedupQueries.simhashAppend(
                   batch.sparkSession, sfDir, admitted)
@@ -193,14 +191,11 @@ object StreamingOps {
               .evalGuardFor(batch.sparkSession, sfDir, batch.toDF())
               .localCheckpoint()
             try {
-              graft.GraftSession.clearDeadAppend(s"$outDir/clean")
-              graft.GraftSession.clearDeadAppend(s"$outDir/contaminated")
-              v.where(!col("contaminated")).drop("contaminated")
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("append").parquet(s"$outDir/clean")
-              v.where(col("contaminated")).drop("contaminated")
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("append").parquet(s"$outDir/contaminated")
+              def leg(contaminated: Boolean) =
+                s"$outDir/${if (contaminated) "contaminated" else "clean"}" ->
+                  v.where(col("contaminated") === contaminated).drop("contaminated")
+                    .withColumn("batch_id", lit(batchId)).write
+              graft.GraftSession.commitAppend(outDir)(leg(false), leg(true))
             } finally v.unpersist()
           }
         ()
@@ -229,10 +224,9 @@ object StreamingOps {
             java.nio.file.Paths.get(outDir, "_LAST_BATCH"), batchId) {
             val spark = batch.sparkSession
             val hist = graft.operators.TextQueries.langStats.read(spark, sfDir)
-            graft.GraftSession.clearDeadAppend(outDir) // resurrection guard
-            graft.operators.TextQueries.driftOf(batch.toDF(), hist)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir)
+            graft.GraftSession.commitAppend(outDir)(
+              outDir -> graft.operators.TextQueries.driftOf(batch.toDF(), hist)
+                .withColumn("batch_id", lit(batchId)).write)
           }
         ()
     }
@@ -273,11 +267,9 @@ object StreamingOps {
     * window cannot double-count a batch into the reference, AND the
     * checkpoint-reset contract (clear the door dir; batchIds restart)
     * clears the maintenance high-water mark together with the door's
-    * other state. ONE maintaining writer per layout — a detached
-    * maintenance stream beside the door shares NO marker with it and
-    * would double-count every batch, and two concurrent maintaining
-    * doors would share the hist dir's `_temporary` and clobber each
-    * other's commits. Reset semantics: a reset whose source delivers
+    * other state. A detached maintenance stream beside the door
+    * shares NO marker with it and would double-count every batch the
+    * door passed. Reset semantics: a reset whose source delivers
     * NEW data needs nothing (fresh markers, fresh appends); a reset
     * that REPLAYS already-passed input must be paired with a
     * reference reseed (delete the layout dir — it rebuilds at the
@@ -361,16 +353,14 @@ object StreamingOps {
               val axes = map(axisEntries.flatMap { case (nm, l1, d) =>
                 Seq(lit(nm), struct(lit(l1).as("l1_ppm"), lit(d).as("drifted")))
               }: _*)
-              graft.GraftSession.clearDeadAppend(s"$outDir/audit")
-              Seq((batchId, "routed", nDocs, drifted))
-                .toDF("batch_id", "event", "n_docs", "drifted")
-                .select(col("batch_id"), col("event"), col("n_docs"),
-                  axes.as("axes"), col("drifted"))
-                .coalesce(1).write.mode("append").parquet(s"$outDir/audit")
               val dest = if (drifted) "quarantined" else "passed"
-              graft.GraftSession.clearDeadAppend(s"$outDir/$dest")
-              b.withColumn("batch_id", lit(batchId))
-                .write.mode("append").parquet(s"$outDir/$dest")
+              graft.GraftSession.commitAppend(outDir)(
+                s"$outDir/audit" -> Seq((batchId, "routed", nDocs, drifted))
+                  .toDF("batch_id", "event", "n_docs", "drifted")
+                  .select(col("batch_id"), col("event"), col("n_docs"),
+                    axes.as("axes"), col("drifted"))
+                  .coalesce(1).write,
+                s"$outDir/$dest" -> b.withColumn("batch_id", lit(batchId)).write)
               // the door maintains its own references with what it
               // passes — AFTER the verdict (this batch was judged
               // against the histograms as of batch N-1). Through the
@@ -872,11 +862,10 @@ object StreamingOps {
         if (!batch.isEmpty)
           graft.GraftSession.appliedOnce(
             java.nio.file.Paths.get(outDir, "_LAST_BATCH"), batchId) {
-            graft.GraftSession.clearDeadAppend(outDir) // resurrection guard
-            graft.operators.SimilarityQueries
-              .annBatchLookup(batch.sparkSession, sfDir, batch.toDF())
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir)
+            graft.GraftSession.commitAppend(outDir)(
+              outDir -> graft.operators.SimilarityQueries
+                .annBatchLookup(batch.sparkSession, sfDir, batch.toDF())
+                .withColumn("batch_id", lit(batchId)).write)
           }
         ()
     }

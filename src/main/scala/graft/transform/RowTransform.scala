@@ -1,7 +1,6 @@
 package graft.transform
 
 import org.apache.spark.sql.catalyst.expressions.KnownNotNull
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.shims
@@ -507,25 +506,6 @@ object RowTransform {
     regexp_extract(trim(s),
       "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?", 0)
       .try_cast(DecimalType(38, 6))
-
-  /** T4/T6: deterministic row-ID assignment. The reference gives every
-    * chunk a contiguous [PrevRowIDMax, RowIDMax) range and numbers rows
-    * within it (`lightning/mydump/region.go:131-234`) so IDs are stable
-    * across re-runs. The distributed equivalent with the same contract
-    * (dense, deterministic, re-run stable) is a row_number over a total
-    * order on (input_file, position). For file sources we order on
-    * (input_file_name, a per-file ordinal); for table inputs the caller
-    * passes the business ordering columns.
-    *
-    * Scale note: row_number over one global window is a single-reducer
-    * sort — fine for dimension tables, wrong for 100 TB facts. For the
-    * fact path use [[chunkedRowId]], which mirrors the reference's
-    * two-level scheme (per-chunk base + local ordinal) and needs only a
-    * per-partition count exchange, no global sort.
-    */
-  def rowIdByOrder(df: DataFrame, orderCols: Seq[Column], idCol: String = "_graft_rowid",
-      base: Long = 0L): DataFrame =
-    df.withColumn(idCol, row_number().over(Window.orderBy(orderCols: _*)).cast(LongType) + base)
 
   /** Two-level row-ID: partitions keep their row order; each partition
     * gets a base = `base` + the cumulative count of prior partitions

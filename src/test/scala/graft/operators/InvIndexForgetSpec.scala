@@ -75,13 +75,13 @@ class InvIndexForgetSpec extends SparkSpec {
     val layout = TextQueries.invIndexLayout(spark, dir)
     // crash exactly in the documented window: tombstones moved in,
     // stats not
-    TextQueries.invForgetCrashSeam =
-      () => throw new RuntimeException("boom between moves")
+    graft.GraftSession.afterLegMoveSeam = p =>
+      if (p.endsWith("tombstones")) throw new RuntimeException("boom between moves")
     val thrown = try {
       intercept[RuntimeException] {
         TextQueries.invIndexForget(spark, dir, victims)
       }
-    } finally TextQueries.invForgetCrashSeam = () => ()
+    } finally graft.GraftSession.afterLegMoveSeam = _ => ()
     assert(thrown.getMessage === "boom between moves")
 
     // the claim stands (stage kept with its measured stats leg) and a

@@ -48,7 +48,7 @@ class InvIndexStagedSpec extends SparkSpec {
     // forget's writes are staged+moved too, so neither sees the
     // other's `_temporary`; the cohort is base-only, so the outcome
     // is order-independent
-    val fa = Future(TextQueries.invIndexAppendStaged(spark, dir, docsDF(batch), "late"))
+    val fa = Future(TextQueries.invIndexAppend(spark, dir, docsDF(batch), Some("late")))
     val ff = Future(TextQueries.invIndexForget(spark, dir, victims))
     val layout = Await.result(fa, 5.minutes)
     val (dn, dt) = Await.result(ff, 5.minutes)
@@ -78,8 +78,8 @@ class InvIndexStagedSpec extends SparkSpec {
     docsDF(a).write.mode("overwrite").parquet(s"$incDir/documents.parquet")
     TextQueries.invIndexLayout(spark, incDir) // base build before the race
     // the race: two appenders in flight at once, distinct tags
-    val f1 = Future(TextQueries.invIndexAppendStaged(spark, incDir, docsDF(b1), "w1"))
-    val f2 = Future(TextQueries.invIndexAppendStaged(spark, incDir, docsDF(b2), "w2"))
+    val f1 = Future(TextQueries.invIndexAppend(spark, incDir, docsDF(b1), Some("w1")))
+    val f2 = Future(TextQueries.invIndexAppend(spark, incDir, docsDF(b2), Some("w2")))
     val layout = Await.result(f1, 5.minutes)
     assert(Await.result(f2, 5.minutes) === layout)
     val fullDir = java.nio.file.Files.createTempDirectory("graft_inv_race_full").toString
@@ -111,8 +111,8 @@ class InvIndexStagedSpec extends SparkSpec {
     val incDir = java.nio.file.Files.createTempDirectory("graft_sh_race").toString
     docsDF(a).write.mode("overwrite").parquet(s"$incDir/documents.parquet")
     val fp = DedupQueries.simhashLayout(spark, incDir)
-    val f1 = Future(DedupQueries.simhashAppendStaged(spark, incDir, docsDF(b1), "w1"))
-    val f2 = Future(DedupQueries.simhashAppendStaged(spark, incDir, docsDF(b2), "w2"))
+    val f1 = Future(DedupQueries.simhashAppend(spark, incDir, docsDF(b1), Some("w1")))
+    val f2 = Future(DedupQueries.simhashAppend(spark, incDir, docsDF(b2), Some("w2")))
     assert(Await.result(f1, 5.minutes) === fp)
     assert(Await.result(f2, 5.minutes) === fp)
     val fullDir = java.nio.file.Files.createTempDirectory("graft_sh_race_full").toString
@@ -124,7 +124,7 @@ class InvIndexStagedSpec extends SparkSpec {
     assert(rows(fp) === rows(fullFp),
       "a concurrent appender's fingerprints were lost or doubled")
     // retry idempotence: the same tag re-staged sweeps its own files
-    DedupQueries.simhashAppendStaged(spark, incDir, docsDF(b1), "w1")
+    DedupQueries.simhashAppend(spark, incDir, docsDF(b1), Some("w1"))
     assert(rows(fp) === rows(fullFp), "a retried tag doubled its rows")
   }
 
@@ -174,28 +174,28 @@ class InvIndexStagedSpec extends SparkSpec {
     java.nio.file.Files.createDirectory(stale)
     val before = postings(layout)
     val ex = intercept[IllegalArgumentException] {
-      TextQueries.invIndexAppendStaged(spark, dir,
-        docsDF(Seq(5L -> "fresh doc")), "w9")
+      TextQueries.invIndexAppend(spark, dir,
+        docsDF(Seq(5L -> "fresh doc")), Some("w9"))
     }
     assert(ex.getMessage.contains("delete that directory to retry"))
     assert(postings(layout) === before)
     // operator clears the leftover → the retry lands exactly once
     graft.GraftSession.deleteRec(stale)
-    TextQueries.invIndexAppendStaged(spark, dir,
-      docsDF(Seq(5L -> "fresh doc")), "w9")
+    TextQueries.invIndexAppend(spark, dir,
+      docsDF(Seq(5L -> "fresh doc")), Some("w9"))
     val after = postings(layout)
     assert(after.exists(r => r(1) == 5L))
     // a RE-STAGED retry (crash after some moves) sweeps its own prefix
     // instead of doubling: same tag again after clearing is refused
     // only while in progress — here it must refuse nothing but also
     // must not double rows
-    TextQueries.invIndexAppendStaged(spark, dir,
-      docsDF(Seq(5L -> "fresh doc")), "w9")
+    TextQueries.invIndexAppend(spark, dir,
+      docsDF(Seq(5L -> "fresh doc")), Some("w9"))
     assert(postings(layout) === after, "a retried tag doubled its rows")
     // invalid tags are rejected before touching the layout
     intercept[IllegalArgumentException] {
-      TextQueries.invIndexAppendStaged(spark, dir,
-        docsDF(Seq(6L -> "x")), "../evil")
+      TextQueries.invIndexAppend(spark, dir,
+        docsDF(Seq(6L -> "x")), Some("../evil"))
     }
   }
 }

@@ -67,10 +67,10 @@ class IvfPqAppendSpec extends SparkSpec {
         .select((col("vec_id") + shift).as("vec_id"), col("embedding"))
     // the race: two appenders in flight at once, distinct tags — each
     // stages privately, so neither can eat the other's task files
-    val f1 = Future(SimilarityQueries.ivfPqAppendStaged(
-      spark, sf(), dir, batch(0, 40, 100000L), "w1"))
-    val f2 = Future(SimilarityQueries.ivfPqAppendStaged(
-      spark, sf(), dir, batch(40, 80, 200000L), "w2"))
+    val f1 = Future(SimilarityQueries.ivfPqAppend(
+      spark, sf(), dir, batch(0, 40, 100000L), Some("w1")))
+    val f2 = Future(SimilarityQueries.ivfPqAppend(
+      spark, sf(), dir, batch(40, 80, 200000L), Some("w2")))
     Await.result(f1, 5.minutes); Await.result(f2, 5.minutes)
     val raced = codes()
     assert(base.subsetOf(raced), "a racing appender clobbered standing codes")
@@ -84,13 +84,13 @@ class IvfPqAppendSpec extends SparkSpec {
         .map { case (id, c0, c1, c2, c3, cell) => (id + 200000, c0, c1, c2, c3, cell) }
     assert(raced -- base === expected)
     // retry idempotence: the same tag re-staged sweeps its own files
-    SimilarityQueries.ivfPqAppendStaged(spark, sf(), dir, batch(0, 40, 100000L), "w1")
+    SimilarityQueries.ivfPqAppend(spark, sf(), dir, batch(0, 40, 100000L), Some("w1"))
     assert(codes() === raced, "a retried tag doubled its rows")
     // the claim refuses a crashed attempt's leftover stage
     val stale = java.nio.file.Paths.get(dir, ".append_stage_w9")
     java.nio.file.Files.createDirectory(stale)
     val ex = intercept[IllegalArgumentException] {
-      SimilarityQueries.ivfPqAppendStaged(spark, sf(), dir, batch(0, 5, 300000L), "w9")
+      SimilarityQueries.ivfPqAppend(spark, sf(), dir, batch(0, 5, 300000L), Some("w9"))
     }
     assert(ex.getMessage.contains("delete that directory to retry"))
     assert(codes() === raced)

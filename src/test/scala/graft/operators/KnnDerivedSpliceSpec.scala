@@ -101,7 +101,6 @@ class KnnDerivedSpliceSpec extends SparkSpec {
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(layout, "_DERIVED_OK"))
     import spark.implicits._
-    graft.GraftSession.clearDeadAppend(s"$layout/derived_delta")
     Seq(0L, 1L, 2L).toDF("vec_id").coalesce(1)
       .write.mode("append").parquet(s"$layout/derived_delta")
     assert(SimilarityQueries.knnEnsureDerived(spark, layout) === true,
@@ -110,7 +109,6 @@ class KnnDerivedSpliceSpec extends SparkSpec {
       "a no-change splice must leave the relation intact")
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(layout, "_DERIVED_OK"))
-    graft.GraftSession.clearDeadAppend(s"$layout/derived_delta")
     spark.read.parquet(s"$layout/vecs").select("vec_id")
       .write.mode("append").parquet(s"$layout/derived_delta")
     assert(SimilarityQueries.knnEnsureDerived(spark, layout) === false,

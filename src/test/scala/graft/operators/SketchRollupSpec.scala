@@ -64,8 +64,8 @@ class SketchRollupSpec extends SparkSpec {
     // the race: two appenders in flight at once, distinct tags —
     // partials are summable, so the interleaving cannot matter once
     // each stages privately (no shared _temporary)
-    val f1 = Future(CoreQueries.sketchAppendStaged(spark, dir, restA, "w1"))
-    val f2 = Future(CoreQueries.sketchAppendStaged(spark, dir, restB, "w2"))
+    val f1 = Future(CoreQueries.sketchAppend(spark, dir, restA, Some("w1")))
+    val f2 = Future(CoreQueries.sketchAppend(spark, dir, restB, Some("w2")))
     Await.result(f1, 5.minutes); Await.result(f2, 5.minutes)
     assert(collectEst(CoreQueries.sketchRollupEstimates(spark, dir))
       === collectEst(directWeekly(ev)),
@@ -74,7 +74,7 @@ class SketchRollupSpec extends SparkSpec {
       .agg(sum("n_events")).head().getLong(0) === ev.count(),
       "the exact anchor diverged under the race")
     // retry idempotence: the same tag re-staged sweeps its own files
-    CoreQueries.sketchAppendStaged(spark, dir, restA, "w1")
+    CoreQueries.sketchAppend(spark, dir, restA, Some("w1"))
     assert(CoreQueries.sketchRollup(spark, dir)
       .agg(sum("n_events")).head().getLong(0) === ev.count(),
       "a retried tag doubled its partials")

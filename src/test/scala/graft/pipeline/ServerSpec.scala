@@ -141,6 +141,28 @@ class ServerSpec extends SparkSpec {
     assert(reports.head.nRows === 800)
   }
 
+  test("a JSON task refuses a bad row like a TOML task does: it lands in failed/") {
+    val src = Files.createTempDirectory("graft_server_badrow").toString
+    Files.writeString(Paths.get(src, "d.t-schema.sql"),
+      "CREATE TABLE t (id int NOT NULL, n int, PRIMARY KEY (id));")
+    Files.writeString(Paths.get(src, "d.t.0001.csv"), "1,10\n2,oops\n3,30\n")
+    val out = Files.createTempDirectory("graft_server_badrow_out").toString
+    val spool = Files.createTempDirectory("graft_server_badrow_spool")
+    Files.createDirectories(spool.resolve("queue"))
+    Files.writeString(spool.resolve("queue/001-json.json"),
+      s"""{"sourceDir":"$src","targetDir":"$out"}""")
+    val json = Files.readString(spool.resolve("queue/001-json.json"))
+    val results = Server.drainOnce(spark, spool.toString)
+    assert(results.map(_.ok) === Seq(false))
+    assert(Files.exists(spool.resolve("failed/001-json.json")))
+    assert(!Files.exists(spool.resolve("done/001-json.json")))
+    // the JSON and TOML bodies carry the same budget
+    assert(Server.parseTask(json).maxError === TomlConfig.load(
+      s"""[mydumper]
+         |data-source-dir = "$src"
+         |""".stripMargin, targetDirOverride = Some(out)).config.maxError)
+  }
+
   test("task JSON parses filters and stateDir") {
     val cfg = Server.parseTask(
       """{"sourceDir":"/s","targetDir":"/t","filters":"a.*, !a.junk","stateDir":"/st"}""")
