@@ -1,4 +1,7 @@
 package graft
+
+import scala.collection.immutable.ListMap
+
 object Bench {
 
   /** Fixed single-thread CPU yardstick: a constant-work xorshift loop,
@@ -55,8 +58,7 @@ object Bench {
         val err: Option[String] =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
           catch { case t: Throwable =>
-            Some(Option(t.getMessage).getOrElse(t.getClass.getName)
-              .replaceAll("[\"\\\\\n\r\t]", " ").take(200)) }
+            Some(Option(t.getMessage).getOrElse(t.getClass.getName).take(200)) }
         val sec = (System.nanoTime() - t0) / 1e9
         // release the previous query's cache/localCheckpoint blocks NOW,
         // synchronously: waiting for the async ContextCleaner (GC-driven)
@@ -73,17 +75,18 @@ object Bench {
       val sec = if (ok.isEmpty) -1.0 else ok(ok.size / 2)
       (name, sec, err)
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e)) => s"\"$k\":\"$e\"" }
-      .mkString("{", ",", "}")
     // total sums every query with at least one ok rep (its median is a
     // real run time even if another rep errored — the error still
     // reports and fails the exit code); only fully-failed queries
     // (sec = -1 sentinel) are excluded, so sum(queries ok) == total
     val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
     val yardAfter = yardstick()
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"yardstick_s":{"before":$yardBefore,"after":$yardAfter},"sf":"$sfDir"}"""
+    val yard = ListMap("before" -> yardBefore, "after" -> yardAfter)
+    val fullLine = Json.write(ListMap("metric" -> "total", "value" -> total,
+      "unit" -> "sec",
+      "queries" -> ListMap(results.map { case (k, v, _) => k -> v }: _*),
+      "errors" -> ListMap(results.collect { case (k, _, Some(e)) => k -> e }: _*),
+      "yardstick_s" -> yard, "sf" -> sfDir))
     println(fullLine)
     // r19 measurement-contract repair: at 179 queries the full line is
     // ~5.3 KB, but the driver keeps only a ~2 KB tail of this process's
@@ -107,7 +110,10 @@ object Bench {
     } catch { case t: Throwable =>
       System.err.println(s"sidecar write failed: $t") }
     val nErr = results.count(_._3.isDefined)
-    println(s"""{"metric":"total","line":"compact","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$nErr,"yardstick_s":{"before":$yardBefore,"after":$yardAfter},"queries_sidecar":"$sidecar","sf":"$sfDir"}""")
+    println(Json.write(ListMap("metric" -> "total", "line" -> "compact",
+      "value" -> total, "unit" -> "sec", "n_queries" -> results.size,
+      "n_errors" -> nErr, "yardstick_s" -> yard,
+      "queries_sidecar" -> sidecar.toString, "sf" -> sfDir)))
     spark.stop()
     if (results.exists(_._3.isDefined)) sys.exit(1)
   }

@@ -23,27 +23,12 @@ object Verify {
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(SparkEntry.oracleSql))
     // a failed query leaves no output dir and silently vanishes from
     // the downstream compare (how 13 broken queries hid for two
     // rounds) — leave a loud manifest beside the outputs
     Files.writeString(Paths.get(s"$outDir/_errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v.take(300))}" }
-        .mkString("{", ",", "}"))
+      Json.write(errors.map { case (k, v) => k -> v.take(300) }))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))

@@ -103,24 +103,24 @@ object Ctl {
   def main(args: Array[String]): Unit = args.toList match {
     case "checkpoint-dump" :: stateDir :: Nil =>
       println("key,status,nRows,checksum")
-      allRecords(stateDir).foreach(r => println(s"${r.key},${r.status},${r.nRows},${r.checksum}"))
+      JobState.latest(stateDir).foreach(r => println(s"${r.key},${r.status},${r.nRows},${r.checksum}"))
 
     case "checkpoint-remove" :: stateDir :: key :: Nil =>
-      val keep = allRecords(stateDir).filter(r => key != "all" && r.key != key)
-      rewrite(stateDir, keep)
+      JobState.replace(stateDir,
+        JobState.latest(stateDir).filter(r => key != "all" && r.key != key))
       println(s"removed ${if (key == "all") "all" else key}")
 
     case "error-destroy" :: stateDir :: targetDir :: key :: Nil =>
       // `all` = every FAILED table (the reference's
       // `--checkpoint-error-destroy=all`, tests/checkpoint_error_destroy
       // loops it between retries); verified tables are never touched
-      val records = allRecords(stateDir)
+      val records = JobState.latest(stateDir)
       val victims =
         if (key == "all") records.filter(_.status == "failed").map(_.key)
         else Seq(key)
       victims.foreach(k =>
         graft.GraftSession.deleteRec(Paths.get(targetDir, k)))
-      rewrite(stateDir, records.filterNot(r => victims.contains(r.key)))
+      JobState.replace(stateDir, records.filterNot(r => victims.contains(r.key)))
       victims.foreach(k => println(s"destroyed $k"))
 
     case "compact" :: targetDir :: table :: rest =>
@@ -494,19 +494,5 @@ object Ctl {
     Files.deleteIfExists(stop)
     dead.map(d => d.exception.map(_.getMessage)
       .getOrElse("stream stopped unexpectedly (no exception recorded)"))
-  }
-
-  private def allRecords(stateDir: String): Seq[JobState.Record] = {
-    val f = Paths.get(stateDir, "state.jsonl")
-    if (!Files.exists(f)) return Seq.empty
-    val latest = scala.collection.mutable.LinkedHashMap[String, JobState.Record]()
-    Files.readAllLines(f).forEach { l => JobState.parse(l).foreach(r => latest(r.key) = r) }
-    latest.values.toSeq
-  }
-
-  private def rewrite(stateDir: String, records: Seq[JobState.Record]): Unit = {
-    val f = Paths.get(stateDir, "state.jsonl")
-    Files.createDirectories(f.getParent)
-    Files.writeString(f, records.map(JobState.render).map(_ + "\n").mkString)
   }
 }

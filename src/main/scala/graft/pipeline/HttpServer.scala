@@ -4,9 +4,12 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer => JdkHttpServer}
+
+import graft.Json
 
 /** HTTP front for the spool-directory task queue — the reference's
   * REST surface (`lightning/lightning.go:137-144` routes, handlers
@@ -16,14 +19,14 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer => JdkHttpServer}
   * process:
   *
   *   GET    /tasks                 {"queue":[names…]} in execution order
-  *   POST   /tasks[?name=n]        enqueue flat-JSON task body → {"id":name}
+  *   POST   /tasks[?name=n]        enqueue JSON task body → {"id":name}
   *   GET    /tasks/{name}          task JSON (queued, done, or failed)
   *   DELETE /tasks/{name}          cancel a QUEUED task (= reference
   *                                 DELETE /tasks/{id})
   *   GET    /tasks/{name}/result   result record from done/ or failed/
-  *   GET    /tasks/{name}/progress job-state records for the task's
-  *                                 stateDir (= reference
-  *                                 /progress/task|table)
+  *   GET    /tasks/{name}/progress the latest job-state record per
+  *                                 table in the task's stateDir
+  *                                 (= reference /progress/task|table)
   *   PATCH  /tasks/{name}/front    move to queue head (reference
   *   PATCH  /tasks/{name}/back     PATCH /tasks/{id}/front|back)
   *   GET    /pause                 {"paused":bool}
@@ -92,7 +95,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer => JdkHttpServer}
   * LAZILY on first use, so pure queue administration stays as light
   * as before.
   *
-  * The body format is the spool queue's flat-JSON task (`sourceDir`,
+  * The body format is the spool queue's JSON task (`sourceDir`,
   * `targetDir`, optional `filters`, `stateDir`) — validated with
   * [[Server.parseTask]] BEFORE it is enqueued, so a malformed task
   * 400s at submission instead of failing later in the drain loop.
@@ -103,45 +106,22 @@ object HttpServer {
 
   /** Start a shim bound to `port` (0 = ephemeral); returns the server
     * (call `.stop(0)` to shut down) — separated from [[main]] so specs
-    * can run a real localhost round trip.
+    * can run a real localhost round trip. Each optional directory
+    * attaches its verbs: `doorDir` the drift door's, `guardDir` the
+    * eval firewall's (the `<admittedDir>_guard` tree a guarded
+    * [[graft.streaming.StreamingOps.doorChain]] writes), `corpusDir`
+    * the governance verbs (`POST /forget`, `GET /forget/…`) against
+    * that corpus's standing layouts, and `fedRoot` the federation's
+    * `GET /unrouted` (`<fedRoot>/unrouted`, rows whose corpus tag
+    * matched no registered tenant, the tag kept). `sparkProvider`
+    * supplies the session those verbs need, invoked lazily on first
+    * use.
     */
-  def start(spool: String, port: Int): JdkHttpServer =
-    start(spool, port, None, () => graft.GraftSession.session())
-
-  def start(spool: String, port: Int, doorDir: Option[String],
-      sparkProvider: () => org.apache.spark.sql.SparkSession): JdkHttpServer =
-    start(spool, port, doorDir, None, sparkProvider)
-
-  /** Full form: `doorDir` attaches the drift-door verbs, `guardDir`
-    * the eval-firewall verbs (the `<admittedDir>_guard` tree a guarded
-    * [[graft.streaming.StreamingOps.doorChain]] writes);
-    * `sparkProvider` supplies the session they need (lazily invoked —
-    * specs pass their own session, [[main]] builds one on first use).
-    */
-  def start(spool: String, port: Int, doorDir: Option[String],
-      guardDir: Option[String],
-      sparkProvider: () => org.apache.spark.sql.SparkSession): JdkHttpServer =
-    start(spool, port, doorDir, guardDir, None, sparkProvider)
-
-  /** `corpusDir` additionally attaches the governance verbs
-    * (`POST /forget`, `GET /forget/pending`) against that corpus's
-    * standing layouts.
-    */
-  def start(spool: String, port: Int, doorDir: Option[String],
-      guardDir: Option[String], corpusDir: Option[String],
-      sparkProvider: () => org.apache.spark.sql.SparkSession): JdkHttpServer =
-    start(spool, port, doorDir, guardDir, corpusDir, None, sparkProvider)
-
-  /** Fullest form: `fedRoot` additionally attaches the federation's
-    * `GET /unrouted` — the router's misroute evidence
-    * (`<fedRoot>/unrouted`, rows whose corpus tag matched no
-    * registered tenant, the tag kept) served as a relation instead
-    * of requiring filesystem access.
-    */
-  def start(spool: String, port: Int, doorDir: Option[String],
-      guardDir: Option[String], corpusDir: Option[String],
-      fedRoot: Option[String],
-      sparkProvider: () => org.apache.spark.sql.SparkSession): JdkHttpServer = {
+  def start(spool: String, port: Int, doorDir: Option[String] = None,
+      guardDir: Option[String] = None, corpusDir: Option[String] = None,
+      fedRoot: Option[String] = None,
+      sparkProvider: () => org.apache.spark.sql.SparkSession =
+        () => graft.GraftSession.session()): JdkHttpServer = {
     val queue = Files.createDirectories(Paths.get(spool, "queue"))
     val srv = JdkHttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
@@ -153,7 +133,7 @@ object HttpServer {
       ex.close()
     }
     def err(ex: HttpExchange, code: Int, msg: String): Unit =
-      respond(ex, code, s"""{"error":${jsonStr(msg)}}""")
+      respond(ex, code, Json.write(Map("error" -> msg)))
 
     def listQueue(): Seq[String] = {
       val l = Files.list(queue)
@@ -196,10 +176,8 @@ object HttpServer {
           case ("GET", Nil) =>
             // running tasks stay listed for their whole lifetime — a
             // polling client must not see a claimed task "vanish"
-            respond(ex, 200,
-              listQueue().map(jsonStr).mkString("""{"queue":[""", ",", "],") +
-                Server.runningTasks(spool).map(jsonStr)
-                  .mkString(""""running":[""", ",", "]}"))
+            respond(ex, 200, Json.write(ListMap(
+              "queue" -> listQueue(), "running" -> Server.runningTasks(spool))))
           case ("POST", Nil) =>
             val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
             val invalid =
@@ -216,14 +194,13 @@ object HttpServer {
             }
           case ("DELETE", name :: Nil) =>
             if (valid(name) && Files.deleteIfExists(queue.resolve(name)))
-              respond(ex, 200, s"""{"cancelled":${jsonStr(name)}}""")
+              respond(ex, 200, Json.write(Map("cancelled" -> name)))
             else err(ex, 404, s"no queued task: $name")
           case ("GET", List(name, "progress")) =>
-            // the reference's /progress/task|table analog: the task's
-            // job-state records (one JSON object per line in the
-            // task's stateDir), returned as a JSON array — per-table
-            // status/rows/checksum, the same facts the reference's
-            // progress endpoints serve
+            // the reference's /progress/task|table analog: the latest
+            // job-state record per table in the task's stateDir, as a
+            // JSON array — per-table status/rows/checksum, the same
+            // facts the reference's progress endpoints serve
             findTask(name) match {
               case None => err(ex, 404, s"task not found: $name")
               case Some(p) =>
@@ -237,11 +214,8 @@ object HttpServer {
                   case Left(msg) =>
                     err(ex, 422, s"task body does not parse: $msg")
                   case Right(stateDir) =>
-                    val lines = stateDir.map(d => Paths.get(d, "state.jsonl"))
-                      .filter(Files.isRegularFile(_))
-                      .map(f => Files.readAllLines(f).asScala.toSeq)
-                      .getOrElse(Seq.empty)
-                    respond(ex, 200, lines.mkString("[", ",", "]"))
+                    respond(ex, 200, Json.write(stateDir.toSeq
+                      .flatMap(JobState.latest).map(JobState.fields)))
                 }
             }
           case ("GET", List(name, "result")) =>
@@ -254,7 +228,7 @@ object HttpServer {
             }
           case ("PATCH", List(name, dir)) if dir == "front" || dir == "back" =>
             Server.reorder(spool, name, front = dir == "front") match {
-              case Some(n) => respond(ex, 200, s"""{"id":${jsonStr(n)}}""")
+              case Some(n) => respond(ex, 200, Json.write(Map("id" -> n)))
               case None => err(ex, 404, s"no queued task: $name")
             }
           case (m, _) => err(ex, 405, s"unsupported: $m ${ex.getRequestURI.getPath}")
@@ -298,27 +272,9 @@ object HttpServer {
           }
         }
       } finally Files.deleteIfExists(tmp)
-      respond(ex, 200, s"""{"id":${jsonStr(name)}}""")
+      respond(ex, 200, Json.write(Map("id" -> name)))
     }
 
-    // generic value → JSON, covering the audit's v2 nesting (the
-    // axes map of structs) so the feeds need no per-schema code —
-    // shared by the door and guard verb blocks
-    def jval(v: Any): String = v match {
-      case null => "null"
-      case s: String => jsonStr(s)
-      case m: Map[_, _] => m.toSeq
-        .map { case (k, mv) => s"${jsonStr(String.valueOf(k))}:${jval(mv)}" }
-        .sorted.mkString("{", ",", "}")
-      case r: org.apache.spark.sql.Row if r.schema != null =>
-        r.schema.fieldNames.zipWithIndex
-          .map { case (f, i) =>
-            s"${jsonStr(f)}:${jval(if (r.isNullAt(i)) null else r.get(i))}" }
-          .mkString("{", ",", "}")
-      case sq: Seq[_] => sq.map(jval).mkString("[", ",", "]")
-      case other => other.toString
-    }
-    def rowJson(r: org.apache.spark.sql.Row): String = jval(r)
     def qparam(ex: HttpExchange, k: String): Option[String] =
       Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
         .collectFirst { case kv if kv.startsWith(k + "=") => kv.stripPrefix(k + "=") }
@@ -376,9 +332,7 @@ object HttpServer {
             .stripPrefix("/").split("/").toList.filter(_.nonEmpty)
           (ex.getRequestMethod, rest) match {
             case ("GET", List("released")) =>
-              respond(ex, 200,
-                releasedIds().map(_.toString)
-                  .mkString("""{"released":[""", ",", "]}"))
+              respond(ex, 200, Json.write(Map("released" -> releasedIds())))
             case ("GET", List("audit")) =>
               // a 24/7 door accrues one audit row per (batch, event)
               // FOREVER — the feed is unbounded at steady state, so the
@@ -392,7 +346,7 @@ object HttpServer {
               val limit = qparam(ex, "limit").flatMap(_.toIntOption)
                 .filter(_ >= 0).getOrElse(10000)
               val rows = auditDf() match {
-                case None => Seq.empty[String]
+                case None => Seq.empty[org.apache.spark.sql.Row]
                 case Some(df0) =>
                   val df = since.fold(df0)(b =>
                     df0.where(org.apache.spark.sql.functions.col("batch_id") > b))
@@ -406,9 +360,8 @@ object HttpServer {
                       org.apache.spark.sql.functions.col(c).desc): _*)
                     .limit(limit)
                     .collect().toSeq.reverse
-                    .map(rowJson)
               }
-              respond(ex, 200, rows.mkString("[", ",", "]"))
+              respond(ex, 200, Json.write(rows))
             case ("GET", List("quarantined")) =>
               // the operator's "what awaits inspection" view: every
               // routed batch the door quarantined, minus the ones
@@ -428,8 +381,8 @@ object HttpServer {
                 .filter(_ >= 0).getOrElse(10000)
               val released = releasedIds()
               val rows = auditDf() match {
-                case None => Seq.empty[String]
-                case Some(df) if !df.columns.contains("drifted") => Seq.empty[String]
+                case None => Seq.empty[org.apache.spark.sql.Row]
+                case Some(df) if !df.columns.contains("drifted") => Seq.empty[org.apache.spark.sql.Row]
                 case Some(df) =>
                   import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
                   val routed =
@@ -473,10 +426,8 @@ object HttpServer {
                     .orderBy(col("batch_id").desc)
                     .limit(qlimit)
                     .collect().toSeq.reverse
-                    .map(rowJson)
               }
-              respond(ex, 200,
-                rows.mkString("""{"quarantined":[""", ",", "]}"))
+              respond(ex, 200, Json.write(Map("quarantined" -> rows)))
             case ("POST", List("release", id))
                 if id.nonEmpty && id.forall(c => c >= '0' && c <= '9') =>
               // toLongOption: a 20+-digit id is operator input error
@@ -489,7 +440,7 @@ object HttpServer {
                   try {
                     val n = graft.streaming.StreamingOps
                       .quarantineRelease(spark, dd, bid)
-                    respond(ex, 200, s"""{"released":$bid,"n_docs":$n}""")
+                    respond(ex, 200, Json.write(ListMap("released" -> bid, "n_docs" -> n)))
                   } catch {
                     // refusals are operator answers, not server faults
                     case e: IllegalArgumentException => err(ex, 409, e.getMessage)
@@ -518,7 +469,7 @@ object HttpServer {
               val limit = qparam(ex, "limit").flatMap(_.toIntOption)
                 .filter(_ >= 0).getOrElse(10000)
               val rows = sinkDf(Paths.get(gd, "contaminated")) match {
-                case None => Seq.empty[String]
+                case None => Seq.empty[org.apache.spark.sql.Row]
                 case Some(df0) =>
                   val df1 = df0.drop("embedding")
                   val df = since.fold(df1)(b =>
@@ -526,16 +477,16 @@ object HttpServer {
                   df.orderBy(
                     org.apache.spark.sql.functions.col("batch_id").desc,
                     org.apache.spark.sql.functions.col("vec_id").desc)
-                    .limit(limit).collect().reverse.map(rowJson).toSeq
+                    .limit(limit).collect().reverse.toSeq
               }
-              respond(ex, 200, rows.mkString("""{"contaminated":[""", ",", "]}"))
+              respond(ex, 200, Json.write(Map("contaminated" -> rows)))
             // sink totals — the one-line health readout an ingest
             // dashboard polls (counts are metadata-cheap on parquet)
             case ("GET", List("stats")) =>
               def n(d: String): Long =
                 sinkDf(Paths.get(gd, d)).map(_.count()).getOrElse(0L)
-              respond(ex, 200,
-                s"""{"clean":${n("clean")},"contaminated":${n("contaminated")}}""")
+              respond(ex, 200, Json.write(ListMap(
+                "clean" -> n("clean"), "contaminated" -> n("contaminated"))))
             case (m, p) =>
               err(ex, 405, s"unsupported: $m /guard/${p.mkString("/")}")
           }
@@ -555,36 +506,33 @@ object HttpServer {
               // whole tier is at-least-once safe, so a client retry
               // of the same cohort is absorbed (dn=0 everywhere).
               val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-              val idsRe = """"ids"\s*:\s*\[([^\]]*)\]""".r
-              idsRe.findFirstMatchIn(body).map(_.group(1)) match {
+              scala.util.Try(Json.read(body)).toOption
+                .flatMap(o => Option(o.get("ids"))).filter(_.isArray)
+                .map(_.asScala.toSeq) match {
                 case None => err(ex, 400, """body must carry {"ids":[...]}""")
                 case Some(arr) =>
-                  val toks = arr.split(",").map(_.trim).filter(_.nonEmpty)
-                  val ids = toks.flatMap(_.toLongOption).toSeq
-                  if (ids.isEmpty || ids.size != toks.length)
+                  if (arr.isEmpty || !arr.forall(v => v.isIntegralNumber && v.canConvertToLong))
                     err(ex, 400, "ids must be a non-empty array of integers")
                   else {
-                    val applied = Governance.applyForget(spark, cd, ids)
-                    respond(ex, 200, applied
-                      .map { case (l, s) => s"${jsonStr(l)}:$s" }
-                      .mkString("""{"applied":{""", ",", "}}"))
+                    // each layout's summary is itself a JSON object
+                    val applied = Governance.applyForget(spark, cd, arr.map(_.longValue))
+                    respond(ex, 200, Json.write(Map("applied" ->
+                      ListMap(applied.map { case (l, s) => l -> Json.read(s) }: _*))))
                   }
               }
             case ("GET", List("pending")) =>
               // tombstones standing per layout — hidden from serving
               // but not yet physically deleted; index-compact retires
-              respond(ex, 200, Governance.pendingForgets(spark, cd)
-                .map { case (l, n) => s"${jsonStr(l)}:$n" }
-                .mkString("""{"pending":{""", ",", "}}"))
+              respond(ex, 200, Json.write(Map("pending" ->
+                ListMap(Governance.pendingForgets(spark, cd): _*))))
             case ("GET", List("lag")) =>
               // append positions for every present batch-maintained
               // layout (−1 = standing but no streamed append ever
               // committed there); the knn rows additionally carry the
               // radius asymmetry — appends feed only the maintainer's
               // session radius, so the other radius's lag is visible
-              respond(ex, 200, Governance.appendLag(cd)
-                .map { case (l, b) => s"${jsonStr(l)}:$b" }
-                .mkString("""{"append_last_batch":{""", ",", "}}"))
+              respond(ex, 200, Json.write(Map("append_last_batch" ->
+                ListMap(Governance.appendLag(cd): _*))))
             case ("GET", List("log")) =>
               // the audit ledger, newest first — ?limit=N caps the
               // page (default 1000); an absorbed retry shows as its
@@ -593,11 +541,11 @@ object HttpServer {
                 .filter(_ >= 0).getOrElse(1000)
               val rows = Governance.forgetLog(spark, cd).limit(limit)
                 .collect().map { r =>
-                  s"""{"ts":${r.getLong(0)},"cohort":${jsonStr(r.getString(1))},""" +
-                    s""""n_ids":${r.getInt(2)},"layout":${jsonStr(r.getString(3))},""" +
-                    s""""applied":${r.getString(4)}}"""
+                  ListMap("ts" -> r.getLong(0), "cohort" -> r.getString(1),
+                    "n_ids" -> r.getInt(2), "layout" -> r.getString(3),
+                    "applied" -> Json.read(r.getString(4)))
                 }
-              respond(ex, 200, rows.mkString("""{"log":[""", ",", "]}"))
+              respond(ex, 200, Json.write(Map("log" -> rows)))
             case (m, p) =>
               err(ex, 405, s"unsupported: $m /forget/${p.mkString("/")}")
           }
@@ -620,26 +568,17 @@ object HttpServer {
             val limit = qparam(ex, "limit").flatMap(_.toIntOption)
               .filter(_ >= 0).getOrElse(1000)
             if (!graft.GraftSession.hasVisibleData(dir))
-              respond(ex, 200, """{"n":0,"rows":[]}""")
+              respond(ex, 200, Json.write(ListMap("n" -> 0, "rows" -> Nil)))
             else {
+              // rows are written with their NULLs as JSON null:
+              // unrouted is exactly where malformed producer rows land
               val df = spark.read.parquet(dir.toString)
                 .select("doc_id", "lang", "corpus")
               val n = df.count()
               val rows = df
                 .orderBy(org.apache.spark.sql.functions.col("doc_id"))
-                .limit(limit).collect().map { r =>
-                  // every field null-guards: unrouted is exactly where
-                  // malformed producer rows land, and one NULL doc_id
-                  // must not 500 the whole evidence page forever
-                  val id = if (r.isNullAt(0)) "null" else r.getLong(0).toString
-                  val lang =
-                    if (r.isNullAt(1)) "null" else jsonStr(r.getString(1))
-                  val tag =
-                    if (r.isNullAt(2)) "null" else jsonStr(r.getString(2))
-                  s"""{"doc_id":$id,"lang":$lang,"corpus":$tag}"""
-                }
-              respond(ex, 200,
-                s"""{"n":$n,"rows":[${rows.mkString(",")}]}""")
+                .limit(limit).collect()
+              respond(ex, 200, Json.write(ListMap("n" -> n, "rows" -> rows)))
             }
           }
         } catch { case e: Exception => err(ex, 500, String.valueOf(e.getMessage)) }
@@ -649,11 +588,11 @@ object HttpServer {
     srv.createContext("/pause", (ex: HttpExchange) => {
       val p = Paths.get(spool, "pause")
       ex.getRequestMethod match {
-        case "GET" => respond(ex, 200, s"""{"paused":${Files.exists(p)}}""")
+        case "GET" => respond(ex, 200, Json.write(Map("paused" -> Files.exists(p))))
         case "PUT" | "POST" =>
           try Files.createFile(p)
           catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          respond(ex, 200, """{"paused":true}""")
+          respond(ex, 200, Json.write(Map("paused" -> true)))
         case m => err(ex, 405, s"unsupported: $m /pause")
       }
     })
@@ -661,27 +600,13 @@ object HttpServer {
       ex.getRequestMethod match {
         case "PUT" | "POST" =>
           Files.deleteIfExists(Paths.get(spool, "pause"))
-          respond(ex, 200, """{"paused":false}""")
+          respond(ex, 200, Json.write(Map("paused" -> false)))
         case m => err(ex, 405, s"unsupported: $m /resume")
       }
     })
 
     srv.start()
     srv
-  }
-
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    Option(s).getOrElse("").foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < ' ' => sb ++= "\\u%04x".format(c.toInt)
-      case c => sb += c
-    }
-    sb.append('"').toString
   }
 
   def main(args: Array[String]): Unit = {
@@ -692,8 +617,9 @@ object HttpServer {
     val guard = args.lift(3)
     val corpus = args.lift(4)
     val fed = args.lift(5)
-    val srv = start(spool, port, door, guard, corpus, fed,
-      () => graft.GraftSession.session())
+    val srv = start(spool, port, doorDir = door, guardDir = guard,
+      corpusDir = corpus, fedRoot = fed,
+      sparkProvider = () => graft.GraftSession.session())
     println(s"graft task API on http://127.0.0.1:${srv.getAddress.getPort} (spool: $spool" +
       door.map(d => s", door: $d").getOrElse("") +
       guard.map(g => s", guard: $g").getOrElse("") +

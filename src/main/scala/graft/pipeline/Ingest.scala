@@ -945,19 +945,30 @@ object Ingest {
             val base = math.max(effPriorMaxId, NullFillBase)
             union.withColumn(existing,
               coalesce(col(existing), synthFor(c, base).cast(union.schema(existing).dataType)))
-          case Some(existing) =>
+          case None if wide(c) =>
+            // column fully absent: every ID is synthesized, so the
+            // low range starting after the prior run's max is safe
+            union.withColumn(c.name, synthFor(c, effPriorMaxId))
+          case carried =>
             // narrow column: dense fills above the batch's explicit max
             // — they must fit the type. ONE single-column agg finds the
             // max and the null count together; the common all-explicit
             // dump pays only that narrow pass, never the counting
-            // materialization
-            val stats = union.agg(
-              max(col(existing).cast("long")),
-              org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.when(col(existing).isNull, 1))).head
-            val explicitMax = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-            val nNulls = stats.getLong(1)
-            if (nNulls == 0L) union
+            // materialization. An absent column is an all-NULL carried
+            // one with nothing to aggregate: every row fills above the
+            // prior run's max
+            val existing = carried.getOrElse(c.name)
+            val src =
+              if (carried.isDefined) union
+              else union.withColumn(existing, lit(null).cast("long"))
+            val (explicitMax, anyNull) = carried.fold((0L, true)) { _ =>
+              val stats = union.agg(
+                max(col(existing).cast("long")),
+                org.apache.spark.sql.functions.count(
+                  org.apache.spark.sql.functions.when(col(existing).isNull, 1))).head
+              (if (stats.isNullAt(0)) 0L else stats.getLong(0), stats.getLong(1) > 0L)
+            }
+            if (!anyNull) union
             else {
               val base = math.max(effPriorMaxId, explicitMax)
               // fills are base + ROW POSITION (every row is numbered;
@@ -966,7 +977,7 @@ object Ingest {
               // — guard on exactly that, BEFORE the non-ANSI cast would
               // null an overflow out silently. The row-ID checkpoint's
               // one counting job reports that position
-              val ids = RowTransform.denseIds(union, Some(existing))
+              val ids = RowTransform.denseIds(src, Some(existing))
               val maxFill = base + ids.lastNull
               val ceil = narrowTypeMax(c)
               if (maxFill > ceil) throw new IllegalStateException(
@@ -975,15 +986,9 @@ object Ingest {
                   s"${d.db}.${d.table}.${c.name}: highest fill id $maxFill " +
                   s"exceeds the type max $ceil")
               ids.withIds(FillCol, base).withColumn(existing,
-                  coalesce(col(existing), col(FillCol).cast(union.schema(existing).dataType)))
+                  coalesce(col(existing), col(FillCol).cast(src.schema(existing).dataType)))
                 .drop(FillCol)
             }
-          case None if wide(c) =>
-            // column fully absent: every ID is synthesized, so the
-            // low range starting after the prior run's max is safe
-            union.withColumn(c.name, synthFor(c, effPriorMaxId))
-          case None =>
-            RowTransform.chunkedRowId(union, c.name, effPriorMaxId)
         }
       case None => union
     }

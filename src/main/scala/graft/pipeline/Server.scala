@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -23,8 +24,9 @@ import org.apache.spark.sql.SparkSession
   *                                 delete to resume
   *   <spool>/stop                  drain loop exits after current poll
   *
-  * A task file is a flat JSON object: `sourceDir`, `targetDir`,
-  * optional `filters` (comma-separated), optional `stateDir`. Progress
+  * A task file is a JSON object ([[parseTask]]): `sourceDir`,
+  * `targetDir`, optional `filters` (comma-separated), optional
+  * `stateDir`. Progress
   * is observable via the task's job-state records (the reference's
   * `/progress/table` analog).
   */
@@ -113,8 +115,8 @@ object Server {
         Files.move(claimed, dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         Files.deleteIfExists(lock)
         Files.writeString(dest.resolveSibling(name + ".result"),
-          s"""{"task":${jsonStr(result.task)},"ok":${result.ok},""" +
-            s""""tables":${result.tables},"detail":${jsonStr(result.detail)}}\n""")
+          graft.Json.write(ListMap("task" -> result.task, "ok" -> result.ok,
+            "tables" -> result.tables, "detail" -> result.detail)) + "\n")
         Some(result)
       }
     }
@@ -322,49 +324,33 @@ object Server {
     }
   }
 
-  /** Minimal JSON string escaping — error messages carry quotes and
-    * newlines, which must not corrupt the result file.
-    */
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    Option(s).getOrElse("").foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < ' ' => sb ++= "\\u%04x".format(c.toInt)
-      case c => sb += c
-    }
-    sb.append('"').toString
-  }
-
-  /** Task body parse: flat JSON (the spool's native shape) or a full
-    * `tidb-lightning.toml` — the reference's HTTP API takes the TOML
-    * config itself as the POST body (`curl http://…:8289/tasks
+  /** Task body parse: a JSON object (the spool's native shape) or a
+    * full `tidb-lightning.toml` — the reference's HTTP API takes the
+    * TOML config itself as the POST body (`curl http://…:8289/tasks
     * --data-binary @tidb-lightning.toml`, sample config
-    * `tidb-lightning.toml:12-17`), so the queue accepts both.
+    * `tidb-lightning.toml:12-17`), so the queue accepts both. A JSON
+    * body is standard JSON, read by [[graft.Json]], so escaped slashes
+    * and unicode escapes decode: string fields `sourceDir`, `targetDir`,
+    * optional `stateDir` and optional `filters` (one comma-separated
+    * string); other fields are ignored. A body that is not JSON or
+    * lacks a required field is an `IllegalArgumentException`.
     */
   private[pipeline] def parseTask(body: String): Ingest.Config =
-    if (body.trim.startsWith("{")) parseJsonTask(body)
-    else TomlConfig.load(body).config
-
-  /** Minimal flat-JSON task parse (same conventions as JobState). */
-  private def parseJsonTask(json: String): Ingest.Config = {
-    def str(key: String): Option[String] =
-      (s""""$key"\\s*:\\s*"([^"]*)"""").r.findFirstMatchIn(json).map(_.group(1))
-    val source = str("sourceDir").getOrElse(
-      throw new IllegalArgumentException("task missing sourceDir"))
-    val target = str("targetDir").getOrElse(
-      throw new IllegalArgumentException("task missing targetDir"))
-    Ingest.Config(
-      sourceDir = source,
-      targetDir = target,
-      filters = str("filters").map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Nil),
-      stateDir = str("stateDir"),
-      maxError = Ingest.TaskMaxError)
-  }
+    if (!body.trim.startsWith("{")) TomlConfig.load(body).config
+    else {
+      val o = graft.Json.read(body)
+      def str(key: String): Option[String] =
+        Option(o.get(key)).filter(_.isTextual).map(_.textValue)
+      def required(key: String): String = str(key).getOrElse(
+        throw new IllegalArgumentException(s"task missing $key"))
+      Ingest.Config(
+        sourceDir = required("sourceDir"),
+        targetDir = required("targetDir"),
+        filters = str("filters").map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
+          .getOrElse(Nil),
+        stateDir = str("stateDir"),
+        maxError = Ingest.TaskMaxError)
+    }
 
   /** Long-running loop: poll the queue until `<spool>/stop` appears. */
   def main(args: Array[String]): Unit = {

@@ -2,9 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{GraftSession, Json}
 
 /** Scaling probe: run the REAL operators (same `queries` entries the
   * driver gates) on k-fold self-unioned copies of the sf0.1 corpus and
@@ -444,25 +446,19 @@ object ScalingProbe {
           }.toMap))
       }
 
-    def render(m: Map[String, Map[Int, Double]]): String =
-      m.toSeq.sortBy(_._1).map { case (n, t) =>
-        val s = t.toSeq.sorted.map { case (k, sec) =>
-          // Locale.ROOT: a comma-decimal default locale would emit 0,52
-          s""""${k}x":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec))}"""
-        }
-        s""""$n":{${s.mkString(",")}}"""
-      }.mkString(",")
-
-    val baseJson = base.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val aboveBlock =
-      if (above.isEmpty) ""
-      else s""","above_floor":{${render(above)}}"""
-    println(s"""{"metric":"scaling","sf_base":"$baseJson","caveat":"self-union multiplies duplicate groups; pair-family output grows ~k^2 by construction; the 'real' block folds WITHOUT duplicating groups (per-copy content perturbation), isolating the operator's true slope; 'above_floor' is the real-shaped 16/32/64/128x ladder (each point when maxK allows) where the derived knn plane count steps (knn_planes row) - *_build = cold layout build + serve, bare name = standing-layout serve, q_winnow_align = the doc-side row (no standing layout, one timed run); q_eval_guard_build/q_eval_guard = the eval firewall ladder (reference registry grows with the fold, probe batch fixed at 30 rows - serve must stay ~flat) and q_decontaminate_semantic = the audit's expected-linear row; doc folds use keyed full-alphabet substitutions (distinct per copy - r14's 17-rotation 16x ceiling is gone), embedding folds the rot x flip orthogonal family (distinct to 4096x)","linear":{${render(linear)}},"pairs":{${render(pairs)}},"real":{${render(real)}}$aboveBlock}""")
+    // Locale.ROOT: a comma-decimal default locale would emit 0,52
+    def render(m: Map[String, Map[Int, Double]]) =
+      ListMap(m.toSeq.sortBy(_._1).map { case (n, t) =>
+        n -> ListMap(t.toSeq.sorted.map { case (k, sec) =>
+          s"${k}x" -> new java.math.BigDecimal(
+            String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec)))
+        }: _*)
+      }: _*)
+    println(Json.write(ListMap("metric" -> "scaling", "sf_base" -> base,
+      "caveat" -> "self-union multiplies duplicate groups; pair-family output grows ~k^2 by construction; the 'real' block folds WITHOUT duplicating groups (per-copy content perturbation), isolating the operator's true slope; 'above_floor' is the real-shaped 16/32/64/128x ladder (each point when maxK allows) where the derived knn plane count steps (knn_planes row) - *_build = cold layout build + serve, bare name = standing-layout serve, q_winnow_align = the doc-side row (no standing layout, one timed run); q_eval_guard_build/q_eval_guard = the eval firewall ladder (reference registry grows with the fold, probe batch fixed at 30 rows - serve must stay ~flat) and q_decontaminate_semantic = the audit's expected-linear row; doc folds use keyed full-alphabet substitutions (distinct per copy - r14's 17-rotation 16x ceiling is gone), embedding folds the rot x flip orthogonal family (distinct to 4096x)",
+      "linear" -> render(linear), "pairs" -> render(pairs),
+      "real" -> render(real)) ++
+      (if (above.isEmpty) Nil else Seq("above_floor" -> render(above)))))
     spark.stop()
   }
 }

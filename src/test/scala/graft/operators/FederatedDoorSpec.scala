@@ -198,8 +198,8 @@ class FederatedDoorSpec extends SparkSpec {
       // text bodies omitted)
       val spool = java.nio.file.Files
         .createTempDirectory("graft_fed_spool").toString
-      val srv = graft.pipeline.HttpServer.start(spool, 0, None, None,
-        None, Some(fedRoot), () => spark)
+      val srv = graft.pipeline.HttpServer.start(spool, 0,
+        fedRoot = Some(fedRoot), sparkProvider = () => spark)
       try {
         val client = java.net.http.HttpClient.newHttpClient()
         val resp = client.send(

@@ -46,7 +46,7 @@ class HttpDoorSpec extends SparkSpec {
     } finally q.stop()
 
     val spool = java.nio.file.Files.createTempDirectory("graft_hd_spool").toString
-    val srv = HttpServer.start(spool, 0, Some(doorDir), () => spark)
+    val srv = HttpServer.start(spool, 0, doorDir = Some(doorDir), sparkProvider = () => spark)
     val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
     try {
       assert(req(base, "GET", "/door/released") === ((200, """{"released":[]}""")))
@@ -111,7 +111,7 @@ class HttpDoorSpec extends SparkSpec {
       .toDF("batch_id", "event", "n_docs", "lang_l1_ppm", "lang_drifted")
       .coalesce(1).write.mode("append").parquet(audit)
     val spool = java.nio.file.Files.createTempDirectory("graft_hd_spool3").toString
-    val srv = HttpServer.start(spool, 0, Some(doorDir), () => spark)
+    val srv = HttpServer.start(spool, 0, doorDir = Some(doorDir), sparkProvider = () => spark)
     val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
     try {
       val (code, body) = req(base, "GET", "/door/audit")
@@ -134,7 +134,7 @@ class HttpDoorSpec extends SparkSpec {
     row.coalesce(1).write.mode("append").parquet(s"$doorDir/audit")
     row.coalesce(1).write.mode("append").parquet(s"$doorDir/audit")
     val spool = java.nio.file.Files.createTempDirectory("graft_hd_spool4").toString
-    val srv = HttpServer.start(spool, 0, Some(doorDir), () => spark)
+    val srv = HttpServer.start(spool, 0, doorDir = Some(doorDir), sparkProvider = () => spark)
     val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
     try {
       val (code, body) = req(base, "GET", "/door/quarantined")
@@ -160,7 +160,7 @@ class HttpDoorSpec extends SparkSpec {
   test("a fresh door serves empty feeds, not a schema-inference crash") {
     val doorDir = java.nio.file.Files.createTempDirectory("graft_hd_fresh").toString
     val spool = java.nio.file.Files.createTempDirectory("graft_hd_spool2").toString
-    val srv = HttpServer.start(spool, 0, Some(doorDir), () => spark)
+    val srv = HttpServer.start(spool, 0, doorDir = Some(doorDir), sparkProvider = () => spark)
     val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
     try {
       assert(req(base, "GET", "/door/audit") === ((200, "[]")))
@@ -212,7 +212,7 @@ class HttpDoorSpec extends SparkSpec {
     } finally q.stop()
 
     val spool = java.nio.file.Files.createTempDirectory("graft_hd_spool4").toString
-    val srv = HttpServer.start(spool, 0, None, Some(guardDir), () => spark)
+    val srv = HttpServer.start(spool, 0, guardDir = Some(guardDir), sparkProvider = () => spark)
     val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
     try {
       val (cc, cb) = req(base, "GET", "/guard/contaminated")

@@ -43,8 +43,8 @@ class HttpGovernanceSpec extends SparkSpec {
     assert(DedupQueries.dedupSimhashPairs(spark, corpusDir).count() >= 0)
 
     val spool = java.nio.file.Files.createTempDirectory("graft_hg_spool").toString
-    val srv = HttpServer.start(spool, 0, None, None, Some(corpusDir),
-      () => spark)
+    val srv = HttpServer.start(spool, 0, corpusDir = Some(corpusDir),
+      sparkProvider = () => spark)
     val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
     try {
       // malformed bodies are client errors, not 500s
@@ -133,8 +133,8 @@ class HttpGovernanceSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$fedRoot/unrouted")
     val spool = java.nio.file.Files
       .createTempDirectory("graft_hg_spool2").toString
-    val srv = HttpServer.start(spool, 0, None, None, None, Some(fedRoot),
-      () => spark)
+    val srv = HttpServer.start(spool, 0, fedRoot = Some(fedRoot),
+      sparkProvider = () => spark)
     val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
     try {
       val (c, b) = req(base, "GET", "/unrouted")

@@ -107,6 +107,24 @@ class HttpServerSpec extends AnyFunSuite {
     }
   }
 
+  test("GET progress over an exotic table key serves JSON the codec parses") {
+    withShim { (base, _) =>
+      val stateDir = Files.createTempDirectory("graft_http_state_exotic").toString
+      new JobState(Some(stateDir)).put(
+        JobState.Record("x`f\"n.t", "verified", 2L, 7L, files = Seq("/d,1/x`f\"n.t.sql")))
+      val body = graft.Json.write(Map("sourceDir" -> "/tmp/s", "targetDir" -> "/tmp/t",
+        "stateDir" -> stateDir))
+      val (_, idBody) = req(base, "POST", "/tasks?name=x", body)
+      val id = graft.Json.read(idBody).get("id").textValue
+      val (c, b) = req(base, "GET", s"/tasks/$id/progress")
+      assert(c === 200, b)
+      val recs = graft.Json.read(b)
+      assert(recs.size === 1, b)
+      assert(recs.get(0).get("key").textValue === "x`f\"n.t", b)
+      assert(recs.get(0).get("files").get(0).textValue === "/d,1/x`f\"n.t.sql", b)
+    }
+  }
+
   test("pause/resume toggle the drain gate file") {
     withShim { (base, spool) =>
       assert(req(base, "GET", "/pause")._2 === """{"paused":false}""")

@@ -544,6 +544,22 @@ class IngestSpec extends SparkSpec {
       === Some(JobState.Record("db.t", "verified", 42L, -1L)))
   }
 
+  test("a re-run over a source dir whose path holds a comma skips the verified table") {
+    val src = Files.createDirectories(
+      Files.createTempDirectory("graft_ingest_comma").resolve("dump,2026")).toString
+    Files.writeString(Paths.get(src, "db.t-schema.sql"),
+      "CREATE TABLE t (id int NOT NULL, v varchar(10), PRIMARY KEY (id));")
+    Files.writeString(Paths.get(src, "db.t.sql"),
+      "INSERT INTO t VALUES (1,'a'),(2,'b'),(3,'c');\n")
+    val out = Files.createTempDirectory("graft_ingest_comma_out").toString
+    val state = Files.createTempDirectory("graft_ingest_comma_state").toString
+    val cfg = Ingest.Config(src, out, stateDir = Some(state))
+    assert(Ingest.run(spark, cfg).head.nRows === 3)
+    val second = Ingest.run(spark, cfg).head
+    assert(second.skipped && second.nRows === 3, second)
+    assert(spark.read.parquet(s"$out/db.t").count() === 3)
+  }
+
   test("a new shard file after a verified run imports incrementally") {
     val src = mkFixture()
     val out = Files.createTempDirectory("graft_ingest_out3").toString
@@ -713,6 +729,28 @@ class IngestSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("overflows tinyint"), e.getMessage)
     assert(e.getMessage.contains("d.nt.id"), e.getMessage)
+  }
+
+  test("a narrow auto-increment column absent from a headered CSV overflows loudly") {
+    val root = Files.createTempDirectory("graft_autoinc_absent_ovf").toString
+    Files.writeString(Paths.get(root, "d.na-schema.sql"),
+      "CREATE TABLE na (id tinyint NOT NULL AUTO_INCREMENT, v int, PRIMARY KEY (id));")
+    val cfg = Ingest.Config(root, Files.createTempDirectory("graft_autoinc_absent_out").toString,
+      csvDialect = graft.sources.CsvDialect(header = true))
+    // 5 rows fit: ids are the prior max (0) + row position
+    Files.writeString(Paths.get(root, "d.na.0001.csv"), (1 to 5).mkString("v\n", "\n", "\n"))
+    val r = Ingest.run(spark, cfg).head
+    assert(r.checksumOk && r.nRows === 5 && r.maxRowId === 5L, r)
+    assert(spark.read.parquet(s"${cfg.targetDir}/d.na").collect()
+      .map(_.getInt(0)).sorted.toSeq === (1 to 5))
+    // 200 rows do not: the same error as a dump's carried NULL fills
+    Files.writeString(Paths.get(root, "d.na.0001.csv"), (1 to 200).mkString("v\n", "\n", "\n"))
+    val e = intercept[IllegalStateException] {
+      Ingest.run(spark, cfg.copy(targetDir =
+        Files.createTempDirectory("graft_autoinc_absent_out2").toString))
+    }
+    assert(e.getMessage.contains("overflows tinyint"), e.getMessage)
+    assert(e.getMessage.contains("d.na.id"), e.getMessage)
   }
 
   test("AUTO_RANDOM column absent from the source synthesizes sharded unique ids") {

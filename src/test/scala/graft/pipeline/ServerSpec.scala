@@ -170,4 +170,14 @@ class ServerSpec extends SparkSpec {
     assert(cfg.filters === Seq("a.*", "!a.junk"))
     assert(cfg.stateDir === Some("/st"))
   }
+
+  test("task JSON decodes escapes: escaped slashes and unicode resolve to the decoded paths") {
+    // PHP's json_encode escapes every slash; the body is standard JSON
+    val cfg = Server.parseTask(
+      "{\"sourceDir\":\"\\/data\\/dump\",\"targetDir\":\"\\/out\\/caf\\u00e9\"," +
+        "\"stateDir\":\"\\/st\\/q\\\"x\"}")
+    assert(cfg.sourceDir === "/data/dump")
+    assert(cfg.targetDir === "/out/café")
+    assert(cfg.stateDir === Some("/st/q\"x"))
+  }
 }
